@@ -15,11 +15,22 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-LEDGER_SCHEMA = (
-    "run_id string, source_name string, table_name string, status string, "
-    "records_fetched long, records_loaded long, records_failed long, "
-    "error_message string, event_time timestamp"
+from ..sources.rest import RecordsSource
+
+LEDGER_SCHEMA = T.StructType(
+    [
+        T.StructField("run_id", T.StringType()),
+        T.StructField("source_name", T.StringType()),
+        T.StructField("table_name", T.StringType()),
+        T.StructField("status", T.StringType()),
+        T.StructField("records_fetched", T.LongType()),
+        T.StructField("records_loaded", T.LongType()),
+        T.StructField("records_failed", T.LongType()),
+        T.StructField("error_message", T.StringType()),
+        T.StructField("event_time", T.TimestampType()),
+    ]
 )
 
 
@@ -27,10 +38,10 @@ class AuditLedger:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
+        self._rows = RecordsSource(spark, LEDGER_SCHEMA)
 
     def _append(self, row: dict) -> None:
-        df = self.spark.createDataFrame([row], LEDGER_SCHEMA)
-        df.write.mode("append").parquet(self.path)
+        self._rows.to_df([row]).write.mode("append").parquet(self.path)
 
     def start_run(self, source_name: str, table_name: str) -> str:
         """PENDING→IN_PROGRESS open (audit_writer.py:21-44's INSERT
@@ -46,7 +57,7 @@ class AuditLedger:
                 records_loaded=None,
                 records_failed=None,
                 error_message=None,
-                event_time=datetime.now(timezone.utc).replace(tzinfo=None),
+                event_time=datetime.now(timezone.utc),
             )
         )
         return run_id
@@ -74,7 +85,7 @@ class AuditLedger:
                 records_loaded=loaded,
                 records_failed=failed,
                 error_message=error,
-                event_time=datetime.now(timezone.utc).replace(tzinfo=None),
+                event_time=datetime.now(timezone.utc),
             )
         )
 

@@ -7,9 +7,20 @@ JVM-side Column expressions — no Python UDFs in the hot path.
 
 Determinism note (oracle parity at any scale): floating-point SUM/AVG
 is summation-order-dependent, so distributed results differ run-to-run
-and engine-to-engine. Money aggregates therefore cast every element to
-DECIMAL before summing (exact, order-independent); averages divide the
-exact decimal sum by the count in one IEEE double division.
+and engine-to-engine. Money aggregates are therefore exact and
+order-independent, in one of two forms with identical results:
+
+- long lattice (``money_lattice_sum`` and its ``_dsum``/``_avg``
+  wrappers, built on ``lattice_2dp`` + ``lattice_split_sum``): each
+  2-dp value becomes its LONG cent point, summed in two primitive LONG
+  buffers and recombined exactly into the decimal type a decimal sum
+  would return. The fact-grain operator sums use it: no per-row
+  double→decimal cast, no BigDecimal agg buffer.
+- decimal cast (``dec_sum``, ``dsum``, ``exact_avg``): every element
+  cast to DECIMAL before summing. Kept for small grains (gold marts)
+  and for columns off the cent lattice.
+
+Averages divide the exact sum by the count in one IEEE double division.
 """
 
 from __future__ import annotations

@@ -19,6 +19,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sources.rest import RecordsSource
+
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
@@ -59,9 +61,9 @@ def table_stats(spark: SparkSession, path: str) -> DataFrame:
         (c, int(wide["__rows"]), int(wide[f"nulls__{c}"]), int(wide[f"ndv__{c}"]))
         for c in df.columns
     ]
-    return spark.createDataFrame(
-        rows, "column string, row_count long, null_count long, approx_ndv long"
-    )
+    return RecordsSource(
+        spark, "column string, row_count long, null_count long, approx_ndv long"
+    ).to_df(rows)
 
 
 def clean_staging(base_dir: str) -> list[str]:

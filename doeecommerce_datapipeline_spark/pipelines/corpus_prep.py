@@ -36,6 +36,7 @@ from ..operators.corpus import (
     pack_by_budget,
     quality_rules,
 )
+from ..sources.rest import RecordsSource
 
 
 def prepare_corpus(
@@ -147,7 +148,7 @@ def prepare_corpus(
     # (split, source) — each shard packs independently
     packed = pack_by_budget(split, "doc_id", "text", ["split", "source"])
 
-    funnel = spark.createDataFrame(
+    funnel = RecordsSource(spark, "stage string, n_docs long").to_df(
         [
             ("0_input", corpus.count()),
             ("1_quality", quality.count()),
@@ -157,8 +158,7 @@ def prepare_corpus(
             ("3b_pii_scrubbed", scrubbed.count()),
             ("4_split", split.count()),
             ("5_packed", packed.count()),
-        ],
-        "stage string, n_docs long",
+        ]
     )
     return {
         "quality": quality,

@@ -47,6 +47,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.rest import RecordsSource
+
 #: predicate operators usable in ``where=[(col, op, literal), ...]``
 _OPS = ("==", "<", "<=", ">", ">=")
 
@@ -223,9 +225,12 @@ class ManifestTable:
 
     def _probe_positions(self, col: str, value) -> list[int] | None:
         """Bit positions for an equality literal, evaluated through the
-        same Spark expression that built the file blooms. Returns None
-        (no pruning) when the column's type can't be recovered."""
-        from pyspark.sql.types import StructField, StructType
+        same Spark expression that built the file blooms, over the same
+        ``F.lit`` the exact filter in ``read`` compares against (so a
+        naive datetime names the same instant on both sides). Returns
+        None (no pruning) when the column's type can't be recovered."""
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import StructType
 
         v = self.current_version()
         schema_json = self._read_manifest(v).get("schema") if v else None
@@ -235,15 +240,11 @@ class ManifestTable:
         fields = [f for f in schema.fields if f.name == col]
         if not fields:
             return None
-        probe_df = self.spark.createDataFrame(
-            [(value,)], StructType([StructField(col, fields[0].dataType)])
-        )
-        from pyspark.sql import functions as F
-
+        probe = F.lit(value).cast(fields[0].dataType)
         return list(
-            probe_df.select(
-                self._hash_positions(F.col(col)).alias("p")
-            ).head()["p"]
+            self.spark.range(1)
+            .select(self._hash_positions(probe).alias("p"))
+            .head()["p"]
         )
 
     @staticmethod
@@ -398,9 +399,9 @@ class ManifestTable:
                 )
             from pyspark.sql.types import StructType
 
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(json.loads(schema_json))
-            )
+            return RecordsSource(
+                self.spark, StructType.fromJson(json.loads(schema_json))
+            ).to_df([])
         # pin the COMMITTED schema: a bare multi-file read takes its
         # schema from whichever file lists first, so an additive column
         # could silently vanish behind old files. With the schema
@@ -708,11 +709,11 @@ class ManifestTable:
                     json.dumps(extra, sort_keys=True) if extra else None,
                 )
             )
-        return self.spark.createDataFrame(
-            rows,
+        return RecordsSource(
+            self.spark,
             "version long, committed_at timestamp, n_files long, "
             "base long, meta string",
-        )
+        ).to_df(rows)
 
     def version_as_of(self, ts: float) -> int:
         """Highest version committed at or before unix time ``ts`` —

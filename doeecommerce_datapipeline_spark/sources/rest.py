@@ -4,8 +4,10 @@ The reference fetches three public REST APIs with retry/backoff,
 pagination, and parallel fan-out (ingestion_util.py:179-318,
 fakestore_ingestor.py:273-319). Spark has no native REST source, so:
 
-- `RecordsSource`: list-of-dicts → DataFrame with an explicit schema —
-  the seam every test and file-based run goes through.
+- `RecordsSource`: driver-held rows → DataFrame with an explicit
+  schema, as an Arrow local relation — the seam every test, file-based
+  run and driver-built frame (ledger, check results, reports) goes
+  through.
 - `RestSource`: driver-side HTTP with retry/backoff + offset
   pagination (gated behind an import-try on `requests`).
 - `distributed_fetch`: the 100 TB path — page ids distributed via
@@ -19,13 +21,18 @@ with (base_generator.py:163-164, dummyjson_ingestor.py:549-552).
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import json
 import time
 from collections.abc import Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _make_type_verifier
 
 from ..pyfiles import ensure_shipped
 
@@ -58,24 +65,104 @@ def with_lineage(
     return df
 
 
+# wide enough for any decimal(38, s); the default context keeps 28 digits
+_DECIMAL_CTX = decimal.Context(prec=38)
+
+
+def _row_values(obj, names: list[str]) -> tuple:
+    """A struct value as a tuple in field order, read the way classic
+    ``createDataFrame`` reads rows: dicts by name (absent → None),
+    tuples and lists by position."""
+    if isinstance(obj, dict):
+        return tuple(obj.get(n) for n in names)
+    return tuple(obj)
+
+
+def _arrow_converter(dt: T.DataType):
+    """Per-value conversion from what classic ``createDataFrame``
+    accepts for ``dt`` to what ``pyarrow.array`` stores with the same
+    meaning; None when values pass through unchanged."""
+    conv = None
+    if isinstance(dt, T.DecimalType):
+        # classic rounds to the field scale (JVM HALF_UP); Arrow raises
+        quantum = decimal.Decimal(1).scaleb(-dt.scale)
+        conv = lambda v: v.quantize(  # noqa: E731
+            quantum, rounding=decimal.ROUND_HALF_UP, context=_DECIMAL_CTX
+        )
+    elif isinstance(dt, T.TimestampType):
+        # an aware value is its UTC instant; Arrow would keep the wall time
+        conv = lambda v: (  # noqa: E731
+            v if v.tzinfo is None
+            else v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+        )
+    elif isinstance(dt, T.StructType):
+        names = dt.names
+        fields = [_arrow_converter(f.dataType) for f in dt.fields]
+        conv = lambda v: {  # noqa: E731
+            n: x if c is None or x is None else c(x)
+            for n, c, x in zip(names, fields, _row_values(v, names))
+        }
+    elif isinstance(dt, T.ArrayType):
+        elem = _arrow_converter(dt.elementType)
+        if elem is not None:
+            conv = lambda v: [None if x is None else elem(x) for x in v]  # noqa: E731
+    return conv
+
+
 class RecordsSource:
-    """S1-equivalent seam: raw JSON records → typed DataFrame.
+    """The seam for every DataFrame built from driver-held rows: raw
+    JSON records, ledger appends, check results, small reports.
 
-    Null-stripping (P4) is unnecessary — absent keys become typed
-    nulls under the explicit schema."""
+    Rows are dicts keyed by field name (absent keys become typed nulls,
+    so null-stripping, P4, is unnecessary) or tuples in schema order.
+    They reach Spark as one ``pyarrow.Table``, planned as a
+    ``LocalTableScan``: no pickled PythonRDD scan, so no Python worker
+    runs for each write or action on the frame.
 
-    def __init__(self, spark: SparkSession, schema: T.StructType):
+    Values mean what they mean to classic ``createDataFrame``:
+
+    - every row first passes classic's own type verifier, so ``None``
+      in a non-nullable field or a wrong-typed value raises here;
+    - a ``Decimal`` is rounded to its field's scale, ``ROUND_HALF_UP``;
+    - an offset-aware datetime is stored as its UTC instant;
+    - struct and array values are converted recursively.
+
+    One deliberate difference: a naive datetime is a UTC wall time,
+    so it reads back unchanged in the package's UTC session whatever
+    the host's ``TZ``. Classic read it in the Python process's local
+    zone (``time.mktime``) and shifted it by the host's UTC offset."""
+
+    def __init__(self, spark: SparkSession, schema: T.StructType | str):
         self.spark = spark
-        self.schema = schema
+        self.schema = (
+            T.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+        )
+        self._verify = _make_type_verifier(self.schema)
+        self._arrow_schema = to_arrow_schema(self.schema)
+        self._converters = [_arrow_converter(f.dataType) for f in self.schema.fields]
 
-    def to_df(self, records: Iterable[dict]) -> DataFrame:
+    def to_df(self, records: Iterable) -> DataFrame:
         """All schema fields, lineage included — records that carry
         stamps (replays, fixtures) keep them; absent keys become typed
         nulls for with_lineage to fill."""
-        return self.spark.createDataFrame(
-            (tuple(r.get(f.name) for f in self.schema.fields) for r in records),
-            self.schema,
+        names = self.schema.names
+        rows = []
+        for r in records:
+            self._verify(r)
+            rows.append(_row_values(r, names))
+        columns = zip(*rows) if rows else [()] * len(names)
+        table = pa.Table.from_arrays(
+            [
+                pa.array(
+                    col if conv is None
+                    else [None if v is None else conv(v) for v in col],
+                    type=field.type,
+                )
+                for col, conv, field in zip(columns, self._converters, self._arrow_schema)
+            ],
+            schema=self._arrow_schema,
         )
+        return self.spark.createDataFrame(table, self.schema)
 
 
 class RestSource:
@@ -184,8 +271,6 @@ def coerce_json_records(records: list[dict], schema: T.StructType) -> list[dict]
     float) and which are timestamps — recursively coerced through
     nested structs and arrays. The standard seam step between any
     HTTP fetch and ``RecordsSource.to_df``."""
-    import datetime
-    from decimal import Decimal
 
     def coerce(v, dt):
         if v is None:
@@ -193,7 +278,7 @@ def coerce_json_records(records: list[dict], schema: T.StructType) -> list[dict]
         if isinstance(dt, T.DecimalType) and isinstance(v, (int, float, str)):
             # repr(float) is the shortest round-trip — exact for the
             # 2-decimal money values APIs serve
-            return Decimal(str(v))
+            return decimal.Decimal(str(v))
         if isinstance(dt, T.TimestampType) and isinstance(v, str):
             return datetime.datetime.fromisoformat(v)
         if isinstance(dt, T.DateType) and isinstance(v, str):

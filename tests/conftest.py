@@ -1,3 +1,6 @@
+import os
+import time
+
 import pytest
 
 from doeecommerce_datapipeline_spark.session import get_spark
@@ -14,3 +17,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def host_tz():
+    """Set the Python process's local zone for one test, then restore it."""
+    saved = os.environ.get("TZ")
+
+    def set_tz(name):
+        os.environ["TZ"] = name
+        time.tzset()
+
+    yield set_tz
+    if saved is None:
+        os.environ.pop("TZ", None)
+    else:
+        os.environ["TZ"] = saved
+    time.tzset()

@@ -267,6 +267,29 @@ def test_bloom_pruning_on_string_keys(spark, tmp_path):
     assert got == {3}
 
 
+def test_bloom_pruning_on_timestamp_keys_off_utc_host(spark, tmp_path, host_tz):
+    """A naive datetime literal must hash to the instant the exact
+    filter compares against, whatever the host's TZ — otherwise the
+    Bloom probe prunes the one file that holds the matching row."""
+    import datetime as dt
+
+    host_tz("America/New_York")
+    mt = ManifestTable(spark, str(tmp_path / "tt"), bloom_cols=["ts"])
+    hours = spark.range(48).select(
+        "id",
+        F.timestamp_seconds(F.lit(1705276800) + F.col("id") * 3600).alias("ts"),
+    )  # 2024-01-15T00:00Z + id hours
+    for r in range(3):
+        mt.append(hours.where(F.col("id") % 3 == r).coalesce(1))
+    naive = dt.datetime(2024, 1, 15, 12, 0)
+    expected = {
+        r["id"] for r in mt.read().where(F.col("ts") == F.lit(naive)).collect()
+    }
+    assert expected  # the literal lands on a stored instant
+    got = {r["id"] for r in mt.read(where=[("ts", "==", naive)]).collect()}
+    assert got == expected
+
+
 def test_tables_without_bloom_cols_unchanged(spark, mt):
     mt.append(_df(spark, [(1, "a")]).coalesce(1))
     man = mt._read_manifest(mt.current_version())
