@@ -10,6 +10,7 @@ the silver layer uses (one mechanism, reused).
 
 from __future__ import annotations
 
+import threading
 import uuid
 from datetime import datetime, timezone
 
@@ -39,9 +40,15 @@ class AuditLedger:
         self.spark = spark
         self.path = path
         self._rows = RecordsSource(spark, LEDGER_SCHEMA)
+        self._lock = threading.Lock()
 
     def _append(self, row: dict) -> None:
-        self._rows.to_df([row]).write.mode("append").parquet(self.path)
+        # one append at a time: concurrent appends to one path share its
+        # _temporary/ staging dir, and the first job to commit deletes
+        # the other's staged files
+        df = self._rows.to_df([row])
+        with self._lock:
+            df.write.mode("append").parquet(self.path)
 
     def start_run(self, source_name: str, table_name: str) -> str:
         """PENDING→IN_PROGRESS open (audit_writer.py:21-44's INSERT

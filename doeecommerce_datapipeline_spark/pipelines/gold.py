@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalars import dsum, exact_avg
 from ..sinks.parquet_sinks import overwrite_date_key
+from .fanout import each_table
 
 
 def daily_revenue_view(carts: DataFrame) -> DataFrame:
@@ -161,19 +162,17 @@ def publish_all(
     kpi_date,
 ) -> None:
     """publish_all_kpis (publish_gold.py:91-97): three marts, each
-    upserted on its date key — idempotent daily recompute."""
-    overwrite_date_key(
-        spark, finance_mart(silver["carts"], kpi_date), f"{gold_base}/finance_mart", "date"
-    )
-    overwrite_date_key(
+    upserted on its date key — idempotent daily recompute. The marts
+    are independent and publish concurrently."""
+    marts = {
+        "finance_mart": finance_mart(silver["carts"], kpi_date),
+        "sales_mart": sales_mart(
+            silver["carts"], silver["products"], silver["users"], kpi_date
+        ),
+        "operations_mart": operations_mart(silver["carts"], silver["orders"], kpi_date),
+    }
+    each_table(
         spark,
-        sales_mart(silver["carts"], silver["products"], silver["users"], kpi_date),
-        f"{gold_base}/sales_mart",
-        "date",
-    )
-    overwrite_date_key(
-        spark,
-        operations_mart(silver["carts"], silver["orders"], kpi_date),
-        f"{gold_base}/operations_mart",
-        "date",
+        lambda m: overwrite_date_key(spark, marts[m], f"{gold_base}/{m}", "date"),
+        marts,
     )

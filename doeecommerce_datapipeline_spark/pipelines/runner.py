@@ -9,14 +9,25 @@ quality → gold, per-layer selectable, audit-ledger wrapped.
 Stage boundaries that were process boundaries in the reference
 (driver↔Postgres) are shuffle boundaries inside one Spark session
 here; the only external boundary left is ingestion itself.
+
+Layer concurrency: layers run one after another, but inside a layer
+the tables are independent (the reference's DAG runs its sources as
+parallel tasks), so each layer runs its per-table work on one thread
+per table (``fanout.each_table``): ingestion's ledger-open → records
+→ bronze → ledger-close chain, the five silver upserts, the four
+check suites and the three gold marts. A failing table does not stop
+the others; its exception is re-raised once the layer has finished.
+Every read here passes its known schema, so no read starts a
+schema-inference job.
 """
 
 from __future__ import annotations
 
 import argparse
 from datetime import date
+from functools import reduce
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from .. import fixtures
 from ..audit.ledger import AuditLedger
@@ -28,11 +39,21 @@ from ..quality.validators import (
     not_null,
     valid_email,
 )
-from ..schemas import CARTS_RAW, ORDERS_RAW, PRODUCTS_RAW, USERS_RAW
+from ..schemas import (
+    CARTS_RAW,
+    ORDERS_RAW,
+    PRODUCTS_RAW,
+    SILVER_CARTS,
+    SILVER_ORDERS,
+    SILVER_PRODUCTS,
+    SILVER_USERS,
+    USERS_RAW,
+)
 from ..session import get_spark
 from ..sinks.parquet_sinks import upsert
 from ..sources.rest import RecordsSource
 from .bronze import BronzeLoad, load_to_bronze
+from .fanout import each_table
 from .gold import publish_all
 from .silver import TRANSFORMS
 
@@ -41,6 +62,13 @@ RAW_SCHEMAS = {
     "carts": CARTS_RAW,
     "users": USERS_RAW,
     "orders": ORDERS_RAW,
+}
+
+SILVER_SCHEMAS = {
+    "products": SILVER_PRODUCTS,
+    "carts": SILVER_CARTS,
+    "users": SILVER_USERS,
+    "orders": SILVER_ORDERS,
 }
 
 def bronze_cfg() -> dict[str, BronzeLoad]:
@@ -96,10 +124,16 @@ def run_ingestion(
     """Ingestion through the RecordsSource seam. By default the demo
     fixture records; pass ``records_fn`` ({table: () -> list[dict]})
     to ingest from anywhere — tests/test_rest_live.py plugs a LIVE
-    paginated HTTP fetch in here and runs the whole medallion."""
+    paginated HTTP fetch in here and runs the whole medallion.
+
+    The tables ingest concurrently. If one table's fetch or load
+    raises, its ledger run closes ``FAILED`` while the other tables
+    still load and close; the first failure, in ``tables`` order, is
+    re-raised once every table has finished."""
     cfg = bronze_cfg()
     fns = records_fn or FIXTURE_FN
-    for t in tables:
+
+    def ingest(t: str) -> None:
         run_id = ledger.start_run(source_name, f"{t}_raw")
         try:
             records = fns[t]()
@@ -122,41 +156,46 @@ def run_ingestion(
                            source_name=source_name, table_name=f"{t}_raw")
             raise
 
+    each_table(spark, ingest, tables)
+
+
+def _silver(spark: SparkSession, base: str, table: str) -> DataFrame:
+    return spark.read.schema(SILVER_SCHEMAS[table]).parquet(f"{base}/silver/{table}")
+
 
 def run_transformation(spark: SparkSession, base: str, tables: list[str]) -> None:
     from .silver import transform_cart_items
 
+    merges = []
     for t in tables:
         fn, pk = TRANSFORMS[t]
-        raw = spark.read.parquet(f"{base}/bronze/{t}_raw")
-        upsert(spark, fn(raw), f"{base}/silver/{t}", [pk])
+        raw = spark.read.schema(RAW_SCHEMAS[t]).parquet(f"{base}/bronze/{t}_raw")
+        merges.append((fn(raw), f"{base}/silver/{t}", [pk]))
         if t == "carts":
             # line-item fact table (the reference's TEXT column can't);
             # keyed on cart_id so a re-ingested cart replaces its lines
-            upsert(
-                spark,
-                transform_cart_items(raw),
-                f"{base}/silver/cart_items",
-                ["cart_id"],
+            merges.append(
+                (transform_cart_items(raw), f"{base}/silver/cart_items", ["cart_id"])
             )
+    each_table(spark, lambda m: upsert(spark, *m), merges)
 
 
 def run_quality(spark: SparkSession, base: str) -> bool:
-    ok = True
-    for cfg in QUALITY_CFG:
-        df = spark.read.parquet(f"{base}/silver/{cfg.table}")
-        results = run_checks(spark, df, cfg)
-        results.write.mode("append").parquet(f"{base}/audit/quality_results")
-        if not all_passed(results):
-            ok = False
-    return ok
+    """Every table's check suite at once; all their result rows land
+    in one ``quality_results`` append."""
+    results = each_table(
+        spark,
+        lambda cfg: run_checks(spark, _silver(spark, base, cfg.table), cfg),
+        QUALITY_CFG,
+    )
+    reduce(DataFrame.union, results).coalesce(1).write.mode("append").parquet(
+        f"{base}/audit/quality_results"
+    )
+    return all(all_passed(r) for r in results)
 
 
 def run_gold(spark: SparkSession, base: str, kpi_date) -> None:
-    silver = {
-        t: spark.read.parquet(f"{base}/silver/{t}")
-        for t in ("products", "carts", "users", "orders")
-    }
+    silver = {t: _silver(spark, base, t) for t in SILVER_SCHEMAS}
     publish_all(spark, silver, f"{base}/gold", kpi_date)
 
 

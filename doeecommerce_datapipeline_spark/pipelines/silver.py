@@ -2,7 +2,9 @@
 (database/layers/silver/transform_silver.py:24-122), rebuilt as lazy
 DataFrame graphs: latest-wins dedup (W1/W2) via ranking window, typed
 casts (P8), derived columns (F2 full_name, F11 guarded discount pct),
-final projection (P2), then keyed upsert (S8).
+final projection (P2), then keyed upsert (S8). ``latest_wins`` leaves
+one row per dedup key and every projection keeps that key, so the
+projected rows are already distinct: no ``distinct()`` exchange.
 
 Where the reference is buggy we build to its evident intent
 (SURVEY.md §7.4(7)): orders' total_amount passes through even though
@@ -39,7 +41,7 @@ def transform_products(raw: DataFrame, now: Column | None = None) -> DataFrame:
         F.col("category").cast("string").alias("category"),
         (F.col("price").isNotNull() & (F.col("price") >= 0)).alias("is_available"),
         now.alias("last_updated"),
-    ).distinct()
+    )
 
 
 def transform_carts(raw: DataFrame, now: Column | None = None) -> DataFrame:
@@ -54,7 +56,7 @@ def transform_carts(raw: DataFrame, now: Column | None = None) -> DataFrame:
         .cast("decimal(5,2)")
         .alias("discount_percentage"),
         now.alias("last_updated"),
-    ).distinct()
+    )
 
 
 def transform_users(raw: DataFrame, now: Column | None = None) -> DataFrame:
@@ -72,7 +74,7 @@ def transform_users(raw: DataFrame, now: Column | None = None) -> DataFrame:
         F.col("email"),
         full_name("firstname", "lastname").alias("full_name"),
         now.alias("last_updated"),
-    ).distinct()
+    )
 
 
 def transform_orders(raw: DataFrame, now: Column | None = None) -> DataFrame:
@@ -86,7 +88,7 @@ def transform_orders(raw: DataFrame, now: Column | None = None) -> DataFrame:
         F.col("total_amount").cast("decimal(15,2)").alias("total_amount"),
         F.col("total_amount").cast("decimal(15,2)").alias("final_amount"),
         now.alias("last_updated"),
-    ).distinct()
+    )
 
 
 def transform_cart_items(raw: DataFrame, now: Column | None = None) -> DataFrame:

@@ -40,36 +40,51 @@ class TableChecks:
 def run_checks(
     spark: SparkSession, df: DataFrame, cfg: TableChecks
 ) -> DataFrame:
-    """Run every configured check in 1 + (number of unique columns)
-    passes: one multi-aggregate for all null checks, then one grouped
-    count per unique column, the pk included (three passes for users:
-    nulls, user_id, email). Returns rows (table, check, column,
-    violations, passed) as a local relation: the verdict reads it on
-    the driver without a job, and its append starts no Python worker.
+    """Run every configured check in one action. One grouped pass
+    over grouping sets, one set per key column (the pk and each
+    unique column, each keeping its own type), counts the rows of
+    every key value; its null counts cover every null-checked column.
+    A second aggregate over those groups yields the null counts and,
+    per key column, the number of non-null values that occur more
+    than once. Returns rows (table, check, column, violations,
+    passed) as a local relation: the verdict reads it on the driver
+    without a job, and its append starts no Python worker.
     """
-    rows: list[tuple] = []
-
     null_cols = [cfg.pk, *cfg.not_null_cols]
-    agg = df.agg(
+    dup_cols = [cfg.pk, *cfg.unique_cols]
+    keys = list(dict.fromkeys(dup_cols))
+
+    # inside an aggregate a grouping column is the input column; in
+    # the output each set's other key columns are null, so a non-null
+    # key marks a value group of that key's own set
+    groups = df.groupingSets([[k] for k in keys], *keys).agg(
+        F.grouping(keys[0]).alias("_in_other_set"),
+        F.count(F.lit(1)).alias("_n"),
         *[
-            F.count(F.when(F.col(c).isNull(), 1)).alias(c)
-            for c in null_cols
-        ]
+            F.count(F.when(F.col(c).isNull(), 1)).alias(f"_null{i}")
+            for i, c in enumerate(null_cols)
+        ],
+    )
+    in_first_set = F.col("_in_other_set") == 0
+    counts = groups.agg(
+        *[
+            F.coalesce(F.sum(F.when(in_first_set, F.col(f"_null{i}"))), F.lit(0))
+            for i in range(len(null_cols))
+        ],
+        *[
+            F.count(F.when(F.col(k).isNotNull() & (F.col("_n") > 1), 1))
+            for k in keys
+        ],
     ).collect()[0]
-    for c in null_cols:
-        n = agg[c]
-        rows.append((cfg.table, "null_check", c, int(n), n == 0))
+    n_dup = dict(zip(keys, counts[len(null_cols):]))
 
-    for c in [cfg.pk, *cfg.unique_cols]:
-        dups = (
-            df.where(F.col(c).isNotNull())
-            .groupBy(c)
-            .count()
-            .where(F.col("count") > 1)
-            .count()
-        )
-        rows.append((cfg.table, "duplicate_check", c, int(dups), dups == 0))
-
+    rows = [
+        (cfg.table, "null_check", c, int(n), n == 0)
+        for c, n in zip(null_cols, counts)
+    ] + [
+        (cfg.table, "duplicate_check", c, int(n_dup[c]), n_dup[c] == 0)
+        for c in dup_cols
+    ]
     return RecordsSource(spark, RESULTS_SCHEMA).to_df(rows)
 
 

@@ -57,12 +57,17 @@ def upsert(spark: SparkSession, updates: DataFrame, path: str, keys: list[str]) 
     old rows whose key collides are dropped (left_anti), then the new
     batch is unioned in — exactly the reference's delete-matching-keys
     + append, in one shuffled job. With Delta this is MERGE INTO.
+
+    The stored table is read with the batch's schema, so reading it
+    starts no schema-inference job; a table is always upserted with
+    batches of one schema. A left-anti join never multiplies the old
+    rows, so the batch keys need no ``distinct()``.
     """
     if not os.path.exists(path):
         updates.write.mode("overwrite").parquet(path)
         return
-    old = spark.read.parquet(path)
-    kept = old.join(updates.select(*keys).distinct(), keys, "left_anti")
+    old = spark.read.schema(updates.schema).parquet(path)
+    kept = old.join(updates.select(*keys), keys, "left_anti")
     _swap_write(spark, kept.unionByName(updates), path)
 
 
