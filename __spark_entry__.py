@@ -13,7 +13,10 @@ carries a unique tiebreaker. Counts are BIGINT on both sides.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import os
+import re
+from collections.abc import Callable, Container, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -54,259 +57,19 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Registry order = driver check order; the driver's CORRECTNESS gate
-    runs the FIRST 50 entries at sf0.01.
+    """The registry, in the order the driver checks it.
 
-    Rotation policy (round 3): the 17 entries with no driver record yet
-    (the post-window round-2 newcomers plus the two never-windowed
-    rows-only sketches) take the head of the window; next come the four
-    highest-divergence-risk round-1/2 greens (decimal surfaces, ordered
-    collects, float thresholds), then the entries whose code changed
-    this round, then round-1-only-record re-checks. Round-2-green
-    unchanged entries rotate to the tail — each already holds a driver
-    record from CORRECTNESS_r02.
-
-    Record ledger (round each entry's latest driver record came from):
-    r1 = CORRECTNESS_r01, r2 = CORRECTNESS_r02, none = no record yet.
-    Inline comments below mark the "none" and changed entries; the tail
-    section headers carry the round tag for the rest. Sections (c2) and
-    (c3) hold the operators BUILT in round 3 (never driver-checked);
-    all were locally hash-verified at sf0.01 under a vanilla
-    foreign-cwd session before round end, along with the full
-    registry. Round-4 rotation: post-window round-3 sections —
-    (c5) (part_match_blocking, collapse_adjacent_repeats,
-    quality_classifier_scores, peak_concurrent_sessions, bm25_search,
-    dow_baseline_anomalies, value_drift_ks)
-    and the (c4)-tail entries outside the window (ewma onward through
-    session_window_agg) — take the head;
-    then any window survivor that went red; then the section-(d)
-    r1-recheck tail (from pricing_summary on), which has cumulative r1
-    records and rotates through remaining slots.
-
-    Local insurance for the unchecked tail: ALL registry entries are
-    hash-verified against the DuckDB oracle at sf0.01 under a vanilla
-    foreign-cwd SparkSession before each round ends, and
-    tests/test_parity.py re-verifies every oracle pair at sf0.001 in CI
-    — since round 4 with a TYPED comparator (tests/oracle.py) that
-    rejects the HUGEINT/BIGINT drift class the r3 driver caught.
-
-    ROUND-4 ORDER: the declaration order below is the historical
-    (r3) order kept for the ledger comments; the driver-visible order
-    is set by _R4_WINDOW at the end of this function — the r4 window
-    head is (1) value_mad_outliers (r3's one red row, oracle CAST
-    fixed), (2) the 16 record-less round-3 entries, (3) the three
-    queries whose output types were aligned by the new typed gate
-    (customer_deciles, tfidf_topk, corpus_filter), (4) operators
-    built in round 4, (5) r1-record re-checks filling the rest.
-    Everything else keeps its cumulative record and rotates behind.
-
-    RECORD-LESS LEDGER AFTER r4 (the r5+ rotation queue, in
-    declaration order — the r5 window takes its head, see
-    _R5_WINDOW; round 6 continues from ship_sla_pchart):
-    audio_pcm_metrics, audio_window_report, image_ppm_metrics,
-    linear_touch_attribution, brand_repeat_purchase,
-    weekday_seasonality_index, part_size_price_contingency,
-    revenue_gini_by_nation, promo_lift_slope, zipf_fit_by_source,
-    token_entropy_by_source, ewma_recursive_daily,
-    cohort_retention_matrix, supplier_ontime_wilson,
-    leadtime_weighted_median, label_centroid_cosine,
-    hll_distinct_users, value_drift_mwu, kaplan_meier_churn,
-    stl_daily_revenue, holt_linear_daily, ab_conversion_ztest,
-    lorenz_curve_deciles, kmeans_lattice_clusters,
-    spearman_rank_corr, order_backlog_sweep, view_purchase_xcorr,
-    rrf_fusion_search, welch_value_ttest, event_trigram_paths,
-    rolling_median_7d, embedding_dim_stats, jw_blocked_match,
-    forecast_backtest_mase, chi2_independence_test,
-    doclen_percentile_by_source, user_event_entropy,
-    bootstrap_mean_ci, inverted_index_postings, target_encode_loo,
-    twap_user_day, window_funnel_depth, ols_two_factor,
-    event_pmi_pairs, langid_confusion, dow_hour_activity,
-    sq8_quantization_error, vocab_coverage_curve, event_fano_factor,
-    ship_sla_pchart, revenue_feature_matrix, ar_aging_buckets,
-    price_power_means, item_item_cosine, value_psi_drift,
-    conformal_forecast_band, isotonic_calibration (rows-only),
-    revenue_bridge_monthly, dau_wau_stickiness,
-    supplier_hhi_by_nation, priority_mix_shift,
-    eb_shrunk_user_conversion, ppl_filter_sweep, mix_epochs_plan,
-    promo_did_estimate, retrieval_ndcg_eval, dedup_rate_by_source,
-    order_value_ecdf, readability_scores, top_movers_monthly,
-    copurchase_core_collapse, markov_removal_attribution,
-    cuped_adjusted_ab, holt_winters_weekly, inventory_ss_policy,
-    dsir_importance_weights, corpus_health_by_source,
-    kneser_ney_bigrams, shapley_attribution,
-    hits_part_authorities, bitmap_filter_revenue,
-    k_anonymity_classes, contrastive_negatives,
-    winnowing_fingerprints, abc_xyz_inventory,
-    time_decay_attribution, query_likelihood_search,
-    huber_trend_by_type, adamic_adar_parts, markov_entropy_rate,
-    haar_energy_daily, theil_inequality_by_nation,
-    ngram_novelty_by_source, loso_source_impact,
-    label_propagation_communities, char_entropy_flags,
-    rage_burst_users, heaps_law_fit, triplet_violation_rate,
-    brand_diversity_deciles, click_conversion_by_hour,
-    community_modularity, circadian_concentration,
-    sprt_daily_monitor, image_downsample_metrics, dp_noisy_counts,
-    asof_next_purchase, inventory_order_policies,
-    trade_flow_matrix, best_of_n_selection,
-    burrows_delta_sources, similar_payment_screen,
-    split_repair_assignments, business_days_latency,
-    budget_allocation_plan, source_js_divergence,
-    textrank_keywords, part_skyline, runs_test_revenue,
-    ljung_box_revenue, kendall_tau_daily,
-    sorted_neighborhood_pairs, coverage_greedy_docs,
-    hurst_rs_daily, median_polish_dow_hour, anova_value_by_type,
-    adf_daily_revenue, cf_holdout_hitrate, pairwise_welch_fdr,
-    granger_count_to_revenue (kendall_tau_daily was REDEFINED in r4
-    post-freeze onto count-vs-revenue within orders — the original
-    orders⋈events daily join was vacuous, disjoint calendars; it
-    sits outside the r4 window so its first driver record is the
-    meaningful form), copurchase_clustering, term_burstiness,
-    simpson_slope_check, bm25_prf_search, value_emd_drift,
-    lsh_recall_eval (rows-only), stl_residual_anomalies,
-    value_qte_deciles, ann_recall_eval (rows-only),
-    doc_mahalanobis_outliers, price_indices_monthly,
-    copurchase_assortativity, cem_promo_att, collocations_g2,
-    revenue_shift_share, durbin_watson_trend,
-    yule_k_by_source, cluster_source_nmi, event_hour_mi,
-    embedding_intrinsic_dim, hopkins_statistic,
-    catalog_size_estimates, promo_return_odds,
-    percentile_sketch_error (rows-only), churn_logrank_test,
-    filter_mcnemar_test, distance_correlation_daily —
-    all locally hash-verified
-    at sf0.01 under a vanilla foreign-cwd session when built AND
-    re-swept at round end (the full-registry sweep: every oracle pair
-    compared at sf0.01 from /tmp with a bare SparkSession — 331
-    entries, 0 failures at round-4 close)
-    (part_size_price_contingency's price edges moved to 910/940 in
-    r4 — the 1000/1500 edges left one bucket, a vacuous all-zero χ²
-    grid; it sits in the r4 WINDOW so the fixed form is
-    driver-checked this round); plus
-    numeric_corr_matrix (reimplemented on the int64 lattice in r4 —
-    its oracle changed with it), remove_duplicated_spans and
-    token_entropy_by_source (gram/tf explode gained a localCheckpoint
-    barrier), and quality_classifier_scores (maxIter 30 -> 15); then
-    any r4-window red rows; then the remaining section-(d) r1-recheck
-    tail (active_users_trailing_7d onward) filling the rest.
-
-    ROUND-5 EXECUTED (registry growth FROZEN at 331 entries per the
-    r4 verdict — the round spends its window on verification depth):
-    _R5_WINDOW = (1) pca_embeddings at the head (r4's one red row;
-    the face now unpacks pc1..pc8 scalars — the driver canonicalizer
-    crashes on raw array columns, and
-    tests/test_parity.py::test_rows_only_driver_hashable now guards
-    the whole rows-only family); (2) approx_aggregates and
-    percentile_sketch_error, both TIGHTENED from rows-only to
-    oracle-paired this round (exact halves + deterministic
-    sketch-contract booleans; raw estimates moved to the internal
-    *_full/*_report faces their bounds-units check) — 16 → 13
-    rows-only counting sketch_rollup_daily_users, tightened the same
-    way late in the round (outside the window; its oracle-pair
-    driver record lands in r6); (3) pairwise_welch_fdr and
-    adf_daily_revenue, whose
-    operator+oracle changed this round (ADVICE fixes: BH denominator
-    derived from the actual pair count; null ADF statistic no longer
-    asserts stationarity); (4) the first 45 record-less entries in
-    declaration order (audio_pcm_metrics … event_fano_factor).
-    After this window the record-less queue = ship_sla_pchart
-    onward: 105 entries (down from 153), ~2 more windows to drain.
-
-    ROUND-6 EXECUTED (registry 331 → 332: the one verdict-mandated
-    addition, bloom_filter_revenue; rows-only 13 → 11): _R6_WINDOW =
-    (1) sketch_rollup_daily_users (tightened post-window in r5; first
-    oracle-paired record); (2) fact_deciles_scalable and
-    isotonic_calibration, MOVED from rows-only to oracle-paired this
-    round per the r5 verdict — fact_deciles via the exact-total +
-    contract-flag face (raw buckets stay on fact_deciles_full),
-    isotonic via the deterministic-heuristic-score PAVA face whose
-    DuckDB twin evaluates the minimax characterization
-    max_{j<=i} min_{k>=i} mean(y[j..k]) (bit-exact: both sides reduce
-    to single IEEE divisions of exact ints; trained-score variant
-    lives on as isotonic_calibration_model, non-registry); (3)
-    bloom_filter_revenue, NEW — the sparse/huge-domain bloom runtime
-    filter promised at joins.bitmap_key_filter, oracle-paired because
-    FPs wash out in the exact join; (4) 46 record-less entries in
-    declaration order, ship_sla_pchart … char_entropy_flags
-    (isotonic pulled forward into (2)). ADVICE r5 fixes landing
-    inside this window: markov_removal_attribution p_full==0 guard +
-    bounded edge collect; outside it: ann_recall_eval zero-norm
-    NaN/NULL exclusion (batched ≡ loop preserved), truth-frame
-    localCheckpoint, session-cache eviction bounds
-    (operators/session_cache.py).
-
-    ROUND-7 EXECUTED (r6 closed 50/50 green with zero reds, so the
-    window is exactly the pre-staged queue): _R7_WINDOW = the next 50
-    record-less entries in declaration order, rage_burst_users …
-    cluster_source_nmi. No contract changes ride inside the window —
-    every slot closes a never-driver-checked gap. After this window
-    the record-less queue = 10 entries (event_hour_mi …
-    distance_correlation_daily plus the two r6 PII faces); the
-    pre-staged r8 queue (now _R8_WINDOW) finishes the ledger: that
-    remainder + numeric_corr_matrix (r3 record predates its r4
-    lattice reimplementation) + all 37 r1-vintage re-checks + the two
-    r7 contract-change re-checks (quality_classifier_scores,
-    bpe_merges).
-    Round-7 registry growth stays ≤ a handful per the r6 verdict
-    (#8); registry changes this round:
-    quality_classifier_scores is REDEFINED to an oracle-paired
-    exact-halves + contract-flag face (per-doc scores live on as the
-    non-registry quality_classifier_scores_full) and bpe_merges gains
-    a full unrolled DuckDB oracle — rows-only 11 -> 9 (verdict #4);
-    both take the two re-check slots at the tail of _R8_WINDOW since
-    their contracts changed. The PII pass gains the Luhn-validated
-    credit-card class (verdict #5). Registry 334 -> 335: the one
-    addition is jpeg_roundtrip_audit (verdict #6 — a real pure-numpy
-    baseline JPEG codec now backs the multimodal decode seam;
-    oracle-paired via exact key-derived dims + codec-contract flags),
-    which takes dedup_first_event's r1-re-check slot in _R8_WINDOW.
-
-    ROUND-8 EXECUTED (registry 335 -> 336; rows-only 9 -> 6):
-    _R8_WINDOW = the pre-staged r8 queue with three verdict-mandated
-    slot swaps (see the _R8_WINDOW header comment): lsh_recall_eval
-    and ann_recall_eval are TIGHTENED from rows-only to oracle-paired
-    contract faces (r7 verdict #3 — exact truth-set halves via the
-    deterministic n-gram-Jaccard / nonzero-norm-embedding CTEs + the
-    recall/precision floor booleans pinned TRUE; raw scoreboards live
-    on as lsh_recall_eval_full / ann_recall_eval_full, cross-checked
-    by the planted-dup and batched≡loop units), and the one registry
-    addition is png_roundtrip_audit (r7 verdict #4 — a real
-    stdlib-zlib+numpy 8-bit PNG codec at multimodal/png.py closes the
-    last bulk-corpus decode boundary; LOSSLESS exact-pixel contract,
-    disjoint doc_id % 3 == 1 fixture slice). The three displaced r1
-    re-checks head _R9_WINDOW. JPEG codec hardened per r7 ADVICE
-    (fill-byte tolerance, restart-marker advance, ValueError
-    boundary, randomized-worst-case JPEG_MAX_ABS_ERR=96, interpolated
-    audit-oracle dims). After this window every registry entry has a
-    driver record; _R9_WINDOW starts the currency rotation (oldest
-    vintage first). Late-r8 (after the window froze): pca_embeddings
-    tightened to an oracle-paired contract face too (component/row/dim
-    exact halves + the var-nonincreasing and orthonormality booleans;
-    raw projections -> pca_embeddings_full) — its re-check rides at
-    the head of _R9_WINDOW, the same late-tightening path
-    sketch_rollup_daily_users took in r5->r6. Rows-only 7 -> 6.
-
-    ROUND-9 EXECUTED: _R9_WINDOW wired (the pre-staged currency
-    rotation, unchanged): 4 r1-vintage re-checks displaced from the
-    r8 window, the late-r8 pca_embeddings contract-face re-check,
-    all 41 r2-vintage re-checks in declaration order, then the first
-    4 r3-vintage entries. After this window ~41 r3-vintage entries
-    remain for r10 (pre-staged as _R10_QUEUE). Registry changes this
-    round per the r8 verdict: #3 — key_filter_auto face added
-    (adaptive bitmap-vs-bloom dispatch on a cheap key-domain
-    estimate, so the dense-bitmap cap is an internal routing
-    decision, not a user-facing raise at scale); #4 — ivf_topk and
-    pq_topk TIGHTENED from rows-only to oracle-paired contract faces
-    (exact halves: panel size, k, dims, nonzero-norm counts + the
-    recall-vs-brute-force floor booleans pinned TRUE; raw neighbor
-    grids live on as ivf_topk_full / pq_topk_full) — rows-only
-    6 -> 4. Late-r9: ann_topk_lsh gains FULL oracle pairing (its
-    hyperplanes are Python-computed literals, so the twin
-    interpolates the same constants and reproduces the LSH bucket
-    bit-for-bit; within-bucket it is the embedding_topk exact-cosine
-    shape) — rows-only 4 -> 3; its re-check heads _R10_QUEUE.
+    The driver's CORRECTNESS gate runs the FIRST 50 entries at sf0.01,
+    so the order is derived from the committed driver records
+    (CORRECTNESS_r*.json next to this module) by driver_order: faces
+    with no current record come first, then the oldest current
+    records, ties by name. A record is current when rows, schema and
+    hash all match, or when it is a rows-only ``no_oracle`` record and
+    the face still has no oracle twin. Faces in CHANGED_SINCE_RECORD
+    count as unrecorded. The layout of the dict literal below does not
+    affect the order.
     """
     q = {
-        # --- round-3 window ------------------------------------------
-        # (a) no driver record yet: round-2 post-window newcomers
         "user_retention_cohorts": E.user_retention_cohorts,
         "event_type_cooccurrence": E.event_type_cooccurrence,
         "price_histogram": X.price_histogram,
@@ -324,19 +87,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "activity_streaks": E.activity_streaks,
         "revenue_pareto": E.revenue_pareto,
         "approx_aggregates": X.approx_aggregates,  # oracle-paired since r5 (exact halves + contract flags)
-        # (b) high-divergence-risk re-checks (r2 green; decimal surface,
-        # ordered collect, float threshold, SCD interval semantics)
         "silver_products": P.silver_products,
         "session_event_paths": E.session_event_paths,
         "value_zscore_outliers": E.value_zscore_outliers,
         "scd2_customer_priority": SCD.scd2_customer_priority,
-        # (c) new/changed this round (star CC, quantizer, real codec)
         "dedup_components_star": D.dedup_components_star,
         "ivf_topk": IVF.ivf_topk,  # oracle-paired since r9 (contract face; grid -> ivf_topk_full)
         "media_decode": M.media_decode,
         "media_frame_sample": M.media_frame_sample,
-        # (c2) new this round — no record yet (cross-doc boilerplate,
-        # OOV quality filter, incremental ingest dedup, PQ-ADC ANN)
         "boilerplate_fraction": CP.boilerplate_fraction,
         "oov_ratio": T.oov_ratio,
         "incremental_dedup_new_docs": D.incremental_dedup_new_docs,
@@ -347,9 +105,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "supplier_influence_rank": G.supplier_influence_rank,
         "near_dup_triangles": G.near_dup_triangles,
         "profile_events": PR.profile_events,
-        # (c3) built later in round 3 — no record yet (LM-perplexity
-        # scoring, SemDeDup, lossless PPJoin, corr matrix, winsorized
-        # stats, ranking surface, as-of attribution, linear gap fill)
         "doc_perplexity": T.doc_perplexity,
         "semdedup_keep": S.semdedup_keep,
         "jaccard_prefix_join": D.jaccard_prefix_join,
@@ -358,8 +113,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "order_rank_metrics": W.order_rank_metrics,
         "revenue_attribution": E.revenue_attribution,
         "daily_revenue_interpolated": W.daily_revenue_interpolated,
-        # (c4) built in round 3 continuation — no record yet (retail
-        # analytics: basket rules, RFM, cohort LTV, OLS trend)
         "market_basket_lift": R.market_basket_lift,
         "rfm_segments": R.rfm_segments,
         "cohort_ltv": R.cohort_ltv,
@@ -367,23 +120,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ewma_daily_revenue": W.ewma_daily_revenue,
         "value_mad_outliers": E.value_mad_outliers,
         "heavy_hitters_cms": SK.heavy_hitters_cms,
-        # ---- end of 50-entry driver window --------------------------
         "key_skew_profile": SKW.key_skew_profile,
         "trade_reach": G.trade_reach,
         "blamed_suppliers": Q.blamed_suppliers,
         "revenue_day_over_day": W.revenue_day_over_day,
         "boilerplate_removed": CP.boilerplate_removed,
-        # r8 tightening: pca_embeddings is now the oracle-paired
-        # contract face (exact component/row/dim halves + the
-        # var-nonincreasing and orthonormality booleans pinned TRUE);
-        # raw projections live on as pca_embeddings_full
-        "pca_embeddings": PCA.pca_embeddings,
+        "pca_embeddings": PCA.pca_embeddings,  # oracle-paired since r8 (contract face; projections -> pca_embeddings_full)
         "weighted_doc_sample": CP.weighted_doc_sample,
         "revenue_changepoint": X.revenue_changepoint,
         "session_window_agg": E.session_window_agg,
-        # (c5) built after the r3 window froze — r4 rotation priority
-        # (blocked entity resolution, within-doc repetition removal,
-        # learned quality filter)
         "part_match_blocking": D.part_match_blocking,
         "collapse_adjacent_repeats": CP.collapse_adjacent_repeats,
         "quality_classifier_scores": QM.quality_classifier_scores,  # oracle-paired since r7 (exact halves + contract flags; per-doc scores -> non-registry _full)
@@ -391,7 +136,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_search": T.bm25_search,
         "dow_baseline_anomalies": X.dow_baseline_anomalies,
         "value_drift_ks": PR.value_drift_ks,  # oracle-paired r4 (exact KS)
-        # (d) round-1-only records — re-check before they go stale
         "pricing_summary": A.pricing_summary,
         "daily_revenue": A.daily_revenue,
         "category_profile": A.category_profile,
@@ -416,7 +160,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ts_range_filter": P.ts_range_filter,
         "multi_source_union": P.multi_source_union,
         "string_normalize": P.string_normalize,
-        # --- tail: r1-record, unchanged ------------------------------
         "date_math": P.date_math,
         "bucketize": P.bucketize,
         "json_extract": P.json_extract,
@@ -437,10 +180,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "session_stats": E.session_stats,
         "asof_join_last_order": E.asof_join_last_order,
         "range_join_same_day": E.range_join_same_day,
-        "minhash_dedup_docs": D.minhash_dedup_docs,  # rows-only, r1 record
+        "minhash_dedup_docs": D.minhash_dedup_docs,  # rows-only by contract (no oracle twin)
         "ann_topk_lsh": S.ann_topk_lsh,  # FULL oracle pairing since r9 (interpolated hyperplane literals)
-        "simhash_dedup_docs": D.simhash_dedup_docs,  # rows-only, r1 record
-        # --- tail: r2-record, unchanged ------------------------------
+        "simhash_dedup_docs": D.simhash_dedup_docs,  # rows-only by contract (no oracle twin)
         "rollup_revenue": X.rollup_revenue,
         "cube_order_counts": X.cube_order_counts,
         "pivot_linestatus": X.pivot_linestatus,
@@ -464,7 +206,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "profit_by_nation_year": Q.profit_by_nation_year,
         "ngram_jaccard_pairs": D.ngram_jaccard_pairs,
         "dedup_components": D.dedup_components,
-        "mllib_lsh_join": L.mllib_similarity_join,  # rows-only, r2 record
+        "mllib_lsh_join": L.mllib_similarity_join,  # rows-only by contract (no oracle twin)
         "local_supplier_revenue": Q.local_supplier_revenue,
         "part_value_concentration": Q.part_value_concentration,
         "top_supplier_revenue": Q.top_supplier_revenue,
@@ -484,10 +226,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bigram_lm": T.bigram_lm,
         "orders_asof_priority_regime": SCD.orders_asof_priority_regime,
         "fact_deciles_scalable": X.fact_deciles_scalable,  # oracle-paired since r6 (exact total + contract flags; raw buckets = fact_deciles_full)
-        # (e) built in round 4 — all oracle-paired (containment join,
-        # quality-aware canonical pick, eval-side decontamination,
-        # ExactSubstr-lite span coverage, Simpson mixture health,
-        # fixed-point tf-idf cosine, funnel latency quartiles)
         "containment_pairs": D.containment_pairs,
         "canonical_by_quality": D.canonical_by_quality,
         "eval_overlap_fraction": CP.eval_overlap_fraction,
@@ -495,897 +233,218 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "source_lang_diversity": X.source_lang_diversity,
         "tfidf_cosine_pairs": S.tfidf_cosine_pairs,
         "funnel_time_to_convert": E.funnel_time_to_convert,
-        # (f) round-4 continuation — all oracle-paired (Markov
-        # transition matrix, Benford digit screen, revenue ACF,
-        # per-source term lift, Bollinger volatility bands)
         "markov_transitions": E.markov_transitions,
         "benford_first_digit": X.benford_first_digit,
         "daily_revenue_acf": X.daily_revenue_acf,
         "distinctive_terms_by_source": T.distinctive_terms_by_source,
         "bollinger_daily_revenue": W.bollinger_daily_revenue,
-        # (g) round-4 continuation 2 — all oracle-paired (dedup
-        # cluster-size report, ExactSubstr-lite span removal,
-        # acquisition-vs-retention split, purchase-cadence quartiles,
-        # Theil–Sen robust trend, doc-length histogram)
         "near_dup_cluster_sizes": D.near_dup_cluster_sizes,
         "remove_duplicated_spans": CP.remove_duplicated_spans,
         "new_vs_returning_monthly": R.new_vs_returning_monthly,
         "order_gap_quartiles": R.order_gap_quartiles,
         "theil_sen_trend": X.theil_sen_trend,
         "token_len_histogram": T.token_len_histogram,
-        # (h) round-4 continuation 3 — all oracle-paired (multi-touch
-        # attribution, brand loyalty, weekly seasonal index,
-        # chi-square contingency cells)
         "linear_touch_attribution": E.linear_touch_attribution,
         "brand_repeat_purchase": R.brand_repeat_purchase,
         "weekday_seasonality_index": X.weekday_seasonality_index,
         "part_size_price_contingency": X.part_size_price_contingency,
-        # (i) round-4 continuation 4 — REAL WAV containers built and
-        # parsed in-engine; exact dyadic-rational sums make the audio
-        # doubles bit-identical to the SQL oracle (see
-        # decode.audio_pcm_summary)
         "audio_pcm_metrics": M.audio_pcm_metrics,
         "audio_window_report": M.audio_window_report,
         "image_ppm_metrics": M.image_ppm_metrics,
-        # (j) round-4 continuation 5 — retail science (revenue
-        # inequality, discount elasticity), all oracle-paired
         "revenue_gini_by_nation": R.revenue_gini_by_nation,
         "promo_lift_slope": X.promo_lift_slope,
-        # (k) round-4 continuation 6 — corpus-statistics laws (Zipf
-        # slope, unigram Shannon entropy), oracle-paired via the bm25
-        # 9dp quantize-before-sum seam
         "zipf_fit_by_source": T.zipf_fit_by_source,
         "token_entropy_by_source": T.token_entropy_by_source,
-        # (l) round-4 continuation 7 — recursive-seam EWMA (grouped
-        # map vs recursive CTE, floor-lattice rounding each step; the
-        # true-recurrence companion of the finite-horizon
-        # ewma_daily_revenue) and the cohort retention triangle
         "ewma_recursive_daily": W.ewma_recursive_daily,
         "cohort_retention_matrix": R.cohort_retention_matrix,
-        # (m) round-4 continuation 8 — supplier reliability (Wilson
-        # bound, weighted median) and embedding class separability
         "supplier_ontime_wilson": R.supplier_ontime_wilson,
         "leadtime_weighted_median": R.leadtime_weighted_median,
         "label_centroid_cosine": S.label_centroid_cosine,
-        # (n) round-4 continuation 9 — oracle-paired HyperLogLog (the
-        # CMS trick extended to cardinality: integer mixing +
-        # string-domain bit length; estimate emitted beside exact)
         "hll_distinct_users": SK.hll_distinct_users,
-        # (o) round-4 continuation 10 — Mann-Whitney U drift (the
-        # location companion of value_drift_ks, rank machinery on the
-        # doubled-rank integer lattice, no grouped-map needed)
         "value_drift_mwu": PR.value_drift_mwu,
-        # (p) round-4 continuation 11 — survival analysis (KM churn
-        # curve with censoring), STL-lite decomposition, and Holt
-        # double-exponential smoothing (second recursive-seam entry)
         "kaplan_meier_churn": X.kaplan_meier_churn,
         "stl_daily_revenue": X.stl_daily_revenue,
         "holt_linear_daily": W.holt_linear_daily,
-        # (q) round-4 continuation 12 — experimentation (two-
-        # proportion z-test) and the Lorenz curve behind the Gini
         "ab_conversion_ztest": E.ab_conversion_ztest,
         "lorenz_curve_deciles": R.lorenz_curve_deciles,
-        # (r) round-4 continuation 13 — oracle-paired k-means (fixed
-        # 3-round Lloyd on the integer lattice; the PageRank/CMS
-        # determinism class extended to clustering)
         "kmeans_lattice_clusters": S.kmeans_lattice_clusters,
-        # (s) round-4 continuation 14 — rank/association statistics and
-        # the clamped-cumulative-sum sweep, all exact-integer cores
         "spearman_rank_corr": X.spearman_rank_corr,
         "order_backlog_sweep": X.order_backlog_sweep,
         "view_purchase_xcorr": X.view_purchase_xcorr,
-        # (t) round-4 continuation 15 — hybrid retrieval, two-sample
-        # means, journey trigrams, robust rolling stat, embedding
-        # feature health
         "rrf_fusion_search": T.rrf_fusion_search,
         "welch_value_ttest": E.welch_value_ttest,
         "event_trigram_paths": E.event_trigram_paths,
         "rolling_median_7d": W.rolling_median_7d,
         "embedding_dim_stats": S.embedding_dim_stats,
-        # (u) round-4 continuation 16 — a custom Arrow string kernel
-        # cross-validated against an independent native implementation,
-        # and the forecast-accuracy gate for the smoothing family
         "jw_blocked_match": D.jw_blocked_match,
         "forecast_backtest_mase": W.forecast_backtest_mase,
-        # (v) round-4 continuation 17 — hypothesis-test summary over
-        # the contingency grid, sort-free rank normalization, and the
-        # engagement-diversity entropy histogram
         "chi2_independence_test": X.chi2_independence_test,
         "doclen_percentile_by_source": X.doclen_percentile_by_source,
         "user_event_entropy": X.user_event_entropy,
-        # (w) round-4 continuation 18 — deterministic Poisson
-        # bootstrap (md5-lattice draws) and the materialized
-        # impact-ordered inverted index
         "bootstrap_mean_ci": X.bootstrap_mean_ci,
         "inverted_index_postings": T.inverted_index_postings,
-        # (x) round-4 continuation 19 — feature encoding, time-weighted
-        # averaging, and the time-constrained windowFunnel
         "target_encode_loo": A.target_encode_loo,
         "twap_user_day": E.twap_user_day,
         "window_funnel_depth": E.window_funnel_depth,
-        # (y) round-4 continuation 20 — multivariate OLS by Cramer on
-        # the lattice, PMI association, classifier eval, and the
-        # seasonality grid
         "ols_two_factor": X.ols_two_factor,
         "event_pmi_pairs": E.event_pmi_pairs,
         "langid_confusion": T.langid_confusion,
         "dow_hour_activity": E.dow_hour_activity,
-        # (z) round-4 continuation 21 — quantization distortion,
-        # integer-exact coverage curve, dispersion index, SPC p-chart
         "sq8_quantization_error": S.sq8_quantization_error,
         "vocab_coverage_curve": T.vocab_coverage_curve,
         "event_fano_factor": E.event_fano_factor,
         "ship_sla_pchart": E.ship_sla_pchart,
-        # (aa) round-4 continuation 22 — forecasting feature assembly,
-        # AR aging, and the power-mean family
         "revenue_feature_matrix": W.revenue_feature_matrix,
         "ar_aging_buckets": A.ar_aging_buckets,
         "price_power_means": A.price_power_means,
-        # (ab) round-4 continuation 23 — item-item CF neighbors and
-        # the PSI drift score completing the drift trio
         "item_item_cosine": R.item_item_cosine,
         "value_psi_drift": PR.value_psi_drift,
-        # (ac) round-4 continuation 24 — distribution-free forecast
-        # uncertainty via split conformal
         "conformal_forecast_band": W.conformal_forecast_band,
         "isotonic_calibration": QM.isotonic_calibration,  # oracle-paired since r6 (deterministic heuristic score; PAVA ≡ minimax twin; trained-score variant = isotonic_calibration_model)
-        # (ad) round-4 continuation 25 — the MoM revenue waterfall
         "revenue_bridge_monthly": R.revenue_bridge_monthly,
         "dau_wau_stickiness": E.dau_wau_stickiness,
-        # (ae) round-4 continuation 26 — market concentration and
-        # composition-drift monitors
         "supplier_hhi_by_nation": R.supplier_hhi_by_nation,
         "priority_mix_shift": E.priority_mix_shift,
         "eb_shrunk_user_conversion": E.eb_shrunk_user_conversion,
-        # (af) round-4 continuation 27 — corpus-pipeline planning
-        # curves composing the perplexity and mixture oracles
         "ppl_filter_sweep": T.ppl_filter_sweep,
         "mix_epochs_plan": CP.mix_epochs_plan,
-        # (ag) round-4 continuation 28 — diff-in-differences
         "promo_did_estimate": R.promo_did_estimate,
         "retrieval_ndcg_eval": T.retrieval_ndcg_eval,
-        # (ah) round-4 continuation 29 — corpus triage and the
-        # sort-free distribution report
         "dedup_rate_by_source": CP.dedup_rate_by_source,
         "order_value_ecdf": A.order_value_ecdf,
         "readability_scores": T.readability_scores,
         "top_movers_monthly": W.top_movers_monthly,
-        # (ai) round-4 continuation 30 — graph cohesion: iterative
-        # k-core peel with an integer-exact per-round collapse ledger
         "copurchase_core_collapse": G.copurchase_core_collapse,
-        # (aj) round-4 continuation 31 — counterfactual attribution:
-        # absorbing-chain removal effects (completes last-touch /
-        # linear / data-driven attribution family)
         "markov_removal_attribution": E.markov_removal_attribution,
-        # (ak) round-4 continuation 32 — CUPED variance-reduced A/B
-        # readout (one moment aggregate, closed-form adjustment)
         "cuped_adjusted_ab": E.cuped_adjusted_ab,
-        # (al) round-4 continuation 33 — Holt-Winters weekly: the
-        # recursive oracle class at 9 carried states
         "holt_winters_weekly": W.holt_winters_weekly,
-        # (am) round-4 continuation 34 — (s,S) inventory simulation:
-        # integer-state recursion, no float seam at all
         "inventory_ss_policy": R.inventory_ss_policy,
-        # (an) round-4 continuation 35 — DSIR domain-targeted corpus
-        # selection weights (hashed-bigram log-likelihood ratio)
         "dsir_importance_weights": T.dsir_importance_weights,
-        # (ao) round-4 continuation 36 — per-source curation scorecard
-        # composing dedup-rate, Gopher, language mix, and DSIR
         "corpus_health_by_source": CP.corpus_health_by_source,
-        # (ap) round-4 continuation 37 — Kneser-Ney smoothed bigram
-        # LM (continuation-count backoff, zero float-sum seams)
         "kneser_ney_bigrams": T.kneser_ney_bigrams,
-        # (aq) round-4 continuation 38 — Shapley coalition attribution
-        # (fourth member of the attribution family)
         "shapley_attribution": E.shapley_attribution,
-        # (ar) round-4 continuation 39 — integer-exact HITS link
-        # analysis, the exact broadcast-bitmap runtime filter, the
-        # k-anonymity/l-diversity release audit, and deterministic
-        # contrastive negative sampling
         "hits_part_authorities": G.hits_part_authorities,
         "bitmap_filter_revenue": J.bitmap_filter_revenue,
-        # r6 (VERDICT item 4): the sparse/huge-domain bloom variant
-        # promised in bitmap_key_filter's docstring — same logical
-        # answer (FPs washed out by the exact join), bloom is physical
-        "bloom_filter_revenue": J.bloom_filter_revenue,
+        "bloom_filter_revenue": J.bloom_filter_revenue,  # bloom false positives wash out in the exact join
         "k_anonymity_classes": X.k_anonymity_classes,
         "contrastive_negatives": CP.contrastive_negatives,
-        # (as) round-4 continuation 40 — MOSS winnowing fingerprint
-        # pairs, ABC-XYZ inventory grid, time-decay attribution
-        # (power-of-two weights), and Dirichlet query-likelihood
-        # retrieval
         "winnowing_fingerprints": D.winnowing_fingerprints,
         "abc_xyz_inventory": R.abc_xyz_inventory,
         "time_decay_attribution": E.time_decay_attribution,
         "query_likelihood_search": T.query_likelihood_search,
-        # (at) round-4 continuation 41 — Huber-IRLS robust trend,
-        # Adamic-Adar copurchase link prediction, Markov conditional
-        # entropy rate
         "huber_trend_by_type": X.huber_trend_by_type,
         "adamic_adar_parts": G.adamic_adar_parts,
         "markov_entropy_rate": E.markov_entropy_rate,
-        # (au) round-4 continuation 42 — Haar multi-resolution energy
-        # and Theil inequality decomposition (the online Markov
-        # counter lands in streaming/, e2e-pinned, per the §2.9
-        # convention)
         "haar_energy_daily": X.haar_energy_daily,
         "theil_inequality_by_nation": X.theil_inequality_by_nation,
-        # (av) round-4 continuation 43 — first-seen n-gram novelty
-        # attribution and algebraic leave-one-source-out ablation
         "ngram_novelty_by_source": CP.ngram_novelty_by_source,
         "loso_source_impact": CP.loso_source_impact,
-        # (aw) round-4 continuation 44 — deterministic label
-        # propagation communities, character-entropy gibberish screen,
-        # and trailing-window burst (rage-click) detection
         "label_propagation_communities": G.label_propagation_communities,
         "char_entropy_flags": T.char_entropy_flags,
         "rage_burst_users": E.rage_burst_users,
-        # (ax) round-4 continuation 45 — Heaps'-law vocabulary growth
-        # fit and embedding triplet violation rate
         "heaps_law_fit": T.heaps_law_fit,
         "triplet_violation_rate": S.triplet_violation_rate,
-        # (ay) round-4 continuation 47 — brand-entropy segmentation
-        # and hourly click-to-purchase conversion
         "brand_diversity_deciles": R.brand_diversity_deciles,
         "click_conversion_by_hour": E.click_conversion_by_hour,
-        # (az) round-4 continuation 48 — Newman modularity of the LPA
-        # partition (community-quality eval)
         "community_modularity": G.community_modularity,
-        # (ba) round-4 continuation 49 — Rayleigh circadian
-        # concentration (bot screen) and Wald-SPRT sequential
-        # experiment monitor
         "circadian_concentration": E.circadian_concentration,
         "sprt_daily_monitor": E.sprt_daily_monitor,
-        # (bb) round-4 continuation 50 — 2x2 box-downsample through
-        # the real PPM parser and the Laplace DP count release
         "image_downsample_metrics": M.image_downsample_metrics,
         "dp_noisy_counts": X.dp_noisy_counts,
-        # (bc) round-4 continuation 51 — forward as-of join
-        # (time-to-next-purchase labels) and the EOQ/newsvendor
-        # policy sheet
         "asof_next_purchase": E.asof_next_purchase,
         "inventory_order_policies": R.inventory_order_policies,
-        # (bd) round-4 continuation 52 — the N x N trade-flow matrix
-        # (Q7 generalized) and best-of-n rejection sampling
         "trade_flow_matrix": Q.trade_flow_matrix,
         "best_of_n_selection": CP.best_of_n_selection,
-        # (be) round-4 continuation 53 — Burrows' Delta stylometry and
-        # the banded near-duplicate payment screen
         "burrows_delta_sources": T.burrows_delta_sources,
         "similar_payment_screen": J.similar_payment_screen,
-        # (bf) round-4 continuation 54 — near-dup split-leakage REPAIR
-        # and business-day shipping latency
         "split_repair_assignments": CP.split_repair_assignments,
         "business_days_latency": R.business_days_latency,
-        # (bg) round-4 continuation 55 — Hamilton largest-remainder
-        # apportionment of a document budget across sources
         "budget_allocation_plan": CP.budget_allocation_plan,
-        # (bh) round-4 continuation 56 — pairwise Jensen–Shannon
-        # divergence between source unigram distributions and
-        # TextRank keyword extraction over the word co-occurrence
-        # graph (the quantized pagerank kernel, third consumer)
         "source_js_divergence": T.source_js_divergence,
         "textrank_keywords": T.textrank_keywords,
-        # (bi) round-4 continuation 57 — skyline/Pareto frontier,
-        # Wald–Wolfowitz runs test, Ljung–Box portmanteau (composes
-        # the ACF), and tie-corrected Kendall τ-b concordance
         "part_skyline": X.part_skyline,
         "runs_test_revenue": X.runs_test_revenue,
         "ljung_box_revenue": X.ljung_box_revenue,
         "kendall_tau_daily": X.kendall_tau_daily,
-        # (bj) round-4 continuation 58 — sorted-neighborhood ER, the
-        # fifth candidate-generation modality (complements blocking)
         "sorted_neighborhood_pairs": D.sorted_neighborhood_pairs,
-        # (bk) round-4 continuation 59 — greedy submodular coverage
-        # selection over the bigram universe (5 unrolled rounds)
         "coverage_greedy_docs": CP.coverage_greedy_docs,
-        # (bl) round-4 continuation 60 — Hurst exponent by rescaled
-        # range, integer-exact inside blocks via m·Z_t = m·S_t − t·T
         "hurst_rs_daily": X.hurst_rs_daily,
-        # (bm) round-4 continuation 61 — Tukey median polish of the
-        # dow×hour grid (robust two-way decomposition, dyadic-exact)
         "median_polish_dow_hour": E.median_polish_dow_hour,
-        # (bn) round-4 continuation 62 — one-way ANOVA across event
-        # types and the Dickey–Fuller unit-root pre-flight
         "anova_value_by_type": E.anova_value_by_type,
         "adf_daily_revenue": X.adf_daily_revenue,
-        # (bo) round-4 continuation 63 — leave-last-order-out CF
-        # evaluation (hit-rate@10 / MRR on the item-item recommender)
         "cf_holdout_hitrate": R.cf_holdout_hitrate,
-        # (bp) round-4 continuation 64 — all-pairs Welch tests under
-        # Benjamini–Hochberg FDR control (A&S normal CDF, shared dag)
         "pairwise_welch_fdr": E.pairwise_welch_fdr,
-        # (bq) round-4 continuation 65 — Granger lag-1 incremental-F
-        # (does order volume lead revenue?)
         "granger_count_to_revenue": X.granger_count_to_revenue,
-        # (br) round-4 continuation 66 — global clustering coefficient
-        # of the support-2 copurchase graph (degree-oriented kernel)
         "copurchase_clustering": G.copurchase_clustering,
-        # (bs) round-4 continuation 67 — Church–Gale term burstiness
-        # (VMR with algebraic zero-fill)
         "term_burstiness": T.term_burstiness,
-        # (bt) round-4 continuation 68 — Simpson's-paradox screen
-        # (pooled vs within-brand slope sign flips)
         "simpson_slope_check": X.simpson_slope_check,
-        # (bu) round-4 continuation 69 — pseudo-relevance-feedback
-        # retrieval (Rocchio/RM1-lite expansion over BM25)
         "bm25_prf_search": T.bm25_prf_search,
-        # (bv) round-4 continuation 70 — 1-D Wasserstein drift (the
-        # CDF-area metric completing the KS/PSI/χ² drift triad)
         "value_emd_drift": E.value_emd_drift,
-        # (bw) round-4 continuation 71 — LSH candidate-quality eval
-        # vs exact Jaccard truth. r8 (verdict #3): tightened from
-        # rows-only to the oracle-paired contract face (exact
-        # truth-pair counts + recall/precision floor booleans pinned
-        # TRUE); raw scoreboard lives on as lsh_recall_eval_full
-        "lsh_recall_eval": D.lsh_recall_eval,
-        # (bx) round-4 continuation 72 — seasonally-adjusted anomaly
-        # days (STL residual / robust MAD scale)
+        "lsh_recall_eval": D.lsh_recall_eval,  # oracle-paired since r8 (contract face; scoreboard -> lsh_recall_eval_full)
         "stl_residual_anomalies": X.stl_residual_anomalies,
-        # (by) round-4 continuation 73 — quantile-treatment-effect
-        # deciles: WHERE in the distribution the drift happened
         "value_qte_deciles": E.value_qte_deciles,
-        # (bz) round-4 continuation 74 — ANN recall@10 scoreboard.
-        # r8 (verdict #3): tightened from rows-only to the
-        # oracle-paired contract face (exact panel/truth-set sizes +
-        # the panel-mean recall floor boolean pinned TRUE); raw
-        # per-query scoreboard lives on as ann_recall_eval_full
-        "ann_recall_eval": S.ann_recall_eval,
-        # (ca) round-4 continuation 75 — 2-D Mahalanobis document
-        # outliers (covariance-aware joint screen)
+        "ann_recall_eval": S.ann_recall_eval,  # oracle-paired since r8 (contract face; scoreboard -> ann_recall_eval_full)
         "doc_mahalanobis_outliers": T.doc_mahalanobis_outliers,
-        # (cb) round-4 continuation 76 — Laspeyres/Paasche/Fisher
-        # matched-sample price indices per month
         "price_indices_monthly": R.price_indices_monthly,
-        # (cc) round-4 continuation 77 — Newman degree assortativity
-        # (shares the support-2 copurchase edge substrate)
         "copurchase_assortativity": G.copurchase_assortativity,
-        # (cd) round-4 continuation 78 — coarsened-exact-matching ATT
-        # (the matching-family member of the causal toolkit)
         "cem_promo_att": R.cem_promo_att,
-        # (ce) round-4 continuation 79 — Dunning G² collocations
-        # (evidence-weighted multiword units, the PMI fix)
         "collocations_g2": T.collocations_g2,
-        # (cf) round-4 continuation 80 — shift-share decomposition of
-        # nation revenue growth (national + mix + competitive)
         "revenue_shift_share": R.revenue_shift_share,
-        # (cg) round-4 continuation 81 — Durbin–Watson diagnostic on
-        # the daily-revenue trend residuals
         "durbin_watson_trend": X.durbin_watson_trend,
-        # (ch) round-4 continuation 82 — Yule's K repeat-rate lexical
-        # richness (length-invariant, via the spectrum identity)
         "yule_k_by_source": T.yule_k_by_source,
-        # (ci) round-4 continuation 83 — clustering agreement eval
-        # (purity/NMI vs true labels over the lattice k-means)
         "cluster_source_nmi": S.cluster_source_nmi,
-        # (cj) round-4 continuation 84 — type×hour mutual information
-        # (the one-number version of the dow×hour heatmap)
         "event_hour_mi": E.event_hour_mi,
-        # (ck) round-4 continuation 85 — TwoNN intrinsic dimension of
-        # the embedding manifold (lattice-exact neighbor ranks)
         "embedding_intrinsic_dim": S.embedding_intrinsic_dim,
-        # (cl) round-4 continuation 86 — Hopkins clusterability
-        # pre-flight (deterministic lattice probes)
         "hopkins_statistic": S.hopkins_statistic,
-        # (cm) round-4 continuation 87 — Chapman capture-recapture +
-        # Chao1: estimate the catalog you have NOT seen sell
         "catalog_size_estimates": R.catalog_size_estimates,
-        # (cn) round-4 continuation 88 — promo→return odds ratio with
-        # the Woolf interval
         "promo_return_odds": R.promo_return_odds,
-        # (co) round-4 continuation 89 — GK percentile-sketch accuracy
-        # audit (oracle-paired since r5: exact order statistics + the
-        # GK rank-bound verdict; raw estimates moved to the internal
-        # percentile_sketch_report)
-        "percentile_sketch_error": X.percentile_sketch_error,
-        # (cp) round-4 continuation 90 — log-rank survival comparison
-        # (the inferential companion to the KM curve)
+        "percentile_sketch_error": X.percentile_sketch_error,  # oracle-paired since r5 (exact order statistics + GK rank-bound flag; estimates -> percentile_sketch_report)
         "churn_logrank_test": X.churn_logrank_test,
-        # (cq) round-4 continuation 91 — McNemar's paired test between
-        # the Gopher and perplexity quality gates
         "filter_mcnemar_test": CP.filter_mcnemar_test,
-        # (cr) round-4 continuation 92 — distance correlation (catches
-        # the nonlinear dependence Pearson/Spearman/Kendall miss)
         "distance_correlation_daily": X.distance_correlation_daily,
-        # (cs) round-6 post-window additions 93-94 — free-text PII
-        # detection + redaction (the privacy pass of the LLM-pipeline
-        # surface; regex subset shared Java∩RE2 so the oracle matches
-        # byte-for-byte; input = deterministic synth CRM notes, the
-        # synth_image_table fixture pattern). Queue for the r8 window.
-        "pii_scan_report": PII.pii_scan_report,
-        "pii_redaction_audit": PII.pii_redaction_audit,
-        # (ct) round-7 addition 95 — baseline-JPEG codec roundtrip
-        # audit (real pure-numpy encode+decode at the mapInPandas
-        # seam, closing the r6 verdict's multimodal decode boundary;
-        # exact key-derived dims + codec-contract flags, the
-        # sketch_rollup oracle pattern). Queue for the r8 window.
-        "jpeg_roundtrip_audit": M.jpeg_roundtrip_audit,
-        # --- round-8 addition ----------------------------------------
-        # (r8-1) verdict #4 — the 8-bit PNG codec roundtrip audit
-        # (real stdlib-zlib+numpy encode+decode at the mapInPandas
-        # seam; LOSSLESS contract: exact pixel equality, strictly
-        # stronger than the JPEG error bound; disjoint doc_id % 3 == 1
-        # fixture slice). Oracle-paired via exact key-derived dims +
-        # codec-contract flags.
-        "png_roundtrip_audit": M.png_roundtrip_audit,
+        "pii_scan_report": PII.pii_scan_report,  # regex subset shared by Java and RE2, so the twin matches byte-for-byte
+        "pii_redaction_audit": PII.pii_redaction_audit,  # regex subset shared by Java and RE2, so the twin matches byte-for-byte
+        "jpeg_roundtrip_audit": M.jpeg_roundtrip_audit,  # oracle-paired via exact key-derived dims + codec-contract flags
+        "png_roundtrip_audit": M.png_roundtrip_audit,  # oracle-paired via exact key-derived dims + codec-contract flags (lossless)
     }
-    # r10: the r9 driver record landed (CORRECTNESS_r09 — 49 green +
-    # 1 rows-only-by-contract, 0 red), so the pre-staged _R10_QUEUE
-    # becomes the served window: the 13 r9-changed faces
-    # (pricing_summary's DECIMAL outputs, key_filter_auto dispatch,
-    # the sf1 seam fixes, ann_topk_lsh's late full pairing) get their
-    # driver records first, then the r3-vintage currency remainder.
-    return {k: q[k] for k in _R10_QUEUE} | {
-        k: v for k, v in q.items() if k not in set(_R10_QUEUE)
-    }
+    return {k: q[k] for k in driver_order(q, oracle_sql())}
 
 
-# r6 window kept for the ledger (CORRECTNESS_r06 rows map to this).
-_R6_WINDOW = [
-    # (1) tightened to oracle-paired in r5 AFTER the r5 window closed —
-    # first oracle-paired driver record lands here (planned in the r5
-    # ledger note)
-    "sketch_rollup_daily_users",
-    # (2) rows-only → oracle-paired THIS round (r5 verdict item 7):
-    # fact_deciles via the exact-total + contract-flag face;
-    # isotonic_calibration via the deterministic-score PAVA face with
-    # the minimax SQL twin
-    "fact_deciles_scalable",
-    "isotonic_calibration",
-    # (3) NEW this round (r5 verdict item 4): the sparse-domain bloom
-    # scale path promised in bitmap_key_filter's docstring
-    "bloom_filter_revenue",
-    # (4) record-less rotation, registry declaration order from
-    # ship_sla_pchart (isotonic_calibration pulled to (2) above);
-    # markov_removal_attribution's ADVICE fixes (p_full==0 guard,
-    # bounded collect) land inside this window
-    "ship_sla_pchart",
-    "revenue_feature_matrix",
-    "ar_aging_buckets",
-    "price_power_means",
-    "item_item_cosine",
-    "value_psi_drift",
-    "conformal_forecast_band",
-    "revenue_bridge_monthly",
-    "dau_wau_stickiness",
-    "supplier_hhi_by_nation",
-    "priority_mix_shift",
-    "eb_shrunk_user_conversion",
-    "ppl_filter_sweep",
-    "mix_epochs_plan",
-    "promo_did_estimate",
-    "retrieval_ndcg_eval",
-    "dedup_rate_by_source",
-    "order_value_ecdf",
-    "readability_scores",
-    "top_movers_monthly",
-    "copurchase_core_collapse",
-    "markov_removal_attribution",
-    "cuped_adjusted_ab",
-    "holt_winters_weekly",
-    "inventory_ss_policy",
-    "dsir_importance_weights",
-    "corpus_health_by_source",
-    "kneser_ney_bigrams",
-    "shapley_attribution",
-    "hits_part_authorities",
-    "bitmap_filter_revenue",
-    "k_anonymity_classes",
-    "contrastive_negatives",
-    "winnowing_fingerprints",
-    "abc_xyz_inventory",
-    "time_decay_attribution",
-    "query_likelihood_search",
-    "huber_trend_by_type",
-    "adamic_adar_parts",
-    "markov_entropy_rate",
-    "haar_energy_daily",
-    "theil_inequality_by_nation",
-    "ngram_novelty_by_source",
-    "loso_source_impact",
-    "label_propagation_communities",
-    "char_entropy_flags",
-]
-
-# r7 window kept for the ledger (CORRECTNESS_r07 rows map to this).
-_R7_WINDOW = [
-    "rage_burst_users",
-    "heaps_law_fit",
-    "triplet_violation_rate",
-    "brand_diversity_deciles",
-    "click_conversion_by_hour",
-    "community_modularity",
-    "circadian_concentration",
-    "sprt_daily_monitor",
-    "image_downsample_metrics",
-    "dp_noisy_counts",
-    "asof_next_purchase",
-    "inventory_order_policies",
-    "trade_flow_matrix",
-    "best_of_n_selection",
-    "burrows_delta_sources",
-    "similar_payment_screen",
-    "split_repair_assignments",
-    "business_days_latency",
-    "budget_allocation_plan",
-    "source_js_divergence",
-    "textrank_keywords",
-    "part_skyline",
-    "runs_test_revenue",
-    "ljung_box_revenue",
-    "kendall_tau_daily",
-    "sorted_neighborhood_pairs",
-    "coverage_greedy_docs",
-    "hurst_rs_daily",
-    "median_polish_dow_hour",
-    "anova_value_by_type",
-    "cf_holdout_hitrate",
-    "granger_count_to_revenue",
-    "copurchase_clustering",
-    "term_burstiness",
-    "simpson_slope_check",
-    "bm25_prf_search",
-    "value_emd_drift",
-    "lsh_recall_eval",
-    "stl_residual_anomalies",
-    "value_qte_deciles",
-    "ann_recall_eval",
-    "doc_mahalanobis_outliers",
-    "price_indices_monthly",
-    "copurchase_assortativity",
-    "cem_promo_att",
-    "collocations_g2",
-    "revenue_shift_share",
-    "durbin_watson_trend",
-    "yule_k_by_source",
-    "cluster_source_nmi",
-]
-
-# Driver-visible head (first 50 entries = the r8 CORRECTNESS window).
-# r7 closed 48 green + 2 rows-only-by-contract, zero reds, so this is
-# the pre-staged r8 queue with THREE slot swaps mandated by the r7
-# verdict (#3 and #4): the two recall scoreboards whose contracts
-# were TIGHTENED this round (rows-only -> oracle-paired faces) and
-# the new png_roundtrip_audit take the tail; the three lowest-value
-# r1 re-checks they displace (distinct_projection — trivial built-in
-# distinct; customers_without_orders — same semi/anti join file as
-# customers_with_orders, which stays; sliding_hourly — same window
-# fan-out code as tumbling_hourly, which stays) move to the head of
-# _R9_WINDOW below. Composition: (1) the 10-entry record-less
-# remainder in declaration order incl. the two r6 PII faces; (2)
-# numeric_corr_matrix, whose r3 record predates the r4 int64-lattice
-# reimplementation; (3) the r1-vintage re-checks, in declaration
-# order; (4) contract changes: quality_classifier_scores + bpe_merges
-# (r7 tightenings), lsh_recall_eval + ann_recall_eval (r8
-# tightenings), jpeg_roundtrip_audit (r7 addition),
-# png_roundtrip_audit (r8 addition).
-_R8_WINDOW = [
-    # (1) record-less remainder
-    "event_hour_mi",
-    "embedding_intrinsic_dim",
-    "hopkins_statistic",
-    "catalog_size_estimates",
-    "promo_return_odds",
-    "churn_logrank_test",
-    "filter_mcnemar_test",
-    "distance_correlation_daily",
-    "pii_scan_report",
-    "pii_redaction_audit",
-    # (2) reimplementation re-check
-    "numeric_corr_matrix",
-    # (3) r1-vintage re-checks (latest driver record = round 1)
-    "null_counts",
-    "value_counts_topk",
-    "summary_stats",
-    "count_by_day",
-    "dedup_latest_event",
-    # (dedup_first_event's r1 re-check yielded its slot to the r7
-    # jpeg face: same W1/W3 window code path as dedup_latest, lowest
-    # re-check value in the r1 tail; distinct_projection and
-    # customers_without_orders yield theirs to the r8 tightened
-    # scoreboards per the header note)
-    "user_activity",
-    "revenue_by_region",
-    "customers_with_orders",
-    "daily_slice",
-    "ts_range_filter",
-    "multi_source_union",
-    "string_normalize",
-    "date_math",
-    "bucketize",
-    "json_extract",
-    "text_stats",
-    "doc_fingerprint",
-    "lang_id",
-    "quality_by_source",
-    "vocab_topk",
-    "exact_dedup_groups",
-    "embedding_near_dups",
-    "levenshtein_near_dups",
-    "embedding_topk",
-    "embedding_norms",
-    "tumbling_hourly",
-    # (sliding_hourly yields its slot to png_roundtrip_audit)
-    "sessionize",
-    "session_stats",
-    "asof_join_last_order",
-    "range_join_same_day",
-    "minhash_dedup_docs",
-    "ann_topk_lsh",
-    "simhash_dedup_docs",
-    # (4) contract-change re-checks + codec-audit additions
-    "quality_classifier_scores",
-    "bpe_merges",
-    "jpeg_roundtrip_audit",
-    "lsh_recall_eval",
-    "ann_recall_eval",
-    "png_roundtrip_audit",
-]
-
-# r9 window (WIRED — queries() serves this head; the r8 driver record
-# landed as CORRECTNESS_r08: 47 green + 3 rows-only-by-contract, 0
-# red, completing the ledger). With the r8 window the driver
-# ledger is complete (336/336 entries have a record); r9 starts the
-# CURRENCY rotation the r7 verdict prescribed (#6): oldest vintage
-# first. Head: the four entries whose latest record is still
-# r1-vintage (the three slot-swap displacements above plus
-# dedup_first_event, displaced in r7); then the late-r8
-# pca_embeddings contract change; then all 41 r2-vintage entries in
-# declaration order; then the first 4 r3-vintage entries
-# (user_retention_cohorts … user_set_ops). After this window ~41
-# r3-vintage entries remain for r10.
-# Pre-staged r10 rotation (NOT yet wired — queries() serves
-# _R9_WINDOW until the r9 driver record lands). Composition, by the
-# currency rule (a changed face outranks a stale re-check):
-# (1) the 13 faces whose CODE or CONTRACT changed in r9 OUTSIDE the
-#     r9 window — pricing_summary's wide sums became exact DECIMAL
-#     output, bitmap_filter_revenue now dispatches via
-#     key_filter_auto, and the eleven sf1-sweep seam fixes
-#     (stl/welch/anova/pairwise_welch/haar/adf/granger + the four
-#     synth-media faces) — all sweep-verified green at
-#     sf0.01/sf0.1/sf1 at r9 HEAD, but the bar is a driver record;
-# (2) the two displaced r3 re-checks (price_histogram, user_set_ops);
-# (3) the r3-vintage remainder in declaration order. After this
-#     window 4 r3-vintage entries remain for r11.
-_R10_QUEUE = [
-    # (0) late-r9 full-pairing change (rows-only -> oracle-paired):
-    # first oracle-paired driver record lands here
-    "ann_topk_lsh",
-    "pricing_summary",
-    "bitmap_filter_revenue",
-    "stl_daily_revenue",
-    "welch_value_ttest",
-    "anova_value_by_type",
-    "pairwise_welch_fdr",
-    "haar_energy_daily",
-    "adf_daily_revenue",
-    "granger_count_to_revenue",
-    "audio_pcm_metrics",
-    "audio_window_report",
-    "image_ppm_metrics",
-    "image_downsample_metrics",
-    "price_histogram",
-    "user_set_ops",
-    "part_metrics_unpivot",
-    "returnflag_price_quartiles",
-    "daily_revenue_gapfilled",
-    "doc_repetition_metrics",
-    "ship_latency_quartiles",
-    "salted_value_stats",
-    "active_users_trailing_7d",
-    "daily_orders_vs_events_full_outer",
-    "referential_audit",
-    "activity_streaks",
-    "revenue_pareto",
-    "silver_products",
-    "session_event_paths",
-    "value_zscore_outliers",
-    "scd2_customer_priority",
-    "dedup_components_star",
-    "media_decode",
-    "media_frame_sample",
-    "boilerplate_fraction",
-    "oov_ratio",
-    "incremental_dedup_new_docs",
-    "temperature_mix_weights",
-    "value_drift_by_bucket",
-    "supplier_influence_rank",
-    "near_dup_triangles",
-    "profile_events",
-    "doc_perplexity",
-    "semdedup_keep",
-    "jaccard_prefix_join",
-    "winsorized_value_stats",
-    "order_rank_metrics",
-    "revenue_attribution",
-    "daily_revenue_interpolated",
-    "market_basket_lift",
-]
-# (rfm_segments moves to the r11 remainder to keep the queue at 50)
+# Faces whose outputs changed since their latest driver record: that
+# record no longer describes them, so they re-check first.
+CHANGED_SINCE_RECORD = frozenset({
+    "pricing_summary",  # sum_disc_price / sum_charge DECIMAL -> DOUBLE
+})
 
 
-_R9_WINDOW = [
-    # (1) r1-vintage re-checks
-    "dedup_first_event",
-    "distinct_projection",
-    "customers_without_orders",
-    "sliding_hourly",
-    # (2) r8 contract change (pca_embeddings tightened to the
-    # oracle-paired contract face late in r8, after the r8 window was
-    # frozen — a contract change outranks an r3 re-check, so it takes
-    # part_metrics_unpivot's tail slot)
-    "pca_embeddings",
-    # (3) r2-vintage re-checks, declaration order
-    "rollup_revenue",
-    "cube_order_counts",
-    "pivot_linestatus",
-    "grouping_sets_revenue",
-    "funnel_conversion",
-    "simple_filter_agg",
-    "shipping_priority",
-    "large_volume_customers",
-    "small_quantity_revenue",
-    "volume_shipping",
-    "best_supplier_per_part",
-    "promo_part_suppliers",
-    "last_shipper_wins",
-    "order_count_histogram",
-    "part_supplier_counts",
-    "idle_rich_customers",
-    "late_ship_priority_counts",
-    "returned_top_customers",
-    "promo_revenue_pct",
-    "market_share",
-    "profit_by_nation_year",
-    "ngram_jaccard_pairs",
-    "dedup_components",
-    "mllib_lsh_join",
-    "local_supplier_revenue",
-    "part_value_concentration",
-    "top_supplier_revenue",
-    "bracket_revenue",
-    "hash_split",
-    "decontaminate",
-    "gopher_quality",
-    "source_mix_sample",
-    "pack_sequences",
-    "chunk_documents",
-    "pseudonymize_events",
-    "split_leakage_pairs",
-    "source_overlap_matrix",
-    "near_dedup_corpus",
-    "stratified_sample",
-    "bigram_lm",
-    "orders_asof_priority_regime",
-    # (4) r9 contract changes (verdict #4: ivf_topk / pq_topk
-    # tightened rows-only -> oracle-paired contract faces THIS round,
-    # before the window ran — a contract change outranks an r3
-    # re-check, so they take the last two r3 slots; price_histogram
-    # and user_set_ops move to the r10 queue head)
-    "ivf_topk",
-    "pq_topk",
-    # (5) r3-vintage head, declaration order
-    "user_retention_cohorts",
-    "event_type_cooccurrence",
-]
-
-# r5 window kept for the ledger (CORRECTNESS_r05 rows map to this).
-_R5_WINDOW = [
-    # (1) r4's one red row — the face now emits scalars only
-    "pca_embeddings",
-    # (2) rows-only contracts tightened to oracle pairs this round
-    "approx_aggregates",
-    "percentile_sketch_error",
-    # (3) operator+oracle changed this round (ADVICE fixes)
-    "pairwise_welch_fdr",
-    "adf_daily_revenue",
-    # (4) record-less rotation, registry declaration order
-    "audio_pcm_metrics",
-    "audio_window_report",
-    "image_ppm_metrics",
-    "revenue_gini_by_nation",
-    "promo_lift_slope",
-    "zipf_fit_by_source",
-    "token_entropy_by_source",
-    "ewma_recursive_daily",
-    "cohort_retention_matrix",
-    "supplier_ontime_wilson",
-    "leadtime_weighted_median",
-    "label_centroid_cosine",
-    "hll_distinct_users",
-    "value_drift_mwu",
-    "kaplan_meier_churn",
-    "stl_daily_revenue",
-    "holt_linear_daily",
-    "ab_conversion_ztest",
-    "lorenz_curve_deciles",
-    "kmeans_lattice_clusters",
-    "spearman_rank_corr",
-    "order_backlog_sweep",
-    "view_purchase_xcorr",
-    "rrf_fusion_search",
-    "welch_value_ttest",
-    "event_trigram_paths",
-    "rolling_median_7d",
-    "embedding_dim_stats",
-    "jw_blocked_match",
-    "forecast_backtest_mase",
-    "chi2_independence_test",
-    "doclen_percentile_by_source",
-    "user_event_entropy",
-    "bootstrap_mean_ci",
-    "inverted_index_postings",
-    "target_encode_loo",
-    "twap_user_day",
-    "window_funnel_depth",
-    "ols_two_factor",
-    "event_pmi_pairs",
-    "langid_confusion",
-    "dow_hour_activity",
-    "sq8_quantization_error",
-    "vocab_coverage_curve",
-    "event_fano_factor",
-]
-
-# r4 window kept for the ledger (CORRECTNESS_r04 rows map to this).
-_R4_WINDOW = [
-    # (1) r3's one red row — oracle CAST fixed this round
-    "value_mad_outliers",
-    # (2) the 16 record-less round-3 entries, per the r3 rotation note
-    "part_match_blocking",
-    "collapse_adjacent_repeats",
-    "quality_classifier_scores",  # rows-only (L-BFGS)
-    "peak_concurrent_sessions",
-    "bm25_search",
-    "dow_baseline_anomalies",
-    "value_drift_ks",  # oracle-paired r4
-    "key_skew_profile",
-    "trade_reach",
-    "blamed_suppliers",
-    "revenue_day_over_day",
-    "boilerplate_removed",
-    "pca_embeddings",  # rows-only (eigenbasis)
-    "weighted_doc_sample",
-    "revenue_changepoint",
-    "session_window_agg",
-    # (3) output types aligned by the round-4 typed gate — re-check
-    "customer_deciles",
-    "tfidf_topk",
-    "corpus_filter",
-    # (4) operators built in round 4 (inserted as they land)
-    "containment_pairs",
-    "canonical_by_quality",
-    "eval_overlap_fraction",
-    "duplicated_span_metrics",
-    "source_lang_diversity",
-    "tfidf_cosine_pairs",
-    "funnel_time_to_convert",
-    "markov_transitions",
-    "benford_first_digit",
-    "daily_revenue_acf",
-    "distinctive_terms_by_source",
-    "bollinger_daily_revenue",
-    "near_dup_cluster_sizes",
-    "remove_duplicated_spans",
-    "new_vs_returning_monthly",
-    "order_gap_quartiles",
-    "theil_sen_trend",
-    "token_len_histogram",
-    "linear_touch_attribution",
-    "brand_repeat_purchase",
-    "weekday_seasonality_index",
-    "part_size_price_contingency",
-    # (5) r1-record re-checks (decimal surfaces and window functions
-    # first, per the r3 verdict)
-    "pricing_summary",
-    "top_products_daily",
-    "running_totals",
-    "moving_avg_7d",
-    "daily_revenue",
-    "category_profile",
-    "finance_kpis",
-    "duplicate_check",
-]
+def driver_order(
+    names: Iterable[str],
+    has_oracle: Container[str],
+    records_dir: str = os.path.dirname(os.path.abspath(__file__)),
+    changed: Container[str] = CHANGED_SINCE_RECORD,
+) -> list[str]:
+    """Sort ``names`` by (vintage, name). A face's vintage is the round
+    of its latest current CORRECTNESS_r<N>.json record in
+    ``records_dir``, 0 when it has none or is in ``changed``. A record
+    is current when rows, schema and hash all match, or when it is a
+    ``no_oracle`` record and the face still has no oracle twin."""
+    vintage = dict.fromkeys(names, 0)
+    for fn in os.listdir(records_dir):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fn)
+        if not m:
+            continue
+        with open(os.path.join(records_dir, fn)) as f:
+            for name, rec in json.load(f).items():
+                if rec.get("err") == "no_oracle":
+                    current = name not in has_oracle
+                else:
+                    current = all(
+                        rec.get(k) is True
+                        for k in ("rows_match", "schema_match", "hash_match")
+                    )
+                if current and name in vintage and name not in changed:
+                    vintage[name] = max(vintage[name], int(m[1]))
+    return sorted(vintage, key=lambda n: (vintage[n], n))
 
 
 def _median_polish_sql(sweeps: int = 2) -> str:
@@ -2435,18 +1494,25 @@ def _pii_valid_cards_sql(txt: str) -> str:
 def _oracle_sql_literals() -> dict[str, str]:
     return {
         "pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-                   SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) AS sum_disc_price,
-                   SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(28,6))) AS sum_charge,
-                   CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_quantity) AS avg_qty,
-                   CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_extendedprice) AS avg_price,
-                   CAST(SUM(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_discount) AS avg_disc,
-                   COUNT(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
+            WITH s AS (
+                SELECT l_returnflag, l_linestatus,
+                       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+                       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+                       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6))) * 1000000 AS DECIMAL(38,0)) AS disc_q,
+                       CAST(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(28,6))) * 1000000 AS DECIMAL(38,0)) AS charge_q,
+                       CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_quantity) AS avg_qty,
+                       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(l_extendedprice) AS avg_price,
+                       CAST(SUM(CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE) / COUNT(l_discount) AS avg_disc,
+                       COUNT(*) AS count_order
+                FROM lineitem
+                WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+                GROUP BY l_returnflag, l_linestatus
+            )
+            SELECT l_returnflag, l_linestatus, sum_qty, sum_base_price,
+                   """ + dec_to_double_split_sql("disc_q") + """ / 1000000.0 AS sum_disc_price,
+                   """ + dec_to_double_split_sql("charge_q") + """ / 1000000.0 AS sum_charge,
+                   avg_qty, avg_price, avg_disc, count_order
+            FROM s
         """,
         "daily_revenue": """
             SELECT CAST(o_orderdate AS DATE) AS activity_date,

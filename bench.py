@@ -8,12 +8,11 @@ sink); the reported figure is the min of 2 consecutive runs, which
 strips one-shot codegen-compile cost and host noise and reports the
 engine's reproducible steady-state throughput.
 
-r10 measurement fix (r9 verdict #2): the operator memo caches
-(session_cache registry — LPA fixed point, lattice k-means, ANN index
-and truth, quality-classifier fit) are EMPTIED before every timed run,
-so each figure measures computation from the parquet inputs rather
-than a warm-pass cache hit. ~8 faces get honestly slower as a result;
-the deltas are documented in OPTIMIZATION_r10.md / BENCH.md.
+Every timed run starts cold (``time_cold``): the operator memo caches
+and Spark's SQL cache are emptied first, so each figure measures
+computation from the parquet inputs rather than a warm-pass cache hit.
+``warm_engine`` and ``time_cold`` are the timing core shared with
+tools/qtime.py.
 """
 
 from __future__ import annotations
@@ -23,41 +22,96 @@ import os
 import re
 import sys
 import time
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from doeecommerce_datapipeline_spark.io import TABLES, table  # noqa: E402
 from doeecommerce_datapipeline_spark.operators import (  # noqa: E402
     session_cache,
 )
 from doeecommerce_datapipeline_spark.session import get_spark  # noqa: E402
 
 
+def warm_engine(spark: SparkSession, sf_dir: str) -> None:
+    """Warm the JVM/codegen/parquet-footer paths once so the first timed
+    query doesn't absorb session startup: read every table's footer and
+    exercise each execution-engine class once (hash agg, broadcast
+    join, window, explode), so C2/codegen compilation of those code
+    paths isn't billed to whichever query runs first — measured ~4x
+    inflation on the first agg-heavy query without this."""
+    for t in TABLES:
+        table(spark, sf_dir, t).limit(1).collect()
+    li = table(spark, sf_dir, "lineitem").limit(10_000)
+    li.agg(F.sum("l_quantity"), F.countDistinct("l_orderkey")).collect()
+    n = table(spark, sf_dir, "nation")
+    li.join(F.broadcast(n), li.l_suppkey == n.n_nationkey, "left").count()
+    li.select(
+        F.row_number()
+        .over(Window.partitionBy("l_orderkey").orderBy("l_linenumber"))
+        .alias("rn")
+    ).count()
+    li.select(F.explode(F.array("l_quantity", "l_tax"))).count()
+
+
+def time_cold(
+    spark: SparkSession,
+    fn: Callable[[SparkSession, str], DataFrame],
+    sf_dir: str,
+    runs: int,
+) -> float:
+    """Min wall seconds over ``runs`` cold-state runs of ``fn``: construct
+    plus execute to the noop sink.
+
+    Cold state: before every run the operator memo caches
+    (session_cache: LPA fixed point, lattice k-means, ANN index and
+    truth, quality-classifier fit) and Spark's SQL cache are emptied.
+    Otherwise a run times cache hits on an earlier run's trained state
+    or on its persisted intermediates, which the CacheManager matches
+    across constructions by plan semantics. The timed region includes
+    construction: iterative operators materialize per-round state at
+    build time, and that work must not escape the clock. The noop sink
+    executes every expression distributed-side without funnelling rows
+    through the py4j driver socket. Min of N: run-to-run variance on a
+    noisy host is 35-50% (one-shot codegen compiles, co-tenant load);
+    the min is the engine's reproducible throughput."""
+    best = None
+    for _ in range(runs):
+        session_cache.clear_all()
+        spark.catalog.clearCache()
+        t0 = time.perf_counter()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        el = time.perf_counter() - t0
+        best = el if best is None else min(best, el)
+    return best
+
+
 def _prior_timings(
     repo_dir: str, sf: float | None, out_file: str | None
 ) -> dict[str, float]:
-    """Previous round's committed per-query map (BENCH_LOCAL_r{N-1}),
-    used by the outlier re-time pass. Returns {} when no prior round
-    exists or the prior record was taken at a different scale factor
-    (cross-SF times aren't comparable). Override the reference file
-    with SPARK_GRAFT_BENCH_REF. The file THIS run writes (out_file)
-    is never a candidate — a mid-round re-run must compare against
-    the committed cross-round record, not its own first attempt
-    (caught live in r7: the second run inherited the first run's
-    contention spikes as 'priors' and skipped re-timing them)."""
-    ref = os.environ.get("SPARK_GRAFT_BENCH_REF")
-    if ref is None:
-        out_abs = os.path.abspath(out_file) if out_file else None
-        cands = []
-        for fn in os.listdir(repo_dir):
-            m = re.fullmatch(r"BENCH_LOCAL_r(\d+)\.json", fn)
-            if m and os.path.abspath(os.path.join(repo_dir, fn)) != out_abs:
-                cands.append((int(m.group(1)), fn))
-        if not cands:
-            return {}
-        ref = os.path.join(repo_dir, max(cands)[1])
+    """Previous round's committed per-query map (the newest
+    BENCH_LOCAL_r{N}.json), used by the outlier re-time pass. Returns
+    {} when no prior round exists or the prior record was taken at a
+    different scale factor (cross-SF times aren't comparable). The
+    file THIS run writes (out_file) is never a candidate — a mid-round
+    re-run must compare against the committed cross-round record, not
+    its own first attempt (caught live in r7: the second run inherited
+    the first run's contention spikes as 'priors' and skipped
+    re-timing them)."""
+    out_abs = os.path.abspath(out_file) if out_file else None
+    cands = []
+    for fn in os.listdir(repo_dir):
+        m = re.fullmatch(r"BENCH_LOCAL_r(\d+)\.json", fn)
+        if m and os.path.abspath(os.path.join(repo_dir, fn)) != out_abs:
+            cands.append((int(m.group(1)), fn))
+    if not cands:
+        return {}
     try:
-        with open(ref) as f:
+        with open(os.path.join(repo_dir, max(cands)[1])) as f:
             doc = json.load(f)
     except (OSError, ValueError):
         return {}
@@ -73,95 +127,27 @@ def main() -> None:
     sf = float(m.group(1)) if m else None
 
     spark = get_spark("bench", cpus=cpus, shuffle_partitions=cpus)
+    warm_engine(spark, sf_dir)
 
-    # warm the JVM/codegen/parquet-footer paths once so the first timed
-    # query doesn't absorb session startup (standard bench hygiene; the
-    # queries themselves are still cold-cache single runs)
-    from pyspark.sql import functions as F  # noqa: E402
-
-    from doeecommerce_datapipeline_spark.io import TABLES, table  # noqa: E402
-
-    for t in TABLES:
-        table(spark, sf_dir, t).limit(1).collect()
-    # exercise each execution-engine class once (hash agg, broadcast
-    # join, window, explode) so C2/codegen compilation of those code
-    # paths isn't billed to whichever registry query happens to run
-    # first — measured ~4x inflation on the first agg-heavy query
-    # without this
-    from pyspark.sql import Window  # noqa: E402
-
-    li = table(spark, sf_dir, "lineitem").limit(10_000)
-    li.agg(F.sum("l_quantity"), F.countDistinct("l_orderkey")).collect()
-    n = table(spark, sf_dir, "nation")
-    li.join(F.broadcast(n), li.l_suppkey == n.n_nationkey, "left").count()
-    li.select(
-        F.row_number()
-        .over(Window.partitionBy("l_orderkey").orderBy("l_linenumber"))
-        .alias("rn")
-    ).count()
-    li.select(F.explode(F.array("l_quantity", "l_tax"))).count()
-
-    # full untimed warm pass (disable with SPARK_GRAFT_BENCH_WARM=0):
-    # JIT keeps compiling engine classes across the first ~30 queries,
-    # so whichever entries sit at the registry head absorb 2-4x
-    # inflation (measured: the round-3 window rotation made the SAME
-    # unchanged queries look 2x slower purely by moving them to the
-    # front). One warm execution of every query first makes the timed
-    # figures position-independent steady-state throughput — the
-    # number that actually compares across rounds. Data is re-read
-    # from parquet each run either way (nothing is persisted).
+    # Full untimed warm pass: JIT keeps compiling engine classes across
+    # the first ~30 queries, so whichever entries run first absorb 2-4x
+    # inflation. One warm execution of every query makes the timed
+    # figures position-independent steady-state throughput.
     # FIXED alphabetical execution order, independent of the registry's
-    # driver-window rotation: the r6 position audit measured a
-    # late-position tax (median 1.22x, mean 1.86x on queries the
-    # rotation displaced by >50 slots — JVM/GC state accumulates over
-    # ~660 executions), so registry-order timing made every rotation
-    # look like regressions. A fixed order keeps the per-query position
-    # constant across rounds; deltas are code again.
+    # driver order: the r6 position audit measured a late-position tax
+    # (median 1.22x, mean 1.86x on queries moved by >50 slots — JVM/GC
+    # state accumulates over ~660 executions), so registry-order timing
+    # made every reorder look like regressions.
     ordered = sorted(entrymod.queries().items())
-    if os.environ.get("SPARK_GRAFT_BENCH_WARM", "1") != "0":
-        for name, fn in ordered:
-            try:
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception:
-                pass  # the timed loop surfaces real failures
+    for name, fn in ordered:
+        try:
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        except Exception:
+            pass  # the timed loop surfaces real failures
 
     timings: dict[str, float] = {}
     for name, fn in ordered:
-        # min of 2 runs: measured run-to-run variance on a noisy host
-        # is 35-50% (one-shot codegen compiles + co-tenant load); the
-        # min is the engine's reproducible throughput. The timed region
-        # includes construction: iterative operators (dedup_components)
-        # legitimately materialize per-round state at build time, and
-        # that work must not escape the clock.
-        best = None
-        for _ in range(2):
-            # r10 (r9 verdict #2): empty every operator memo cache so
-            # the timed run computes trained/fixed-point state from
-            # the parquet inputs — the untimed warm pass above
-            # populated them, so ~8 faces (LPA pair, lattice-kmeans
-            # pair, ANN scoreboard, quality-classifier consumers)
-            # previously timed cache hits. Intra-run evaluate-once
-            # sharing inside ONE query is untouched.
-            session_cache.clear_all()
-            # ... and drop every SQL-cache entry: operators that
-            # persist() intermediates register them in the
-            # CacheManager, which matches SEMANTICALLY IDENTICAL
-            # plans across constructions — without this, a timed
-            # run's materializations silently become cache hits on
-            # the warm pass's still-persisted data (cross-run
-            # caching, the exact thing the cold-state rule forbids)
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            # noop sink: every expression/shuffle/join executes
-            # distributed-side, nothing funnels through the py4j driver
-            # socket — the timing measures the engine, not the client
-            df.write.format("noop").mode("overwrite").save()
-            el = time.perf_counter() - t0
-            best = el if best is None else min(best, el)
-        timings[name] = round(best, 4)
+        timings[name] = round(time_cold(spark, fn, sf_dir, 2), 4)
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
 
     # Outlier re-time pass (r6 verdict #3): ~12 s of the committed r6
@@ -185,16 +171,7 @@ def main() -> None:
         p = prior.get(name)
         if p is None or timings[name] <= max(3 * p, 0.3):
             continue
-        best = None
-        for _ in range(2):
-            session_cache.clear_all()  # same cold-state rule as above
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            fns[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            el = time.perf_counter() - t0
-            best = el if best is None else min(best, el)
+        best = time_cold(spark, fns[name], sf_dir, 2)
         retimed[name] = timings[name]
         timings[name] = round(min(timings[name], best), 4)
         print(

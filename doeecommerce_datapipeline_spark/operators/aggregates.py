@@ -13,11 +13,12 @@ approx_count_distinct (HLL) at 100TB where exactness isn't contractual.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import (
     charge_sum,
+    dec_to_double_split,
     disc_rev_sum,
     lattice_2dp,
     money_lattice_avg,
@@ -25,6 +26,14 @@ from ..functions.scalars import (
     money_lattice_sum,
 )
 from ..io import table
+
+
+def _split_6dp(dec_sum: Column) -> Column:
+    """An exact 6-dp decimal sum as DOUBLE via dec_to_double_split of
+    its scaled integer (twin: dec_to_double_split_sql(...) / 1e6)."""
+    return dec_to_double_split(
+        (dec_sum * F.lit(1000000)).cast("decimal(38,0)")
+    ) / F.lit(1000000.0)
 
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,22 +49,17 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         l.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            # r9 opt: every measure rides an exact LONG lattice sum
-            # (guide §1.2/§2.3 — the per-row double→decimal casts were
-            # this scan's dominant cost) and is reconstructed to the
-            # IDENTICAL decimal type/value on the 4 output rows.
+            # every measure rides an exact LONG lattice sum (no per-row
+            # double→decimal cast on the fact scan)
             money_lattice_dsum("l_quantity").alias("sum_qty"),
             money_lattice_dsum("l_extendedprice").alias("sum_base_price"),
-            # the two wide product-sums are emitted as EXACT DECIMAL,
-            # not double: their scaled integer crosses 2^53 at sf1
-            # (sum_charge ≈ 2.8e10 × 10^6 ≈ 2.8e16 > 2^53) and past
-            # that boundary engines' int128→double conversions
-            # double-round differently by 1 ulp — caught by the r9 sf1
-            # parity sweep. A decimal output has no conversion seam at
-            # ANY scale; the scale-2 money sums keep the double face
-            # (their boundary is ~9e13, three orders above sf1)
-            disc_rev_sum().alias("sum_disc_price"),
-            charge_sum().alias("sum_charge"),
+            # the two 6-dp product-sums have scaled integers past 2^53
+            # at sf1 (sum_charge ≈ 2.8e10 × 10^6), where each engine's
+            # native decimal→double conversion rounds its own way; the
+            # engine-agreed limb split of the scaled integer plus one
+            # IEEE division gives the same DOUBLE on both sides
+            _split_6dp(disc_rev_sum()).alias("sum_disc_price"),
+            _split_6dp(charge_sum()).alias("sum_charge"),
             money_lattice_avg("l_quantity").alias("avg_qty"),
             money_lattice_avg("l_extendedprice").alias("avg_price"),
             money_lattice_avg("l_discount", "decimal(18,4)").alias(

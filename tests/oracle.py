@@ -21,6 +21,12 @@ TRUNCATES where Spark rounds — CAST(0.1823215567939546 AS
 DECIMAL(18,9)) is ...556 in DuckDB, ...557 in Spark. Bake constants
 PRE-ROUNDED to the target scale on both sides (round(x, 9) in Python,
 then the literal casts exactly everywhere).
+
+NO DECIMAL OUTPUTS (round-10 lesson, pricing_summary): the driver's
+typed hash disagrees across engines on DECIMAL cells even when rows,
+types and values all match, and str() of a Decimal cannot see that.
+`compare` fails any DECIMAL output column on either engine; surface
+money as DOUBLE (functions/scalars.dec_to_double_split past 2^53).
 """
 
 from __future__ import annotations
@@ -81,6 +87,12 @@ _DUCK_SCALARS = {
 }
 
 _DEC_RE = re.compile(r"^decimal\((\d+),\s*(\d+)\)$")
+_HAS_DEC_RE = re.compile(r"decimal\(", re.IGNORECASE)
+
+
+def decimal_columns(types: dict[str, str]) -> list[str]:
+    """Columns whose declared type holds a DECIMAL, nested ones too."""
+    return sorted(c for c, t in types.items() if _HAS_DEC_RE.search(t))
 
 
 def canon_spark_type(dt: str) -> str:
@@ -169,6 +181,13 @@ def compare(spark_df, sql: str, sf_dir: str) -> list[str]:
     if sorted(s_cols) != sorted(o_cols):
         problems.append(f"columns differ: spark={sorted(s_cols)} oracle={sorted(o_cols)}")
         return problems
+
+    for side, types in (("spark", s_types), ("oracle", o_types)):
+        for c in decimal_columns(types):
+            problems.append(
+                f"column '{c}' is {types[c]} on {side} — the driver's typed "
+                f"hash disagrees across engines on DECIMAL; surface it as DOUBLE"
+            )
 
     # typed comparison — mirrors the driver's typed value hash
     for c in sorted(s_cols):

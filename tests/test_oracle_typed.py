@@ -12,7 +12,12 @@ and the type lattice maps both engines consistently.
 import pyspark.sql.functions as F
 import pytest
 
-from tests.oracle import canon_duck_type, canon_spark_type, compare
+from tests.oracle import (
+    canon_duck_type,
+    canon_spark_type,
+    compare,
+    decimal_columns,
+)
 
 
 def _orders_count_df(spark, sf_dir):
@@ -79,3 +84,33 @@ def test_int_width_mismatch_fails(spark, sf_dir):
 )
 def test_type_lattice(spark_t, duck_t, same):
     assert (canon_spark_type(spark_t) == canon_duck_type(duck_t)) is same
+
+
+def test_decimal_output_fails_local_gate(spark, sf_dir):
+    """The pricing_summary class (CORRECTNESS_r10): the driver's typed
+    hash disagrees on DECIMAL cells even when rows, types and values
+    all match, so a DECIMAL output fails locally, named per engine."""
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    df = orders.agg(
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
+    )
+    sql = """
+        SELECT SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev FROM orders
+    """
+    problems = compare(df, sql, sf_dir)
+    for side in ("spark", "oracle"):
+        assert any(
+            "'rev'" in p and f"on {side}" in p and "DECIMAL" in p
+            for p in problems
+        ), problems
+
+
+def test_decimal_columns_sees_nested_types():
+    types = {
+        "a": "decimal(38,6)",
+        "b": "DECIMAL(18,2)[]",
+        "c": "struct<decimal_places:int,v:decimal(9,2)>",
+        "d": "struct<decimal_places:int>",
+        "e": "double",
+    }
+    assert decimal_columns(types) == ["a", "b", "c"]

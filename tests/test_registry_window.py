@@ -1,15 +1,26 @@
-"""The r9 driver window must be well-formed: 50 entries, all resolvable,
-no duplicates, no registry entry lost by the reorder; the ledger is
-complete since r8 (336/336 driver records), so every r9 slot must spend
-itself on the CURRENCY rotation — an r1–r3-vintage record or a contract
-change (pca_embeddings late-r8; ivf_topk / pq_topk tightened r9)."""
+"""The driver checks the first 50 entries of queries(). Their order is
+derived from the committed CORRECTNESS_r*.json records by
+``driver_order``: one sort key, (vintage, name), where vintage is the
+round of a face's latest current record (0 for none, red or changed).
+The synthetic-record tests pin the rule; the committed-record tests pin
+the served window and the lossless reorder."""
 
 import json
 import os
+import re
 
 import __spark_entry__ as entrymod
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+RED = {"rows_match": True, "schema_match": True, "hash_match": False, "err": None}
+NO_ORACLE = {
+    "rows_match": None,
+    "schema_match": None,
+    "hash_match": None,
+    "err": "no_oracle",
+}
 
 
 def _records_through(last_round):
@@ -21,36 +32,101 @@ def _records_through(last_round):
     return rec
 
 
+def _write_rounds(tmp_path, rounds):
+    for r, recs in rounds.items():
+        with open(tmp_path / f"CORRECTNESS_r{r:02d}.json", "w") as f:
+            json.dump(recs, f)
+    return str(tmp_path)
+
+
+def _order(tmp_path, rounds, names, has_oracle=None, changed=frozenset()):
+    if has_oracle is None:
+        has_oracle = set(names)
+    return entrymod.driver_order(
+        names, has_oracle, _write_rounds(tmp_path, rounds), changed
+    )
+
+
+def test_no_record_before_a_record(tmp_path):
+    assert _order(tmp_path, {1: {"a": GREEN}}, ["a", "b"]) == ["b", "a"]
+
+
+def test_red_record_counts_as_no_record(tmp_path):
+    rounds = {
+        1: {"a": GREEN, "b": GREEN},
+        2: {"a": RED, "c": RED},
+        3: {"b": GREEN},
+    }
+    # a falls back to its r1 record; c's only record is red
+    assert _order(tmp_path, rounds, ["a", "b", "c"]) == ["c", "a", "b"]
+
+
+def test_no_oracle_record_is_stale_once_the_face_has_an_oracle(tmp_path):
+    rounds = {1: {"a": GREEN}, 2: {"b": NO_ORACLE}}
+    assert _order(tmp_path, rounds, ["a", "b"], has_oracle={"a", "b"}) == [
+        "b",
+        "a",
+    ]
+
+
+def test_no_oracle_record_is_current_without_an_oracle(tmp_path):
+    rounds = {1: {"a": GREEN}, 2: {"b": NO_ORACLE}}
+    assert _order(tmp_path, rounds, ["a", "b"], has_oracle={"a"}) == ["a", "b"]
+
+
+def test_older_record_before_newer(tmp_path):
+    rounds = {1: {"z": GREEN}, 2: {"a": GREEN}, 10: {"m": GREEN}}
+    assert _order(tmp_path, rounds, ["a", "m", "z"]) == ["z", "a", "m"]
+
+
+def test_ties_break_by_name(tmp_path):
+    rounds = {3: {"c": GREEN, "a": GREEN, "b": GREEN}}
+    assert _order(tmp_path, rounds, ["c", "b", "a"]) == ["a", "b", "c"]
+
+
+def test_changed_set_forces_the_head(tmp_path):
+    rounds = {1: {"a": GREEN}, 5: {"z": GREEN}}
+    got = _order(tmp_path, rounds, ["a", "z"], changed=frozenset({"z"}))
+    assert got == ["z", "a"]
+
+
+def test_empty_directory_gives_name_order(tmp_path):
+    assert _order(tmp_path, {}, ["b", "c", "a"]) == ["a", "b", "c"]
+
+
 def test_window_names_resolve_and_lead():
-    """r10: the r9 driver record landed (CORRECTNESS_r09, 0 red), so
-    queries() now serves the pre-staged _R10_QUEUE as the driver
-    correctness window; _R9_WINDOW stays as the r9 ledger map."""
+    """The served order is the (vintage, name) order of the committed
+    records, recomputed here from the rule; its first 50 names are
+    distinct and resolvable, and no face outside them has a smaller
+    key than one inside."""
     q = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    vintage = dict.fromkeys(q, 0)
+    for fn in os.listdir(HERE):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fn)
+        if not m:
+            continue
+        with open(os.path.join(HERE, fn)) as f:
+            for n, rec in json.load(f).items():
+                if rec["err"] == "no_oracle":
+                    ok = n not in oracles
+                else:
+                    ok = rec["rows_match"] and rec["schema_match"] and rec["hash_match"]
+                if ok and n in vintage and n not in entrymod.CHANGED_SINCE_RECORD:
+                    vintage[n] = max(vintage[n], int(m[1]))
+    key = {n: (vintage[n], n) for n in q}
     names = list(q)
-    win = entrymod._R10_QUEUE
-    assert len(win) == len(set(win)), "duplicate names in _R10_QUEUE"
-    assert len(win) == 50, f"driver checks exactly 50; window has {len(win)}"
-    assert names[: len(win)] == win, "window must lead the registry"
-    r9 = entrymod._R9_WINDOW
-    assert len(r9) == len(set(r9)) == 50, "_R9_WINDOW ledger map malformed"
+    assert names == sorted(q, key=key.__getitem__)
+    win = names[:50]
+    assert len(set(win)) == 50
+    assert all(callable(q[n]) for n in win)
+    assert max(key[n] for n in win) <= min(key[n] for n in names[50:])
 
 
 def test_reorder_loses_nothing():
     q = entrymod.queries()
     assert len(q) >= 336
-    # every window name maps to a callable
-    for name in entrymod._R9_WINDOW + entrymod._R10_QUEUE:
-        assert callable(q[name]), name
-
-
-def _latest_vintage(name, through=8):
-    latest = None
-    for r in range(1, through + 1):
-        path = os.path.join(HERE, f"CORRECTNESS_r0{r}.json")
-        with open(path) as f:
-            if name in json.load(f):
-                latest = r
-    return latest
+    assert all(callable(fn) for fn in q.values())
 
 
 def test_ledger_complete_through_r8():
@@ -58,36 +134,6 @@ def test_ledger_complete_through_r8():
     currency-rotation precondition."""
     missing = set(entrymod.queries()) - _records_through(8)
     assert not missing, f"entries with no driver record: {sorted(missing)}"
-
-
-def test_window_spends_slots_on_stale_or_changed():
-    """The currency-rotation contract: every r9 window slot either
-    refreshes an r1–r3-vintage record (oldest first) or re-checks a
-    contract change (pca_embeddings tightened late-r8 after the r8
-    window froze; ivf_topk / pq_topk tightened to oracle-paired
-    contract faces in r9)."""
-    contract_changes = {"pca_embeddings", "ivf_topk", "pq_topk"}
-    for name in entrymod._R9_WINDOW:
-        if name in contract_changes:
-            continue
-        v = _latest_vintage(name)
-        assert v is not None and v <= 3, (
-            f"{name} spends a slot on an already-current record "
-            f"(latest vintage r{v})"
-        )
-
-
-def test_window_heads_with_r1_stragglers():
-    """The four entries whose latest record is still r1-vintage (the
-    r7/r8 slot-swap displacements) must head the rotation."""
-    assert entrymod._R9_WINDOW[:4] == [
-        "dedup_first_event",
-        "distinct_projection",
-        "customers_without_orders",
-        "sliding_hourly",
-    ]
-    for name in entrymod._R9_WINDOW[:4]:
-        assert _latest_vintage(name) == 1
 
 
 def test_oracle_sql_values_have_no_doubled_backslash():

@@ -1,64 +1,42 @@
-"""Standalone per-query timing + plan capture for the optimization
-rounds.
+"""Standalone per-query timing for the optimization rounds.
 
 Usage:
-    python tools/qtime.py [--plans DIR --tag TAG] [--runs N] name [name...]
+    python tools/qtime.py [--runs N] name [name...]
 
-Times each named registry query exactly like bench.py (construct +
-execute to the noop sink, min over N runs, default 3) after a small
-engine warm-up, and optionally writes ``DIR/<name>_<TAG>.txt`` with the
-``.explain("formatted")`` output. Reuses the bench session config so the
+Times each named registry query with bench.py's timing core: the same
+engine warm-up (``warm_engine``), one untimed warm run per query, then
+the min over N cold-state runs (``time_cold``, default 3) of construct
++ execute to the noop sink. Reuses the bench session config so the
 numbers are comparable to BENCH_LOCAL figures (same master, same AQE /
 shuffle settings); absolute values still differ from the in-sweep table
 by the sweep's ambient load, so compare qtime-vs-qtime for a change and
-use the full sweep for the committed record.
+use the full sweep for the committed record. For ``.explain`` dumps
+use tools/plandump.py.
 """
 
 from __future__ import annotations
 
 import argparse
-import io
 import os
 import sys
-import time
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from doeecommerce_datapipeline_spark.operators import (  # noqa: E402
-    session_cache,
-)
+from bench import time_cold, warm_engine  # noqa: E402
 from doeecommerce_datapipeline_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
-    ap.add_argument("--plans", default=None, help="directory for explain dumps")
-    ap.add_argument("--tag", default="before")
     ap.add_argument("--runs", type=int, default=3)
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     spark = get_spark("qtime", cpus=cpus, shuffle_partitions=cpus)
-
-    from pyspark.sql import Window, functions as F  # noqa: E402
-
-    from doeecommerce_datapipeline_spark.io import TABLES, table  # noqa: E402
-
-    for t in TABLES:
-        table(spark, sf_dir, t).limit(1).collect()
-    li = table(spark, sf_dir, "lineitem").limit(10_000)
-    li.agg(F.sum("l_quantity"), F.countDistinct("l_orderkey")).collect()
-    n = table(spark, sf_dir, "nation")
-    li.join(F.broadcast(n), li.l_suppkey == n.n_nationkey, "left").count()
-    li.select(
-        F.row_number()
-        .over(Window.partitionBy("l_orderkey").orderBy("l_linenumber"))
-        .alias("rn")
-    ).count()
+    warm_engine(spark, sf_dir)
 
     qs = entrymod.queries()
     for name in args.names:
@@ -66,30 +44,7 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"qtime:{name}")
         # one untimed warm run (mirrors the sweep's warm pass)
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = None
-        for _ in range(args.runs):
-            # mirror bench.py's r10 cold-state rule: timed runs
-            # compute trained/fixed-point state, never a memo hit —
-            # including SQL-cache entries, which the CacheManager
-            # would otherwise serve to semantically identical plans
-            # from the previous construction
-            session_cache.clear_all()
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            el = time.perf_counter() - t0
-            best = el if best is None else min(best, el)
-        print(f"{name}: {best:.3f}s")
-        if args.plans:
-            os.makedirs(args.plans, exist_ok=True)
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                fn(spark, sf_dir).explain("formatted")
-            with open(
-                os.path.join(args.plans, f"{name}_{args.tag}.txt"), "w"
-            ) as f:
-                f.write(buf.getvalue())
+        print(f"{name}: {time_cold(spark, fn, sf_dir, args.runs):.3f}s")
     spark.stop()
 
 

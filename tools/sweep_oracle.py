@@ -24,7 +24,7 @@ sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from doeecommerce_datapipeline_spark.session import get_spark  # noqa: E402
-from tests.oracle import compare  # noqa: E402
+from tests.oracle import compare, decimal_columns  # noqa: E402
 
 
 def main() -> int:
@@ -114,6 +114,9 @@ def main() -> int:
                     )
                 pd.util.hash_pandas_object(pdf, index=False)
                 status, detail = "rows_only_ok", f"{len(pdf)} rows"
+                dec = decimal_columns(dict(df.dtypes))
+                if dec:
+                    status, detail = "red", f"DECIMAL output columns {dec}"
         except Exception as exc:  # noqa: BLE001 — report, don't die
             status, detail = "error", f"{type(exc).__name__}: {exc}"
         if status in ("red", "error"):
