@@ -325,3 +325,20 @@ def age_bucket(col: Column | str) -> Column:
         .when(c <= 65, "51-65")
         .otherwise("65+")
     )
+
+
+def basket_pairs(a: str, b: str) -> Column:
+    """Every (x, y) pair with x before y in the sorted ``parts`` array,
+    exploded as struct ``p`` with fields ``a`` and ``b``.
+
+    Built from each basket's ``array_sort(collect_set(...))``, the pairs
+    enumerate map-side with no self-join, each unordered pair once. The
+    fan-out is C(basket, 2) rows per basket (C(7, 2) = 21 for TPC-H's
+    ≤ 7-line orders), never fact × fact."""
+    return F.explode(
+        F.expr(
+            "flatten(transform(parts, (x, i) -> "
+            "transform(slice(parts, i + 2, size(parts)), "
+            f"y -> struct(x AS {a}, y AS {b}))))"
+        )
+    ).alias("p")

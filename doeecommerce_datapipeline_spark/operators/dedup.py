@@ -16,12 +16,15 @@ Scale design:
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint, tokens, word_shingles
 from ..functions.vectors import dot, norm
 from ..io import table
+from ..pipelines.fanout import each_table
 
 MINHASH_K = 16  # signature length
 LSH_BANDS = 4  # bands of 4 rows each
@@ -1573,11 +1576,9 @@ def lsh_recall_eval_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").where(F.col("doc_id") < 1000)
     # r10 (guide §2.6): the exact-Jaccard truth build and the banded
     # MinHash candidate build are independent job chains over the same
-    # bounded slice — their eager materializations now overlap from a
-    # 2-thread pool (each chain computes exactly what it did; the
-    # tail of one back-fills executors idled by the other's barriers)
-    from concurrent.futures import ThreadPoolExecutor
-
+    # bounded slice — their eager materializations now overlap (each
+    # chain computes exactly what it did; the tail of one back-fills
+    # executors idled by the other's barriers)
     def _truth():
         return (
             jaccard_pairs_over(d, threshold=min(LSH_EVAL_THRESHOLDS))
@@ -1592,10 +1593,7 @@ def lsh_recall_eval_full(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_truth = pool.submit(_truth)
-        cand = _cand()
-        truth = f_truth.result()
+    truth, cand = each_table(spark, operator.call, [_truth, _cand])
     joined = truth.join(cand, ["id_a", "id_b"], "full_outer").select(
         F.col("jaccard"),
         F.coalesce("is_cand", F.lit(False)).alias("is_cand"),

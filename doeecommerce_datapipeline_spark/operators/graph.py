@@ -19,11 +19,14 @@ Reference analog: none — pure extension surface.
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.scalars import lattice_split_sum
+from ..functions.scalars import basket_pairs, lattice_split_sum
 from ..io import table
+from ..pipelines.fanout import each_table
 from . import session_cache
 
 PR_DAMPING = 0.85
@@ -483,24 +486,14 @@ def copurchase_core_collapse(
     # order's sorted part set instead of distinct + self-join — ONE
     # fact-sized exchange (the groupBy(l_orderkey)) instead of three
     # (the dedup exchange, evaluated twice through the un-checkpointed
-    # join sides, plus the join's own), with the identical pair set:
-    # array_sort(collect_set(...)) is order-insensitive and the
-    # i-indexed slice enumerates exactly the u < v combinations. The
-    # C(basket,2) ≤ C(7,2) fan-out bound is unchanged. Materialized
-    # once for the symmetrizing union below (no subtree sharing
-    # across union branches — the item_item_cosine/pagerank lesson).
+    # join sides, plus the join's own), with the identical pair set
+    # (basket_pairs). Materialized once for the symmetrizing union
+    # below (no subtree sharing across union branches — the
+    # item_item_cosine/pagerank lesson).
     pairs = (
         li.groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(parts, (x, i) -> "
-                    "transform(slice(parts, i + 2, size(parts)), "
-                    "y -> struct(x AS u, y AS v))))"
-                )
-            ).alias("p")
-        )
+        .select(basket_pairs("u", "v"))
         .select("p.u", "p.v")
         .distinct()
         .localCheckpoint(eager=True)
@@ -548,9 +541,9 @@ def adamic_adar_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join — ONE fact-sized exchange instead of four. Identical
     # pairs and weights: size(array_sort(collect_set(part))) is the
     # former per-order distinct-part count s (same int → double →
-    # 1/ln dag, same 9-dp decimal quantum), the i-indexed slice
-    # enumerates exactly the part_a < part_b combinations, and
-    # single-part baskets enumerate no pairs (the former s >= 2 cut).
+    # 1/ln dag, same 9-dp decimal quantum), basket_pairs enumerates
+    # exactly the part_a < part_b combinations, and single-part
+    # baskets enumerate no pairs (the former s >= 2 cut).
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -578,13 +571,7 @@ def adamic_adar_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("aa_m"),
-        F.explode(
-            F.expr(
-                "flatten(transform(parts, (x, i) -> "
-                "transform(slice(parts, i + 2, size(parts)), "
-                "y -> struct(x AS part_a, y AS part_b))))"
-            )
-        ).alias("p"),
+        basket_pairs("part_a", "part_b"),
     ).select("p.part_a", "p.part_b", "aa_m")
     return (
         pairs.groupBy("part_a", "part_b")
@@ -612,7 +599,7 @@ _LPA_STATE_CACHE: dict = session_cache.register({})
 
 
 def lpa_labels(spark: SparkSession, sf_dir: str):
-    """The copurchase edge set (both directions, checkpointed) and the
+    """The copurchase edge set (both directions, persisted) and the
     node labeling after LPA_ROUNDS synchronous label-propagation
     rounds — shared by label_propagation_communities (sizes) and
     community_modularity (quality). Deterministic: see
@@ -622,13 +609,13 @@ def lpa_labels(spark: SparkSession, sf_dir: str):
     derived state with two registry readouts (sizes and quality) —
     recomputing the propagation per face ran the identical fixed-
     point twice. Deterministic by the synchronous-update contract,
-    so caching is observationally pure; keyed by applicationId
-    because localCheckpointed state dies with its session (the
-    _ANN_STATE_CACHE / quality-model precedent)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LPA_STATE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    so caching is observationally pure. The memo owns both frames."""
+    return session_cache.memo(
+        _LPA_STATE_CACHE, spark, sf_dir, lambda: _propagate(spark, sf_dir)
+    )
+
+
+def _propagate(spark: SparkSession, sf_dir: str):
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -638,11 +625,8 @@ def lpa_labels(spark: SparkSession, sf_dir: str):
     # cheap mirrored union for symmetry — identical edge set
     # r10 (guide §2.4 + §2.6): three structural changes, values
     # untouched.
-    # (1) The edge table is PERSISTED pre-partitioned and pre-sorted
-    #     on src (the key every round joins on). Unlike a
-    #     localCheckpoint (whose Scan ExistingRDD hides partitioning
-    #     from the planner — probed empirically), InMemoryTableScan
-    #     advertises its cached plan's partitioning/ordering, so the
+    # (1) The edge table is MATERIALIZED pre-partitioned and
+    #     pre-sorted on src (the key every round joins on), so the
     #     per-round edge-to-label SortMergeJoin needs NO edge-side
     #     exchange and NO edge-side sort — only the node-grain label
     #     table (orders of magnitude smaller than the pair-grain edge
@@ -654,26 +638,22 @@ def lpa_labels(spark: SparkSession, sf_dir: str):
     #     inside the consumer's ONE job instead of 4+ sequential
     #     driver-blocking jobs (the copurchase scheduling lesson).
     # (3) The initial-labels build and the pairs->edges chain are
-    #     independent fact scans — overlapped from a 2-thread pool.
+    #     independent fact scans — overlapped.
     def _edges():
         pairs = (
             li.groupBy("l_orderkey")
             .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-            .select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(parts, (x, i) -> "
-                        "transform(slice(parts, i + 2, size(parts)), "
-                        "y -> struct(x AS src, y AS dst))))"
-                    )
-                ).alias("p")
-            )
+            .select(basket_pairs("src", "dst"))
             .select("p.src", "p.dst")
             .distinct()
             .persist()
         )
-        # both directions so adoption is symmetric
-        ed = (
+        # both directions so adoption is symmetric; materialized
+        # in-thread so the overlap does the work and the rounds start
+        # from a hot, partitioned cache. The half-size canonical pair
+        # cache only feeds this build — drop it once the mirrored
+        # partitioned edge cache is hot
+        ed = session_cache.materialize(
             pairs.unionByName(
                 pairs.select(
                     F.col("dst").alias("src"), F.col("src").alias("dst")
@@ -681,34 +661,19 @@ def lpa_labels(spark: SparkSession, sf_dir: str):
             )
             .repartition("src")
             .sortWithinPartitions("src")
-            .persist()
         )
-        # materialize in-thread so the overlap does the work and the
-        # rounds start from a hot, partitioned cache; the half-size
-        # canonical pair cache only feeds this build — drop it once
-        # the mirrored partitioned edge cache is hot
-        ed.write.format("noop").mode("overwrite").save()
         pairs.unpersist(False)
         return ed
 
     def _labels():
-        lab = (
+        return session_cache.materialize(
             li.select(F.col("l_partkey").alias("node"))
             .distinct()
             .select("node", F.col("node").alias("label"))
-            .persist()
         )
-        lab.write.format("noop").mode("overwrite").save()
-        return lab
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_edges = pool.submit(_edges)
-        f_labels = pool.submit(_labels)
-        edges = f_edges.result()
-        labels = f_labels.result()
-
+    edges, labels = each_table(spark, operator.call, [_edges, _labels])
+    cached = [labels]  # label caches no checkpoint has superseded yet
     for i in range(LPA_ROUNDS):
         votes = (
             edges.join(
@@ -740,12 +705,17 @@ def lpa_labels(spark: SparkSession, sf_dir: str):
         # the next barrier's (or the consumer's) job. The partitioned
         # edge CACHE stays a persist — that is what the planner must
         # SEE to skip the edge-side exchange/sort every round.
-        labels = (
-            stepped.localCheckpoint()
-            if i % 2 == 1
-            else stepped.persist()
-        )
-    return session_cache.put(_LPA_STATE_CACHE, key, (edges, labels))
+        if i % 2 == 1:
+            labels = stepped.localCheckpoint()
+            # the checkpoint holds every earlier round's result, so
+            # their label caches are dead weight
+            for done in cached:
+                done.unpersist()
+            cached = []
+        else:
+            labels = stepped.persist()
+            cached.append(labels)
+    return edges, labels
 
 
 def label_propagation_communities(
@@ -878,28 +848,18 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical (u < v) support-2 copurchase edges, checkpointed —
     the shared graph substrate for copurchase_clustering and
     copurchase_assortativity. r9: built MAP-SIDE from each order's
-    array_sort(collect_set(part)) via the transform/slice pair
-    enumerator (the copurchase_core_collapse rewrite) — ONE
-    fact-sized exchange (the groupBy(l_orderkey)) instead of three
-    (the dedup exchange evaluated twice through the un-checkpointed
-    self-join sides plus the join's own), identical pair set and
-    per-pair order counts (collect_set ≡ the former distinct;
-    C(basket,2) fan-out bound unchanged)."""
+    array_sort(collect_set(part)) via basket_pairs — ONE fact-sized
+    exchange (the groupBy(l_orderkey)) instead of three (the dedup
+    exchange evaluated twice through the un-checkpointed self-join
+    sides plus the join's own), identical pair set and per-pair order
+    counts (collect_set ≡ the former distinct)."""
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
     return (
         li.groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(parts, (x, i) -> "
-                    "transform(slice(parts, i + 2, size(parts)), "
-                    "y -> struct(x AS u, y AS v))))"
-                )
-            ).alias("p")
-        )
+        .select(basket_pairs("u", "v"))
         .groupBy("p.u", "p.v")
         .agg(F.count(F.lit(1)).alias("n_orders"))
         .where(F.col("n_orders") >= MIN_COPURCHASE_ORDERS)

@@ -287,59 +287,13 @@ def ivf_topk(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     exact brute-force scan clears IVF_TOPK_RECALL_FLOOR. The raw
     neighbor grid lives on as ivf_topk_full (non-registry).
 
-    The two collects are k-row-bounded (approx + exact top-k).
+    Shape: similarity.topk_recall_check (one persisted scan, the
+    stats/brute/train chains overlapped, k-row-bounded collects)."""
+    from .similarity import topk_recall_check
 
-    r9: the three building blocks — the stats aggregate, the exact
-    brute-force top-k, and the IVF train/probe chain — are mutually
-    independent jobs submitted sequentially by driver code, so the
-    cluster idled through each one's tail (guide §2.6). They now run
-    from a small thread pool (job descriptions/results unchanged;
-    every job computes exactly what it did): the stats and brute
-    scans back-fill executors while the Lloyd loop's driver-side
-    barriers leave them idle. Wall clock ≈ the training chain alone."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from .similarity import brute_force_topk_over
-
-    # r10 (guide §5/§2.1, verdict #3): ONE persisted embeddings scan
-    # feeds all three chains — stats, the brute-force baseline, the
-    # sample collect and every Lloyd pass read the cached columnar
-    # batches instead of re-scanning parquet per job; unpersisted
-    # before returning (the returned 1-row frame is driver-built).
-    # Identical results: same rows feed every chain, trained state is
-    # seeded by the data alone.
-    e = table(spark, sf_dir, "embeddings").persist()
-    stats_df = e.agg(
-        F.count(F.lit(1)).cast("long").alias("n_vectors"),
-        F.sum(
-            (
-                F.aggregate(
-                    "embedding",
-                    F.lit(0.0),
-                    lambda a, x: a + x.cast("double") * x.cast("double"),
-                )
-                > 0
-            ).cast("long")
-        ).alias("n_nonzero_norm"),
-        F.max(F.size("embedding")).cast("int").alias("dim"),
+    stats, approx, recall = topk_recall_check(
+        spark, sf_dir, k, ivf_topk_full_over
     )
-    try:
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_stats = pool.submit(stats_df.first)
-            f_exact = pool.submit(
-                lambda: {
-                    r["vec_id"]
-                    for r in brute_force_topk_over(e).collect()
-                }  # bounded: k rows
-            )
-            # bounded: k rows
-            approx = ivf_topk_full_over(spark, e, 0, k).collect()
-            stats = f_stats.result()
-            exact = f_exact.result()
-    finally:
-        e.unpersist()
-    got = {r["vec_id"] for r in approx}
-    recall = len(got & exact) / max(len(exact), 1)
     eps = 1e-9
     row = (
         stats["n_vectors"],

@@ -326,51 +326,12 @@ def pq_topk(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     PQ_TOPK_RECALL_FLOOR. The raw neighbor grid lives on as
     pq_topk_full (non-registry).
 
-    The two collects are k-row-bounded (approx + exact top-k).
+    Shape: similarity.topk_recall_check, as ivf_topk."""
+    from .similarity import topk_recall_check
 
-    r9: the stats aggregate, the exact brute-force top-k, and the PQ
-    train/encode/ADC chain are mutually independent jobs — they now
-    run from a small thread pool (guide §2.6, the ivf_topk note: each
-    job computes exactly what it did; the independent scans back-fill
-    executors idled by the trainer's driver-side barriers)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from .similarity import brute_force_topk_over
-
-    # r10 (guide §5/§2.1, verdict #3): ONE persisted embeddings scan
-    # feeds all three chains (the ivf_topk note applies verbatim)
-    e = table(spark, sf_dir, "embeddings").persist()
-    stats_df = e.agg(
-        F.count(F.lit(1)).cast("long").alias("n_vectors"),
-        F.sum(
-            (
-                F.aggregate(
-                    "embedding",
-                    F.lit(0.0),
-                    lambda a, x: a + x.cast("double") * x.cast("double"),
-                )
-                > 0
-            ).cast("long")
-        ).alias("n_nonzero_norm"),
-        F.max(F.size("embedding")).cast("int").alias("dim"),
+    stats, approx, recall = topk_recall_check(
+        spark, sf_dir, k, pq_topk_full_over
     )
-    try:
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_stats = pool.submit(stats_df.first)
-            f_exact = pool.submit(
-                lambda: {
-                    r["vec_id"]
-                    for r in brute_force_topk_over(e).collect()
-                }  # bounded: k rows
-            )
-            # bounded: k rows
-            approx = pq_topk_full_over(spark, e, 0, k).collect()
-            stats = f_stats.result()
-            exact = f_exact.result()
-    finally:
-        e.unpersist()
-    got = {r["vec_id"] for r in approx}
-    recall = len(got & exact) / max(len(exact), 1)
     # ADC cosine carries quantization error on top of the exact one;
     # the bound is a sanity envelope, not a tight cosine identity
     eps = 0.25

@@ -135,11 +135,10 @@ def _cached_model(spark, sf_dir: str, docs, with_features: bool = False):
     assembler) is computed ONCE and persisted; the fit reads its train
     slice from that cache (coalesced to the rows-per-partition
     target), and scoring consumers read the same cache instead of
-    re-running featurization per face."""
+    re-running featurization per face. The memo owns that cache."""
     import math
 
-    key = (id(spark.sparkContext), sf_dir)
-    if key not in _MODEL_CACHE:
+    def build():
         feat_all = _featurize(docs).persist()
         n_docs = docs.count()  # parquet metadata count — cheap
         npart = max(
@@ -148,12 +147,9 @@ def _cached_model(spark, sf_dir: str, docs, with_features: bool = False):
         feat_train = feat_all.where(
             F.pmod("doc_id", F.lit(HOLDOUT_MOD)) != HOLDOUT_MOD - 1
         ).coalesce(npart)
-        session_cache.put(
-            _MODEL_CACHE,
-            key,
-            (train_quality_classifier(docs, feat=feat_train), feat_all),
-        )
-    model, feat_all = _MODEL_CACHE[key]
+        return train_quality_classifier(docs, feat=feat_train), feat_all
+
+    model, feat_all = session_cache.memo(_MODEL_CACHE, spark, sf_dir, build)
     return (model, feat_all) if with_features else model
 
 

@@ -15,10 +15,13 @@ engines and row orders; every window carries a total-order tiebreak.
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import (
+    basket_pairs,
     dec_sum,
     disc_rev_sum,
     dsum,
@@ -29,6 +32,8 @@ from ..functions.scalars import (
     money_lattice_sum,
 )
 from ..io import table
+from ..pipelines.fanout import each_table
+from .session_cache import materialize
 
 
 def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -55,12 +60,10 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r9: ONE basket aggregate (groupBy(l_orderkey) over the fact —
     # the only fact-sized exchange) materialized once feeds all four
     # consumers; pairs enumerate MAP-SIDE from each order's
-    # array_sort(collect_set(part)) (the copurchase_core_collapse
-    # transform/slice rewrite — identical pair set, C(basket,2)
-    # fan-out bound unchanged), per-part order counts explode the
-    # same arrays, and the order count is the basket row count. The
-    # former distinct + self-join re-exchanged the checkpointed
-    # basket table by orderkey on both join sides.
+    # array_sort(collect_set(part)) (basket_pairs), per-part order
+    # counts explode the same arrays, and the order count is the
+    # basket row count. The former distinct + self-join re-exchanged
+    # the checkpointed basket table by orderkey on both join sides.
     baskets = (
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -68,15 +71,9 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
         .localCheckpoint(eager=True)
     )
-    pairs = baskets.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(parts, (x, i) -> "
-                "transform(slice(parts, i + 2, size(parts)), "
-                "y -> struct(x AS part_a, y AS part_b))))"
-            )
-        ).alias("p")
-    ).select("p.part_a", "p.part_b")
+    pairs = baskets.select(basket_pairs("part_a", "part_b")).select(
+        "p.part_a", "p.part_b"
+    )
     pair_counts = (
         pairs.groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("n_ab"))
@@ -721,37 +718,20 @@ def item_neighbors(baskets: DataFrame, topk: int | None = None) -> DataFrame:
     )
     # r9 materialized the half-size canonical (i < j) pair table once
     # for the symmetrizing union; r10 builds it with the basket
-    # enumerator (the copurchase/adamic/market-basket rewrite, guide
-    # §2.4): ONE orderkey-keyed exchange + the pair-grain aggregate
-    # instead of re-exchanging both self-join sides by orderkey.
-    # Identical counts: array_sort(collect_set(part)) over the
-    # pre-deduped baskets is each order's distinct-part basket, the
-    # i-indexed slice enumerates exactly the i < j combinations, and
-    # n_ij remains the number of shared orders per pair. The
-    # C(basket,2) ≤ C(7,2) fan-out bound is unchanged.
-    pair = (
+    # enumerator (basket_pairs, guide §2.4): ONE orderkey-keyed
+    # exchange + the pair-grain aggregate instead of re-exchanging both
+    # self-join sides by orderkey. Identical counts: over the
+    # pre-deduped baskets, n_ij remains the number of shared orders per
+    # pair. Materialized so the mirror union's two branches read the
+    # hot cache instead of race-computing the pair aggregate twice.
+    pair = materialize(
         baskets.groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("parts"))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(parts, (x, i) -> "
-                    "transform(slice(parts, i + 2, size(parts)), "
-                    "y -> struct(x AS i, y AS j))))"
-                )
-            ).alias("p")
-        )
+        .select(basket_pairs("i", "j"))
         .select("p.i", "p.j")
         .groupBy("i", "j")
         .agg(F.count(F.lit(1)).alias("n_ij"))
-        .persist()
     )
-    # materialize through the AQE write path, not Dataset.rdd: the
-    # eager localCheckpoint here planned the pair build non-adaptively
-    # (r10; the quality-fit/LPA lesson). The mirror union's two
-    # branches then read the hot cache instead of race-computing the
-    # pair aggregate twice.
-    pair.write.format("noop").mode("overwrite").save()
     both = pair.unionByName(
         pair.select(
             F.col("j").alias("i"),
@@ -1438,36 +1418,31 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     |profile|×topk per user, keyed exchanges end-to-end; the verdict
     is a single-row reduce.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     o = table(spark, sf_dir, "orders")
     li = table(spark, sf_dir, "lineitem")
     # r9: barrier — ranked feeds BOTH the base join and the
-    # test_orders/users branch, so the un-checkpointed orders window
+    # test_orders/users branch, so the unmaterialized orders window
     # ran once per consumer (orders-grain state). NOTE (r9 ADVICE):
     # ranked and base are both pinned for the query's lifetime
-    # (~2x orders-grain executor storage; localCheckpoints can't be
-    # released early, and deriving users from base would miscount
-    # customers whose held-out order had no lineitems)
-    ranked = o.select(
-        "o_orderkey",
-        "o_custkey",
-        F.row_number()
-        .over(
-            Window.partitionBy("o_custkey").orderBy(
-                F.desc("o_orderdate"), F.desc("o_orderkey")
+    # (~2x orders-grain executor storage: the returned plan reads
+    # them, and deriving users from base would miscount customers
+    # whose held-out order had no lineitems)
+    ranked = materialize(
+        o.select(
+            "o_orderkey",
+            "o_custkey",
+            F.row_number()
+            .over(
+                Window.partitionBy("o_custkey").orderBy(
+                    F.desc("o_orderdate"), F.desc("o_orderkey")
+                )
             )
-        )
-        .alias("rn"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("o_custkey"))
-        .alias("n_orders"),
-    ).where(F.col("n_orders") >= 2).persist()
-    # r10: every materialization in this build switches from the eager
-    # localCheckpoint (whose Dataset.rdd path plans non-adaptively) to
-    # persist + a noop write through the AQE path — same barriers,
-    # same evaluate-once, measurably cheaper jobs.
-    ranked.write.format("noop").mode("overwrite").save()
+            .alias("rn"),
+            F.count(F.lit(1))
+            .over(Window.partitionBy("o_custkey"))
+            .alias("n_orders"),
+        ).where(F.col("n_orders") >= 2)
+    )
     test_orders = ranked.where(F.col("rn") == 1).select(
         "o_orderkey", "o_custkey"
     )
@@ -1475,7 +1450,7 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # old shape joined lineitem against the split three separate times
     # — three scans, three joins, same rows); base is materialized
     # once and each derivation is a single project+distinct from it.
-    base = (
+    base = materialize(
         li.join(
             ranked.select("o_orderkey", "o_custkey", "rn"),
             li.l_orderkey == F.col("o_orderkey"),
@@ -1486,26 +1461,20 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey",
             (F.col("rn") > 1).alias("is_train"),
         )
-        .persist()
     )
-    base.write.format("noop").mode("overwrite").save()
     # r9: the profile build is independent of the train_baskets → nb
-    # chain (both read the materialized base), so its eager checkpoint
-    # job runs from a worker thread and back-fills executors while the
-    # neighbor kernel's sequential jobs leave them idle (guide §2.6);
-    # each job computes exactly what it did
+    # chain (both read the materialized base), so the two overlap and
+    # the profile job back-fills executors while the neighbor kernel's
+    # sequential jobs leave them idle (guide §2.6); each job computes
+    # exactly what it did
     def _profile():
-        p = (
+        return materialize(
             base.where(F.col("is_train"))
             .select("o_custkey", "l_partkey")
             .distinct()
-            .persist()
         )
-        p.write.format("noop").mode("overwrite").save()
-        return p
 
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        _f_profile = _pool.submit(_profile)
+    def _neighbors():
         # train_baskets persists LAZILY: item_neighbors' pair
         # materialization is its first (and only) computing consumer,
         # and the later n_i branch reads the then-hot cache
@@ -1515,9 +1484,9 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .persist()
         )
-        nb = item_neighbors(train_baskets).persist()
-        nb.write.format("noop").mode("overwrite").save()
-        profile = _f_profile.result()
+        return materialize(item_neighbors(train_baskets))
+
+    profile, nb = each_table(spark, operator.call, [_profile, _neighbors])
     test_parts = (
         base.where(~F.col("is_train"))
         .select("o_custkey", F.col("l_partkey").alias("t_part"))
@@ -1530,8 +1499,7 @@ def cf_holdout_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured 5.1 s vs 0.5 s for this join at sf0.1 — the same
     # window-output pathology the ANN scoreboard hit).
     # tests/test_plans.py guards the pre-checkpoint plan via _cf_recs.
-    recs = _cf_recs(nb, profile).persist()
-    recs.write.format("noop").mode("overwrite").save()
+    recs = materialize(_cf_recs(nb, profile))
     hits = (
         recs.join(
             test_parts,

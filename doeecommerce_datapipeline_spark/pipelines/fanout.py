@@ -1,11 +1,14 @@
-"""Per-table fan-out for the medallion layers.
+"""Run independent Spark job chains on one thread each.
 
-A daily batch's tables are independent inside each layer (the
-reference's Airflow DAG runs its sources as parallel tasks), and each
-table's work is a chain of small Spark jobs whose cost is mostly
-driver time: planning, py4j, scheduling, file commits. Running the
-tables on one thread each overlaps that driver time and lets the
-small jobs share the executor cores.
+A daily batch's tables are independent inside each medallion layer
+(the reference's Airflow DAG runs its sources as parallel tasks), and
+each table's work is a chain of small Spark jobs whose cost is mostly
+driver time: planning, py4j, scheduling, file commits. Operators have
+the same shape: independent builds (two index trainings, a truth set
+and its candidates) whose driver-side barriers leave the executors
+idle. Running each chain on its own thread overlaps that driver time
+and lets the small jobs share the executor cores. Operators pass
+thunks: ``each_table(spark, operator.call, [build_a, build_b])``.
 """
 
 from __future__ import annotations
