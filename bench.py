@@ -90,28 +90,38 @@ def time_cold(
     return best
 
 
-def _prior_timings(
-    repo_dir: str, sf: float | None, out_file: str | None
-) -> dict[str, float]:
-    """Previous round's committed per-query map (the newest
-    BENCH_LOCAL_r{N}.json), used by the outlier re-time pass. Returns
-    {} when no prior round exists or the prior record was taken at a
-    different scale factor (cross-SF times aren't comparable). The
-    file THIS run writes (out_file) is never a candidate — a mid-round
-    re-run must compare against the committed cross-round record, not
-    its own first attempt (caught live in r7: the second run inherited
-    the first run's contention spikes as 'priors' and skipped
-    re-timing them)."""
-    out_abs = os.path.abspath(out_file) if out_file else None
+def newest_record(repo_dir: str, exclude: str | None = None) -> str | None:
+    """Path of the newest committed round record in ``repo_dir``: the
+    ``BENCH_LOCAL_r<N>.json`` with the largest N. Suffixed variants
+    (``BENCH_LOCAL_r<N>_<tag>.json``) are not round records and never
+    match. ``exclude`` (the file a running bench writes) is never a
+    candidate. None when no record exists."""
+    out_abs = os.path.abspath(exclude) if exclude else None
     cands = []
     for fn in os.listdir(repo_dir):
         m = re.fullmatch(r"BENCH_LOCAL_r(\d+)\.json", fn)
-        if m and os.path.abspath(os.path.join(repo_dir, fn)) != out_abs:
-            cands.append((int(m.group(1)), fn))
-    if not cands:
+        path = os.path.join(repo_dir, fn)
+        if m and os.path.abspath(path) != out_abs:
+            cands.append((int(m.group(1)), path))
+    return max(cands)[1] if cands else None
+
+
+def _prior_timings(
+    repo_dir: str, sf: float | None, out_file: str | None
+) -> dict[str, float]:
+    """Previous round's committed per-query map (``newest_record``),
+    used by the outlier re-time pass. Returns {} when no prior round
+    exists or the prior record was taken at a different scale factor
+    (cross-SF times aren't comparable). The file THIS run writes
+    (out_file) is never a candidate — a mid-round re-run must compare
+    against the committed cross-round record, not its own first
+    attempt (caught live in r7: the second run inherited the first
+    run's contention spikes as 'priors' and skipped re-timing them)."""
+    path = newest_record(repo_dir, out_file)
+    if path is None:
         return {}
     try:
-        with open(os.path.join(repo_dir, max(cands)[1])) as f:
+        with open(path) as f:
             doc = json.load(f)
     except (OSError, ValueError):
         return {}

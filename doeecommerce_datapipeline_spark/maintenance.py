@@ -19,6 +19,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .sinks.parquet_sinks import _swap_write
 from .sources.rest import RecordsSource
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024
@@ -38,13 +39,7 @@ def compact(spark: SparkSession, path: str, target_file_bytes: int = TARGET_FILE
     normalization; use repartition(col) instead when re-clustering."""
     total = dir_bytes(path)
     n_files = max(1, -(-total // target_file_bytes))
-    df = spark.read.parquet(path)
-    staging = f"{path}__staging_compact"
-    df.coalesce(n_files).write.mode("overwrite").parquet(staging)
-    backup = f"{path}__old_compact"
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
+    _swap_write(spark, spark.read.parquet(path).coalesce(n_files), path)
     return len(glob.glob(os.path.join(path, "*.parquet")))
 
 

@@ -1612,6 +1612,9 @@ def coverage_greedy_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows: list = []
     total = 0
     for r in range(1, COVERAGE_ROUNDS + 1):
+        # assumes doc_id is never null (it is the documents key): a
+        # null doc_id makes ~isin(...) NULL, so the exclusion would
+        # silently drop that doc from every later round's candidates
         cand = (
             terms
             if not picked_ids

@@ -141,9 +141,10 @@ def _cached_model(spark, sf_dir: str, docs, with_features: bool = False):
     def build():
         feat_all = _featurize(docs).persist()
         n_docs = docs.count()  # parquet metadata count — cheap
-        npart = max(
-            1, math.ceil(n_docs / _FIT_ROWS_PER_PARTITION)
-        )
+        # size from the train slice (doc_id % HOLDOUT_MOD != last), not
+        # the whole corpus: estimated from n_docs, so no extra job
+        n_train = n_docs * (HOLDOUT_MOD - 1) // HOLDOUT_MOD
+        npart = max(1, math.ceil(n_train / _FIT_ROWS_PER_PARTITION))
         feat_train = feat_all.where(
             F.pmod("doc_id", F.lit(HOLDOUT_MOD)) != HOLDOUT_MOD - 1
         ).coalesce(npart)

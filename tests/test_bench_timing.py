@@ -34,3 +34,20 @@ def test_time_cold_starts_every_run_cold(spark, sf_dir):
     for cached, memo_sizes in on_entry:
         assert cached == 0, on_entry
         assert not any(memo_sizes), on_entry
+
+
+def test_newest_record_picks_highest_round(tmp_path):
+    for name in (
+        "BENCH_LOCAL_r3.json",
+        "BENCH_LOCAL_r12.json",
+        "BENCH_LOCAL_r12_final.json",
+        "BENCH_LOCAL_r13.json",
+    ):
+        (tmp_path / name).write_text("{}")
+    out = str(tmp_path / "BENCH_LOCAL_r13.json")  # the run's own out-file
+    assert bench.newest_record(str(tmp_path), out) == str(
+        tmp_path / "BENCH_LOCAL_r12.json"
+    )
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    assert bench.newest_record(str(empty)) is None

@@ -40,6 +40,18 @@ def test_compact_reduces_file_count(spark, tmp_path):
     assert spark.read.parquet(p).count() == 10000
 
 
+def test_compact_ignores_leftover_backup_dir(spark, tmp_path):
+    # a crash between the swap's renames leaves a non-empty backup dir
+    # beside the table; compacting again must not trip over it
+    p = str(tmp_path / "frag")
+    spark.range(100).repartition(4).write.parquet(p)
+    leftover = tmp_path / "frag__old_compact"
+    leftover.mkdir()
+    (leftover / "part-0.parquet").write_text("x")
+    assert compact(spark, p) == 1
+    assert spark.read.parquet(p).count() == 100
+
+
 def test_table_stats(spark, tmp_path):
     p = str(tmp_path / "t")
     spark.createDataFrame(

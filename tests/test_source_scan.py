@@ -1,0 +1,62 @@
+"""Source-scan guards: the tools share bench.py's record reader, session
+and timing core, and plan claims live in tests/test_plans.py only.
+
+- no numbered bench-record filename is pinned in bench.py, tools/ or the
+  package (``bench.newest_record`` finds the newest round);
+- ``SparkSession.builder`` appears only in session.py (``get_spark``);
+- no tool times with ``.foreach(``, which ships every output row through
+  Python workers (``bench.time_cold`` writes to the noop sink);
+- no .py file refers to the retired plan-audit archive or its tool.
+"""
+
+import os
+import re
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "doeecommerce_datapipeline_spark")
+TOOLS = os.path.join(REPO, "tools")
+THIS = os.path.abspath(__file__)
+
+
+def _py_files(root: str) -> list[str]:
+    out = []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [
+            x for x in dirs
+            if not x.startswith(".") and x not in ("__pycache__", "spark-warehouse")
+        ]
+        out += [os.path.join(d, f) for f in files if f.endswith(".py")]
+    return sorted(out)
+
+
+def _hits(paths: list[str], pattern: str) -> list[str]:
+    rx = re.compile(pattern)
+    hits = []
+    for p in paths:
+        with open(p, encoding="utf-8") as f:
+            for i, line in enumerate(f, 1):
+                if rx.search(line):
+                    hits.append(f"{os.path.relpath(p, REPO)}:{i}: {line.strip()}")
+    return hits
+
+
+def test_no_pinned_bench_record():
+    paths = [os.path.join(REPO, "bench.py")] + _py_files(TOOLS) + _py_files(PKG)
+    assert not _hits(paths, r"BENCH_LOCAL_r\d")
+
+
+def test_session_builder_only_in_session_module():
+    paths = [
+        p for p in _py_files(REPO)
+        if p not in (os.path.join(PKG, "session.py"), THIS)
+    ]
+    assert not _hits(paths, r"SparkSession\.builder")
+
+
+def test_tools_time_without_foreach():
+    assert not _hits(_py_files(TOOLS), r"\.foreach\(")
+
+
+def test_no_plan_audit_references():
+    paths = [p for p in _py_files(REPO) if p != THIS]
+    assert not _hits(paths, r"PLANS_AUDIT|plan_audit")

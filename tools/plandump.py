@@ -5,7 +5,7 @@ run under ambient load, unlike tools/qtime.py whose numbers need an
 idle box; see the NOTE below for the eager-construction exception).
 
 Usage:
-    python tools/plandump.py --plans plans/r09 --tag before name [name...]
+    python tools/plandump.py --plans /tmp/plans --tag before name [name...]
 
 NOTE: queries whose construction itself runs jobs (eager
 localCheckpoints, driver-side training loops, bounded collects) DO

@@ -20,8 +20,13 @@ Output: BENCH_SCALE.md with per-query sf0.1 vs sf1 wall seconds and
 the scaling ratio; anything super-linear beyond 10x*(1+slack) is
 flagged for inspection.
 
+Timing is bench.py's core on a get_spark session: ``warm_engine`` once,
+one untimed warm run per query, then ``time_cold`` (min of 2 cold-state
+runs, construct + execute to the noop sink) at each scale.
+
 Usage:
-    python tools/scale_probe.py [N_QUERIES]     # top-N by r7 cost
+    python tools/scale_probe.py [N_QUERIES]     # top-N by the newest
+        BENCH_LOCAL record's cost
     python tools/scale_probe.py --names a,b,c   # explicit slice;
         appends a named section to BENCH_SCALE.md instead of
         overwriting the top-N table
@@ -37,9 +42,14 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+import __spark_entry__ as entrymod  # noqa: E402
+from bench import newest_record, time_cold, warm_engine  # noqa: E402
+from doeecommerce_datapipeline_spark.session import get_spark  # noqa: E402
+
 SF1_DIR = os.path.join(REPO, ".scale_probe", "sf1")
 # perturbed-clone variant (r8 verdict #5): same 10x replication, but
 # clone artifacts that are adversarial for pair-enumeration operators
@@ -152,7 +162,7 @@ def generate_sf1(dst_dir: str = SF1_DIR, perturbed: bool = False) -> None:
 
 
 def top_queries(n: int) -> list[str]:
-    with open(os.path.join(REPO, "BENCH_LOCAL_r7.json")) as f:
+    with open(newest_record(REPO)) as f:
         d = json.load(f)
     q = d["queries"]
     return sorted(q, key=lambda k: -q[k])[:n]
@@ -173,46 +183,24 @@ def main() -> None:
     big_dir = SF1P_DIR if perturbed else SF1_DIR
     generate_sf1(big_dir, perturbed)
 
-    sys.path.insert(0, REPO)
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", "32g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    queries = mod.queries()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    spark = get_spark("scale_probe", cpus=cpus, shuffle_partitions=cpus)
+    warm_engine(spark, SF01_DIR)
+    queries = entrymod.queries()
     names = [
         q
         for q in (explicit if explicit is not None else top_queries(n))
         if q in queries
     ]
 
-    def run(name: str, sf_dir: str) -> float:
-        best = None
-        for _ in range(2):
-            t0 = time.monotonic()
-            queries[name](spark, sf_dir).foreach(lambda _: None)
-            dt = time.monotonic() - t0
-            best = dt if best is None else min(best, dt)
-        return best
-
     rows = []
     for name in names:
-        # warm (plan/code caches) then time both SFs back-to-back
-        queries[name](spark, SF01_DIR).foreach(lambda _: None)
-        t_small = run(name, SF01_DIR)
-        t_big = run(name, big_dir)
+        fn = queries[name]
+        # one untimed warm run (plan/code caches), then time both SFs
+        # back-to-back
+        time_cold(spark, fn, SF01_DIR, 1)
+        t_small = time_cold(spark, fn, SF01_DIR, 2)
+        t_big = time_cold(spark, fn, big_dir, 2)
         ratio = t_big / t_small if t_small > 0 else float("inf")
         rows.append((name, t_small, t_big, ratio))
         print(f"{name}: sf0.1 {t_small:.2f}s sf1 {t_big:.2f}s x{ratio:.1f}",
@@ -245,10 +233,11 @@ def main() -> None:
             "# sf0.1 -> sf1 scale probe (r8, verdict #5)\n\n"
             "10x data via key-offset replication of sf0.1 (see\n"
             "tools/scale_probe.py docstring for the model + caveats),\n"
-            f"local[{cpus}], min-of-2 after warm, top-{len(rows)} most\n"
-            "expensive entries from BENCH_LOCAL_r7.json. A ratio near\n"
-            "or below 10 means the operator scales at-or-better than\n"
-            "linearly in rows on a fixed-core box; sub-linear ratios\n"
+            f"local[{cpus}], min-of-2 cold runs after warm, top-{len(rows)}\n"
+            "most expensive entries from the newest BENCH_LOCAL record.\n"
+            "A ratio near or below 10 means the operator scales\n"
+            "at-or-better than linearly in rows on a fixed-core box;\n"
+            "sub-linear ratios\n"
             "mean sf0.1 underutilized the cores (fixed overheads\n"
             "amortize). Entries flagged SUPER-LINEAR (>15x) warrant a\n"
             "plan audit.\n\n"
