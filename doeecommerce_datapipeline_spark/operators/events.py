@@ -1542,10 +1542,11 @@ def welch_value_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Means and variances derive from EXACT decimal sums (Σv, Σv² —
     the value_zscore_outliers discipline), so t and the
     Welch–Satterthwaite degrees of freedom are a fixed IEEE dag over
-    order-independent operands. One partial-aggregated shuffle to a
-    2-row stats table; the closing scalar arithmetic joins two
-    single-row frames broadcast-side. Zero-variance or n<=1 arms
-    yield NULL t (no test) rather than an engine-dependent 0/0.
+    order-independent operands. One scan and one partial-aggregated
+    shuffle to a 2-row stats table, folded to one row by conditional
+    aggregates for the closing scalar arithmetic. Zero-variance or
+    n<=1 arms yield NULL t (no test) rather than an engine-dependent
+    0/0.
     """
     e = table(spark, sf_dir, "events")
     st = (
@@ -1562,17 +1563,17 @@ def welch_value_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("s2"),
         )
     )
-    a = st.where(F.col("event_type") == WELCH_TYPE_A).select(
-        F.col("n").alias("n_a"),
-        F.col("s1").alias("s1_a"),
-        F.col("s2").alias("s2_a"),
+    # fold the 2-row stats table to one row (ab_conversion_ztest's
+    # conditional aggregates: max keeps each column's type and value);
+    # a missing type leaves its columns NULL, and no row comes out
+    arm = {
+        f"{c}_{t}": F.max(F.when(F.col("event_type") == typ, F.col(c)))
+        for t, typ in (("a", WELCH_TYPE_A), ("b", WELCH_TYPE_B))
+        for c in ("n", "s1", "s2")
+    }
+    j = st.agg(*[c.alias(name) for name, c in arm.items()]).where(
+        F.col("n_a").isNotNull() & F.col("n_b").isNotNull()
     )
-    b = st.where(F.col("event_type") == WELCH_TYPE_B).select(
-        F.col("n").alias("n_b"),
-        F.col("s1").alias("s1_b"),
-        F.col("s2").alias("s2_b"),
-    )
-    j = a.crossJoin(F.broadcast(b))
     na = F.col("n_a").cast("double")
     nb = F.col("n_b").cast("double")
     mua = F.col("s1_a").cast("double") / na
@@ -1855,29 +1856,34 @@ def event_fano_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Counts are exact integers and the day spine zero-fills per type
     (variance over only-active days understates burstiness), so
     Σc and Σc² are exact and the closing variance/mean is a fixed
-    IEEE dag. The fact collapses to (type, day) before anything else.
+    IEEE dag. The fact collapses to (type, day) before anything else,
+    in its one scan. A zero-filled day adds nothing to Σc or Σc², so
+    the spine is only its length: every type's series spans the
+    observed day range, read off the (type, day) counts by a
+    one-partition window. A day or type the spine cannot match (NULL)
+    counts as a zero day, as a left join onto the spine would.
     """
     e = table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.to_date("ts").alias("d")
     ).agg(F.count(F.lit(1)).alias("c"))
-    bounds = e.agg(
-        F.min(F.to_date("ts")).alias("lo"),
-        F.max(F.to_date("ts")).alias("hi"),
-    )
-    spine = bounds.select(
-        F.explode(F.sequence("lo", "hi")).alias("d")
-    )
-    types = daily.select("event_type").distinct()
-    grid = types.crossJoin(spine)
-    series = grid.join(daily, ["event_type", "d"], "left").select(
-        "event_type",
-        F.coalesce("c", F.lit(0)).alias("c"),
-    )
-    g = series.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_days"),
-        F.sum("c").alias("s1"),
-        F.sum(F.col("c") * F.col("c")).alias("s2"),
+    every_day = Window.partitionBy()
+    n_days = F.datediff(
+        F.max("d").over(every_day), F.min("d").over(every_day)
+    ) + F.lit(1)
+    c = F.when(
+        F.col("event_type").isNotNull() & F.col("d").isNotNull(),
+        F.col("c"),
+    ).otherwise(F.lit(0).cast("long"))
+    g = (
+        daily.withColumn("n_days", n_days.cast("long"))
+        .where(F.col("n_days").isNotNull())
+        .groupBy("event_type")
+        .agg(
+            F.max("n_days").alias("n_days"),
+            F.sum(c).alias("s1"),
+            F.sum(c * c).alias("s2"),
+        )
     )
     nd = F.col("n_days").cast("double")
     mu = F.col("s1").cast("double") / nd
@@ -1929,13 +1935,14 @@ def ship_sla_pchart(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum("breach").cast("long").alias("n_breach"),
     )
-    pooled = flagged.agg(
-        (
-            F.sum("breach").cast("double")
-            / F.count(F.lit(1)).cast("double")
-        ).alias("p_bar")
+    # p̄ from the months' exact integer totals (a one-partition window
+    # over ≤ one row per month), not a second pass over the join
+    every_month = Window.partitionBy()
+    out = monthly.withColumn(
+        "p_bar",
+        F.sum("n_breach").over(every_month).cast("double")
+        / F.sum("n").over(every_month).cast("double"),
     )
-    out = monthly.crossJoin(F.broadcast(pooled))
     p = F.col("n_breach").cast("double") / F.col("n").cast("double")
     sigma = F.sqrt(
         F.col("p_bar")

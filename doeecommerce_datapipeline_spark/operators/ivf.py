@@ -2,17 +2,12 @@
 quantizer + cluster-bucketed exact search — the standard ANN scale
 path when hyperplane LSH recall plateaus.
 
-Build: seeded k-means++ init on a bounded deterministic sample
-(driver-side, the sample is ≤2k vectors), then a few DISTRIBUTED Lloyd
-iterations over the FULL table. The per-vector kernel (argmin over k
-centroid distances) is a k×dim matmul — exactly the shape where an
-Arrow-batched numpy kernel beats codegen'd per-element HOF expressions
-(a 16-centroid × 64-dim zip_with/aggregate tree costs seconds of
-analysis/codegen PER PLAN; measured 10× slower end-to-end), so
-assignment is a scalar pandas_udf and the centroid update is a
-mapInPandas partial-sum pass emitting k rows per partition — map-side
-combine with NO shuffle, nothing driver-side ever exceeds
-k × n_partitions × dim cells. Every Lloyd pass is one scan, one job.
+Build: the coarse quantizer is a product quantizer with ONE subspace
+(Jégou et al., TPAMI 2011), so it trains and assigns through pq.py:
+``train_pq_codebooks(m=1)`` (seeded k-means++ on a bounded stride
+sample, then distributed Lloyd passes over the FULL table, one scan
+and one job each) and ``pq_encode`` (the Arrow-batched
+nearest-codeword kernel), whose one-entry code is the cluster id.
 
 Query: find the n_probe centroids nearest the query vector (tiny,
 driver-side — centroids are k×dim floats), then exact cosine over just
@@ -35,101 +30,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..functions.vectors import cosine
 from ..io import table
-from ..pyfiles import ensure_shipped
+# re-exported: the sequential Lloyd references in
+# tests/test_kernel_properties.py seed through it from here
+from .pq import _kmeanspp_init  # noqa: F401
+from .pq import pq_encode, train_pq_codebooks
 
 N_CLUSTERS = 16
 N_PROBE = 4
-FIT_SAMPLE = 2048
 LLOYD_ITERS = 3
-
-
-def _assign_udf(centroids: list[list[float]]):
-    """Arrow-batched nearest-centroid assignment: per batch one
-    n×k distance matrix via ||x||² - 2 x·Cᵀ + ||c||², then argmin.
-    Ties break to the lowest centroid id (np.argmin is first-match,
-    matching SQL array_position semantics)."""
-    import numpy as np
-
-    cents = np.asarray(centroids, dtype=np.float64)  # k × dim
-    cnorm2 = (cents * cents).sum(axis=1)  # k
-
-    @pandas_udf("int")
-    def assign(emb):
-        import pandas as pd
-
-        x = np.asarray(emb.tolist(), dtype=np.float64)  # n × dim
-        if len(x) == 0:
-            return pd.Series([], dtype="int32")
-        d2 = (x * x).sum(axis=1)[:, None] - 2.0 * (x @ cents.T) + cnorm2
-        return pd.Series(np.argmin(d2, axis=1).astype("int32"))
-
-    return assign
-
-
-def _partial_sums_fn(centroids: list[list[float]]):
-    """mapInPandas stage: per partition, sum member vectors per
-    cluster — emits ≤k rows of (cid, count, sums), the map-side
-    combine that makes the centroid update shuffle-free."""
-    import numpy as np
-
-    cents = np.asarray(centroids, dtype=np.float64)
-    cnorm2 = (cents * cents).sum(axis=1)
-    k, dim = cents.shape
-
-    def partial(batches):
-        import pandas as pd
-
-        counts = np.zeros(k, dtype=np.int64)
-        sums = np.zeros((k, dim), dtype=np.float64)
-        for pdf in batches:
-            x = np.asarray(pdf["_emb"].tolist(), dtype=np.float64)
-            if len(x) == 0:
-                continue
-            d2 = (x * x).sum(axis=1)[:, None] - 2.0 * (x @ cents.T) + cnorm2
-            cid = np.argmin(d2, axis=1)
-            np.add.at(counts, cid, 1)
-            np.add.at(sums, cid, x)
-        live = np.nonzero(counts)[0]
-        yield pd.DataFrame(
-            {
-                "cid": live.astype("int32"),
-                "cnt": counts[live],
-                # explicit object dtype: an all-empty partition would
-                # otherwise coerce the column to float64 ndarray, which
-                # Arrow can't convert to list<double>
-                "sums": pd.Series(
-                    [sums[i].tolist() for i in live], dtype="object"
-                ),
-            }
-        )
-
-    return partial
-
-
-def _kmeanspp_init(
-    sample: list[list[float]], k: int, seed: int
-) -> list[list[float]]:
-    """Seeded k-means++ on the driver-side sample: first centroid by
-    seeded choice, then each next centroid drawn with probability
-    proportional to squared distance from the nearest chosen one."""
-    import numpy as np
-
-    pts = np.asarray(sample, dtype=np.float64)
-    rng = np.random.default_rng(seed)
-    centroids = [pts[int(rng.integers(len(pts)))]]
-    d2 = np.full(len(pts), np.inf)
-    for _ in range(1, k):
-        d2 = np.minimum(d2, ((pts - centroids[-1]) ** 2).sum(axis=1))
-        total = d2.sum()
-        if total <= 0:
-            centroids.append(pts[int(rng.integers(len(pts)))])
-            continue
-        centroids.append(pts[int(rng.choice(len(pts), p=d2 / total))])
-    return [list(map(float, c)) for c in centroids]
 
 
 def build_ivf_index(
@@ -138,67 +49,18 @@ def build_ivf_index(
     seed: int = 42,
     lloyd_iters: int = LLOYD_ITERS,
 ) -> tuple[DataFrame, list[list[float]]]:
-    """Returns (vectors + cluster_id, centroid list)."""
-    import numpy as np
-
-    spark = df.sparkSession
-    ensure_shipped(spark)  # mapInPandas/pandas_udf closures on workers
-    vecs = df.select(
-        "*", F.col("embedding").cast("array<double>").alias("_emb")
+    """Returns (vectors + cluster_id, centroid list): the one-subspace
+    PQ codebook is the centroid list, and its one-entry code the
+    cluster id."""
+    centroids = train_pq_codebooks(
+        df, m=1, k=n_clusters, seed=seed, lloyd_iters=lloyd_iters
+    )[0]
+    assigned = (
+        pq_encode(df, [centroids])
+        .withColumn("cluster_id", F.col("pq_code")[0])
+        .drop("pq_code")
     )
-    # iterated over once per Lloyd pass — keep the scan's columnar
-    # batches resident (at 100 TB: persist to executor storage or
-    # re-scan; either way the pass stays one scan, one job)
-    vecs = vecs.persist()
-    try:
-        # bounded deterministic sample (every stride-th vec_id) only
-        # SEEDS the centroids; unlike a sample-only fit, the Lloyd
-        # refinement below sees the full table
-        n = vecs.count()
-        stride = max(1, n // FIT_SAMPLE)
-        # orderBy makes the seeded init — and therefore the whole
-        # trained state — independent of partitioning: collect()
-        # otherwise returns partition order, so the same data
-        # repartitioned differently would train different centroids
-        # (caught by the r8 distributed≡sequential Lloyd property
-        # test). The sort is over the ≤FIT_SAMPLE-row sample only.
-        sample = [
-            [float(x) for x in r["_emb"]]
-            for r in vecs.where(F.pmod("vec_id", F.lit(stride)) == 0)
-            .select("vec_id", "_emb")
-            .orderBy("vec_id")
-            .collect()
-        ]
-        centroids = _kmeanspp_init(sample, n_clusters, seed)
-        for _ in range(lloyd_iters):
-            partials = (
-                vecs.select("_emb")
-                .mapInPandas(
-                    _partial_sums_fn(centroids),
-                    "cid int, cnt long, sums array<double>",
-                )
-                .collect()
-            )
-            counts = np.zeros(n_clusters, dtype=np.int64)
-            sums = np.zeros(
-                (n_clusters, len(centroids[0])), dtype=np.float64
-            )
-            for r in partials:
-                counts[r["cid"]] += r["cnt"]
-                sums[r["cid"]] += np.asarray(r["sums"])
-            # empty clusters keep their previous centroid
-            centroids = [
-                (sums[i] / counts[i]).tolist() if counts[i] else centroids[i]
-                for i in range(n_clusters)
-            ]
-        assigned = vecs.withColumn(
-            "cluster_id", _assign_udf(centroids)(F.col("_emb"))
-        ).drop("_emb")
-        return assigned, centroids
-    finally:
-        # the returned plan re-reads the (cheap) source scan; the
-        # persisted frame was only for the build loop
-        vecs.unpersist()
+    return assigned, centroids
 
 
 def _nearest_clusters(
@@ -257,15 +119,6 @@ def ivf_topk_full_over(
         .orderBy(F.desc("cos"), F.asc("vec_id"))
         .limit(k)
     )
-
-
-def ivf_recall_vs_exact(spark: SparkSession, sf_dir: str, k: int = 10) -> float:
-    """Measured recall@k of the IVF probe against exact brute force."""
-    from .similarity import brute_force_topk
-
-    exact = {r["vec_id"] for r in brute_force_topk(spark, sf_dir).collect()}
-    approx = {r["vec_id"] for r in ivf_topk_full(spark, sf_dir, 0, k).collect()}
-    return len(exact & approx) / max(len(exact), 1)
 
 
 # Measured single-query (vec_id=0) recall@10 per shipped fixture:

@@ -9,8 +9,14 @@ subspace, k-means with seeded k-means++ init on a bounded stride
 sample, refined by DISTRIBUTED Lloyd passes over the full table. All
 subspaces train in the SAME mapInPandas pass (one scan per iteration
 emitting ≤ m·k partial-sum rows per partition — map-side combine, no
-shuffle, the identical shape to ivf.py's quantizer loop). Encoding is
-an Arrow-batched pandas_udf producing the m-byte code array.
+shuffle; nothing driver-side ever exceeds m·k × n_partitions × dsub
+cells). Encoding is an Arrow-batched pandas_udf producing the m-byte
+code array. Both run one nearest-codeword kernel (``_nearest``): a
+k×dsub matmul per batch, exactly the shape where Arrow-batched numpy
+beats codegen'd per-element HOF expressions (a 16-centroid × 64-dim
+zip_with/aggregate tree costs seconds of analysis/codegen PER PLAN;
+measured 10× slower end-to-end). With m=1 this trainer and encoder
+are ivf.py's coarse quantizer.
 
 Query (ADC): the query is NOT quantized — per subspace a k-entry
 lookup table of exact dot products q_j·c_{j,i} and codeword norms is
@@ -56,6 +62,43 @@ def _split(x, m):
     return x.reshape(n, m, dim // m)
 
 
+def _nearest(x, book):
+    """Per row of x (n × dsub), the id of the nearest codeword of book
+    (k × dsub): argmin of ||x||² - 2 x·Cᵀ + ||c||². Ties break to the
+    lowest id (np.argmin is first-match, matching SQL array_position
+    semantics)."""
+    import numpy as np
+
+    d2 = (
+        (x * x).sum(axis=1)[:, None]
+        - 2.0 * (x @ book.T)
+        + (book * book).sum(axis=1)
+    )
+    return np.argmin(d2, axis=1)
+
+
+def _kmeanspp_init(
+    sample: list[list[float]], k: int, seed: int
+) -> list[list[float]]:
+    """Seeded k-means++ on the driver-side sample: first centroid by
+    seeded choice, then each next centroid drawn with probability
+    proportional to squared distance from the nearest chosen one."""
+    import numpy as np
+
+    pts = np.asarray(sample, dtype=np.float64)
+    rng = np.random.default_rng(seed)
+    centroids = [pts[int(rng.integers(len(pts)))]]
+    d2 = np.full(len(pts), np.inf)
+    for _ in range(1, k):
+        d2 = np.minimum(d2, ((pts - centroids[-1]) ** 2).sum(axis=1))
+        total = d2.sum()
+        if total <= 0:
+            centroids.append(pts[int(rng.integers(len(pts)))])
+            continue
+        centroids.append(pts[int(rng.choice(len(pts), p=d2 / total))])
+    return [list(map(float, c)) for c in centroids]
+
+
 def _pq_partials_fn(codebooks):
     """mapInPandas stage: per partition, for EVERY subspace sum member
     subvectors per codeword — emits ≤ m·k rows (j, cid, cnt, sums)."""
@@ -76,12 +119,7 @@ def _pq_partials_fn(codebooks):
             xs = _split(x, m)  # n × m × dsub
             for j in range(m):
                 xj = xs[:, j, :]
-                d2 = (
-                    (xj * xj).sum(axis=1)[:, None]
-                    - 2.0 * (xj @ books[j].T)
-                    + (books[j] * books[j]).sum(axis=1)
-                )
-                cid = np.argmin(d2, axis=1)
+                cid = _nearest(xj, books[j])
                 np.add.at(counts[j], cid, 1)
                 np.add.at(sums[j], cid, xj)
         live = [(j, c) for j in range(m) for c in range(k) if counts[j, c]]
@@ -90,6 +128,9 @@ def _pq_partials_fn(codebooks):
                 "j": [j for j, _ in live],
                 "cid": [c for _, c in live],
                 "cnt": [int(counts[j, c]) for j, c in live],
+                # explicit object dtype: an all-empty partition would
+                # otherwise coerce the column to float64 ndarray, which
+                # Arrow can't convert to list<double>
                 "sums": pd.Series(
                     [sums[j, c].tolist() for j, c in live], dtype="object"
                 ),
@@ -117,13 +158,7 @@ def _encode_udf(codebooks):
         xs = _split(x, m)
         codes = np.empty((len(x), m), dtype=np.int32)
         for j in range(m):
-            xj = xs[:, j, :]
-            d2 = (
-                (xj * xj).sum(axis=1)[:, None]
-                - 2.0 * (xj @ books[j].T)
-                + (books[j] * books[j]).sum(axis=1)
-            )
-            codes[:, j] = np.argmin(d2, axis=1)
+            codes[:, j] = _nearest(xs[:, j, :], books[j])
         return pd.Series([c.tolist() for c in codes])
 
     return encode
@@ -171,22 +206,23 @@ def train_pq_codebooks(
     one scan per pass)."""
     import numpy as np
 
-    from .ivf import _kmeanspp_init
-
     spark = df.sparkSession
     ensure_shipped(spark)
     vecs = df.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("_emb")
     )
+    # iterated over once per Lloyd pass — keep the scan's columnar
+    # batches resident; the callers' returned plans re-read the source
     vecs = vecs.persist()
     try:
-        # bounded deterministic stride sample seeds the codebooks
-        # (same scheme as ivf.build_ivf_index); the Lloyd refinement
-        # below sees the full table. orderBy makes the seeded init —
-        # and therefore the trained codebooks — independent of
-        # partitioning (collect() otherwise returns partition order;
-        # same r8 hardening as ivf.build_ivf_index, pinned by the
-        # distributed≡sequential PQ property test)
+        # bounded deterministic stride sample (every stride-th
+        # vec_id) only SEEDS the codebooks; the Lloyd refinement below
+        # sees the full table. orderBy makes the seeded init — and
+        # therefore the trained codebooks — independent of
+        # partitioning: collect() otherwise returns partition order
+        # (the r8 hardening, pinned by the distributed≡sequential
+        # IVF and PQ property tests). The sort is over the
+        # ≤FIT_SAMPLE-row sample only.
         n = vecs.count()
         stride = max(1, n // FIT_SAMPLE)
         sample = np.asarray(
@@ -287,22 +323,6 @@ def pq_topk_full_over(
         .orderBy(F.desc("cos"), F.asc("vec_id"))
         .limit(k)
     )
-
-
-def pq_recall_vs_exact(
-    spark: SparkSession, sf_dir: str, k: int = 10, k_approx: int | None = None
-) -> float:
-    """Recall@k of the ADC scan against exact brute force (standard PQ
-    evaluation: retrieve k_approx ≥ k candidates, count how many of the
-    true top-k they cover)."""
-    from .similarity import brute_force_topk
-
-    exact = {r["vec_id"] for r in brute_force_topk(spark, sf_dir).collect()}
-    approx = {
-        r["vec_id"]
-        for r in pq_topk_full(spark, sf_dir, 0, k_approx or k).collect()
-    }
-    return len(exact & approx) / max(len(exact), 1)
 
 
 # Measured single-query (vec_id=0) recall@10 per shipped fixture:

@@ -109,13 +109,12 @@ def _hyperplane(dim: int, plane: int) -> list[float]:
     return [v / n for v in vals]
 
 
-def lsh_bucket(df: DataFrame, dim: int = 64) -> DataFrame:
-    """Random-hyperplane LSH: bucket id = sign-bit string over N_PLANES
-    fixed hyperplanes. Pure column arithmetic; the planes are literals
-    baked into the plan (broadcast-free)."""
+def _table_bucket(dim: int, t: int, n_planes: int):
+    """Bucket expression for hash table t: sign bits over n_planes
+    hyperplanes drawn from a per-table slice of the plane family."""
     bucket = F.lit(0).cast("long")
-    for p in range(N_PLANES):
-        plane = _hyperplane(dim, p)
+    for p in range(n_planes):
+        plane = _hyperplane(dim, t * 101 + p)
         proj = F.aggregate(
             F.zip_with(
                 "embedding",
@@ -130,7 +129,15 @@ def lsh_bucket(df: DataFrame, dim: int = 64) -> DataFrame:
                 proj > 0, F.shiftleft(F.lit(1).cast("long"), p)
             ).otherwise(F.lit(0).cast("long"))
         )
-    return df.withColumn("bucket", bucket)
+    return bucket
+
+
+def lsh_bucket(df: DataFrame, dim: int = 64) -> DataFrame:
+    """Random-hyperplane LSH: bucket id = sign-bit string over N_PLANES
+    fixed hyperplanes (hash table 0 of ``_table_bucket``'s family).
+    Pure column arithmetic; the planes are literals baked into the
+    plan (broadcast-free)."""
+    return df.withColumn("bucket", _table_bucket(dim, 0, N_PLANES))
 
 
 def ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -183,29 +190,6 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sharply; n_tables is the recall dial, n_planes the cost dial.
 KNN_TABLES = 12
 KNN_PLANES = 4
-
-
-def _table_bucket(dim: int, t: int, n_planes: int):
-    """Bucket expression for hash table t: sign bits over n_planes
-    hyperplanes drawn from a per-table slice of the plane family."""
-    bucket = F.lit(0).cast("long")
-    for p in range(n_planes):
-        plane = _hyperplane(dim, t * 101 + p)
-        proj = F.aggregate(
-            F.zip_with(
-                "embedding",
-                F.array(*[F.lit(v) for v in plane]),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket.bitwiseOR(
-            F.when(
-                proj > 0, F.shiftleft(F.lit(1).cast("long"), p)
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return bucket
 
 
 def lsh_knn_join(
@@ -289,7 +273,7 @@ def semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Cluster id here is the testdata's ``label`` column (its ground-
     truth partition); at 100 TB the cluster id comes from the IVF
-    coarse quantizer (operators/ivf.py assign_clusters) — identical
+    coarse quantizer (operators/ivf.py build_ivf_index) — identical
     downstream shape. The pairwise pass is label-blocked, so the join
     is an equi-join on the cluster key and candidates are
     |cluster|²-bounded, never corpus² — exactly why SemDeDup clusters
@@ -924,7 +908,7 @@ def _cos_multi_udf(queries: dict):
     → cosine vs that query's vector, all Q query vectors stacked in
     the closure. The brute-force (table × queries) scoring is an
     n×d @ d×1 numpy shape — exactly where the Arrow kernel beats a
-    codegen'd zip_with/aggregate fold (the ivf.py lesson: the HOF
+    codegen'd zip_with/aggregate fold (the pq.py kernel lesson: the HOF
     expression tree costs seconds of analysis/codegen per plan)."""
     import numpy as np
 

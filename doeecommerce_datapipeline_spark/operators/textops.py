@@ -558,9 +558,7 @@ def doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: ONE bigram explode; n_pair/n_head come from two COUNT
     windows over the same exploded rows (the bigram_lm/tfidf lesson —
     a groupBy+join-back would evaluate the explode twice), then one
-    doc_id hash agg. After ``repartition(w1)`` the (w1, w2) window is
-    satisfied by the subset rule, so the whole query is two exchanges
-    (w1, then doc_id). At 100 TB the LM table is vocab²-bounded and
+    doc_id hash agg. At 100 TB the LM table is vocab²-bounded and
     the alternative — aggregate it and broadcast-join the corpus —
     becomes the better plan; this form keeps everything in one pass
     and never materializes the LM at all.
@@ -576,7 +574,6 @@ def doc_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     inst = (
         d.select("doc_id", F.explode(bigrams(F.col("text"))).alias("b"))
         .select("doc_id", "b.w1", "b.w2")
-        .repartition("w1")
     )
     w_pair = Window.partitionBy("w1", "w2")
     w_head = Window.partitionBy("w1")

@@ -9,11 +9,12 @@ from doeecommerce_datapipeline_spark.operators.ivf import (
     N_CLUSTERS,
     N_PROBE,
     build_ivf_index,
-    ivf_recall_vs_exact,
     ivf_topk,
     ivf_topk_full,
+    ivf_topk_full_over,
 )
 from doeecommerce_datapipeline_spark.io import table
+from doeecommerce_datapipeline_spark.operators.similarity import topk_recall_check
 
 
 def test_ivf_topk_full_shape(spark, sf_dir):
@@ -42,7 +43,7 @@ def test_ivf_recall_floor(spark, sf_dir):
     # the floor 0.5 is 2x the 4/16 = 0.25 blind-probe baseline, so it
     # fails if the quantizer stops learning structure (FP summation
     # order may wiggle centroids slightly — hence floor < measured)
-    assert ivf_recall_vs_exact(spark, sf_dir) >= 0.5
+    assert topk_recall_check(spark, sf_dir, 10, ivf_topk_full_over)[2] >= 0.5
     assert N_PROBE / N_CLUSTERS <= 0.25
 
 

@@ -1,8 +1,9 @@
-"""Operators build through three shared helpers: overlapped chains run
+"""Operators build through shared helpers: overlapped chains run
 on ``pipelines.fanout.each_table`` (their jobs carry the caller's job
-group), AQE-path barriers go through ``session_cache.materialize``, and
+group), AQE-path barriers go through ``session_cache.materialize``,
 session memos through ``session_cache.memo``, whose entries own their
-persisted frames."""
+persisted frames, and the ANN indexes through one k-means quantizer
+and one LSH bucket expression."""
 
 import pathlib
 import re
@@ -65,6 +66,18 @@ def test_one_basket_pair_enumerator():
         src.count("slice(parts, i + 2") for src in _sources(PACKAGE).values()
     )
     assert copies == 1
+
+
+def test_one_kmeans_quantizer_and_one_lsh_bucket_loop():
+    """IVF's coarse quantizer trains and assigns through pq.py's
+    kernels (a one-subspace product quantizer), and similarity.py
+    builds sign-bit buckets in one loop over the hyperplane family."""
+    sources = _sources(PACKAGE)
+    ivf = sources["operators/ivf.py"]
+    assert "mapInPandas(" not in ivf and "np.argmin(" not in ivf
+    assert sum(src.count("def _kmeanspp_init(") for src in sources.values()) == 1
+    sim = sources["operators/similarity.py"]
+    assert len(re.findall(r"\b_hyperplane\(", sim)) - sim.count("def _hyperplane(") == 1
 
 
 def _cached_plans(spark) -> int:

@@ -372,10 +372,14 @@ def test_jw_pairs_inherit_probe_partitioning(spark, sf_dir):
     # the dimension repartitions BEFORE the self-join; repartitioning
     # the pair table AFTER would put an Exchange above the join
     p = _plan(spark, sf_dir, "jw_blocked_match")
-    assert "BroadcastHashJoin" in p
-    join_at = p.find("BroadcastHashJoin")
-    # no shuffle exchange between the join output and the UDF filter
-    assert "Exchange hashpartitioning" not in p[:join_at] or True
+    # the formatted plan's node tree, root first: no Exchange node
+    # between the BroadcastHashJoin and the root-most ArrowEvalPython,
+    # so every Arrow pass over the pairs runs on the probe partitions
+    # (a repartition of the pairs lands above the pushed-down filter)
+    tree = p.split("\n\n", 1)[0].splitlines()
+    join_at = next(i for i, line in enumerate(tree) if "BroadcastHashJoin" in line)
+    udf_at = min(i for i, line in enumerate(tree[:join_at]) if "ArrowEvalPython" in line)
+    assert not [line for line in tree[udf_at + 1 : join_at] if "Exchange" in line]
     assert p.count("ArrowEvalPython") >= 1  # the Arrow kernel runs distributed
 
 
@@ -733,6 +737,15 @@ GUARDS = {
     # one partial-aggregated pass over the fact to the stats row
     "chi2_independence_test": ("Scan parquet==1",),
     "ab_conversion_ztest": ("Scan parquet==1",),
+    # ... and so do these: the two-type stats fold to one row by
+    # conditional aggregates, the day range comes off the (type, day)
+    # counts, and p-bar off the monthly counts — one scan per table
+    "welch_value_ttest": ("Scan parquet==1", "~/events.parquet]==1", "!Join"),
+    "event_fano_factor": ("Scan parquet==1", "~/events.parquet]==1", "!Join"),
+    "ship_sla_pchart": (
+        "Scan parquet==2", "~/lineitem.parquet]==1", "~/orders.parquet]==1",
+        "BroadcastHashJoin==1",
+    ),
     # PAVA is one grouped-map over the calibration sample
     "isotonic_calibration": ("FlatMapGroupsInPandas==1",),
     # checkpointed (customer, month) table full-outer self-joined

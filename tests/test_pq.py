@@ -6,7 +6,10 @@ from pyspark.sql import functions as F
 
 from doeecommerce_datapipeline_spark.io import table
 from doeecommerce_datapipeline_spark.operators import pq
-from doeecommerce_datapipeline_spark.operators.similarity import brute_force_topk
+from doeecommerce_datapipeline_spark.operators.similarity import (
+    brute_force_topk,
+    topk_recall_check,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -38,7 +41,7 @@ def test_pq_recall_floor(spark):
     """Standard PQ evaluation: retrieve a 5× candidate set, count the
     true top-10 it covers. Measured 0.9 at sf0.01 / 0.9+ at sf0.001;
     floor leaves regen headroom."""
-    recall = pq.pq_recall_vs_exact(spark, SF, k=10, k_approx=50)
+    recall = topk_recall_check(spark, SF, 50, pq.pq_topk_full_over)[2]
     assert recall >= 0.6, f"recall@10 (k_approx=50) collapsed: {recall}"
 
 
