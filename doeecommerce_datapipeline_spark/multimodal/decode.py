@@ -2,6 +2,13 @@
 opaque binary columns + typed metadata, with decode / feature-extract /
 resize / frame-sample as Arrow-batched mapInPandas stages.
 
+Every codec stage crosses the Arrow boundary through one seam,
+``_map_rows``: it selects the stage's input columns, ships the package,
+runs one mapInPandas and calls the stage's per-row kernel on each input
+row. A kernel yields its output tuples (one for a 1:1 map, several for
+a fan-out, none to skip a row), so a stage is its kernel and nothing
+else.
+
 The Spark side — schema, partitioning, UDF signatures, batch shapes —
 is real and tested. The codec seam has four real pure-Python decoders
 dispatched on payload magic bytes — PPM (P6 binary / P3 ascii) images,
@@ -24,7 +31,7 @@ bytes via spark.sql.execution.arrow.maxRecordsPerBatch.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -59,6 +66,36 @@ DECODED_SCHEMA = (
     "media_id long, kind string, n_bytes long, sha256 string, "
     f"features array<float>"
 )
+
+
+def _map_rows(
+    df: DataFrame,
+    cols: Sequence[str],
+    schema: str,
+    fn: Callable[..., Iterable[tuple]],
+) -> DataFrame:
+    """Run the per-row kernel ``fn`` over ``df``'s ``cols`` as one
+    Arrow-batched mapInPandas stage with output ``schema``.
+
+    ``fn(*row)`` receives one input row's values (Python scalars, bytes
+    or None) and yields output tuples in ``schema``'s column order:
+    one, several or none per input row. Each output batch is built from
+    every tuple its input batch yielded."""
+    names = T.StructType.fromDDL(schema).names
+
+    def frames(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = [
+                out
+                for row in pdf.itertuples(index=False, name=None)
+                for out in fn(*row)
+            ]
+            yield pd.DataFrame(rows, columns=names)
+
+    # the kernels reference this package by module name — ship it so
+    # workers can import it regardless of driver cwd/sys.path
+    ensure_shipped(df.sparkSession)
+    return df.select(*cols).mapInPandas(frames, schema)
 
 
 def _fake_features(payload: bytes) -> list[float]:
@@ -122,25 +159,27 @@ def _ppm_pixels(payload: bytes):
     return w, h, maxval, px.reshape(n, 3)
 
 
-def _decode_ppm(payload: bytes) -> list[float]:
-    """Pure-Python PPM decoder (P6 binary and P3 ascii): header parse
-    honoring '#' comments, then per-channel pixel statistics.
-
-    Feature layout (16 floats): [1=image tag, width, height, maxval,
-    mean_r, mean_g, mean_b, min_lum, max_lum, mean_lum, n_pixels,
-    0...]. Channel means are normalized to [0,1] by maxval."""
+def _pixel_features(px, w: int, h: int, maxval: int) -> list[float]:
+    """The image feature vector of every pixel decoder, from (n, 3)
+    integer RGB pixels: [1=image tag, width, height, maxval, mean_r,
+    mean_g, mean_b, min_lum, max_lum, mean_lum, n_pixels, 0...].
+    Channel means are normalized to [0,1] by maxval."""
     import numpy as np
 
-    w, h, maxval, pxi = _ppm_pixels(payload)
-    n = w * h
-    px = pxi.astype(np.float64).ravel()
-    rgb = px.reshape(n, 3) / maxval
+    rgb = px.astype(np.float64) / maxval
     lum = rgb @ np.array([0.299, 0.587, 0.114])
     means = rgb.mean(axis=0)
     return _pad16(
         [1.0, w, h, maxval, means[0], means[1], means[2],
-         lum.min(), lum.max(), lum.mean(), float(n)]
+         lum.min(), lum.max(), lum.mean(), float(w * h)]
     )
+
+
+def _decode_ppm(payload: bytes) -> list[float]:
+    """Pure-Python PPM decoder (P6 binary and P3 ascii): header parse
+    honoring '#' comments, then the ``_pixel_features`` vector."""
+    w, h, maxval, px = _ppm_pixels(payload)
+    return _pixel_features(px, w, h, maxval)
 
 
 def _wav_samples(payload: bytes):
@@ -183,6 +222,21 @@ def _wav_samples(payload: bytes):
     return x, channels, rate, bits
 
 
+def _wav_stats(x, channels: int, rate: int) -> tuple:
+    """(n_frames, duration_s, mean, rms, peak) of normalized samples —
+    the amplitude statistics of the WAV decoder and the PCM summary."""
+    import numpy as np
+
+    n_frames = len(x) // max(channels, 1)
+    return (
+        n_frames,
+        n_frames / rate if rate else 0.0,
+        float(x.mean()) if len(x) else 0.0,
+        float(np.sqrt((x * x).mean())) if len(x) else 0.0,
+        float(np.abs(x).max()) if len(x) else 0.0,
+    )
+
+
 def _decode_wav(payload: bytes) -> list[float]:
     """Pure-Python RIFF/WAV decoder for PCM (format 1) 8/16/32-bit:
     chunk walk for fmt + data, then amplitude statistics over samples
@@ -190,27 +244,14 @@ def _decode_wav(payload: bytes) -> list[float]:
 
     Feature layout (16 floats): [2=audio tag, channels, sample_rate,
     bits, n_frames, duration_s, mean, rms, peak, 0...]."""
-    import numpy as np
-
     x, channels, rate, bits = _wav_samples(payload)
-    n_frames = len(x) // max(channels, 1)
-    duration_s = n_frames / rate if rate else 0.0
-    rms = float(np.sqrt((x * x).mean())) if len(x) else 0.0
-    return _pad16(
-        [2.0, channels, rate, bits, n_frames, duration_s,
-         float(x.mean()) if len(x) else 0.0, rms,
-         float(np.abs(x).max()) if len(x) else 0.0]
-    )
+    return _pad16([2.0, channels, rate, bits, *_wav_stats(x, channels, rate)])
 
 
 def _decode_jpeg(payload: bytes) -> list[float]:
     """Baseline JPEG decode (multimodal/jpeg.py — pure numpy, no
-    codec library) + the same pixel statistics as the PPM path.
-
-    Feature layout (16 floats): [1=image tag, width, height, 255,
-    mean_r, mean_g, mean_b, min_lum, max_lum, mean_lum, n_pixels,
-    0...] — identical to _decode_ppm so downstream feature consumers
-    are container-agnostic."""
+    codec library), then the ``_pixel_features`` vector with maxval
+    255, so downstream feature consumers are container-agnostic."""
     import numpy as np
 
     from .jpeg import decode_baseline_jpeg
@@ -219,22 +260,13 @@ def _decode_jpeg(payload: bytes) -> list[float]:
     if px.ndim == 2:  # grayscale: replicate to RGB for a uniform layout
         px = np.stack([px] * 3, axis=-1)
     h, w = px.shape[:2]
-    rgb = px.reshape(h * w, 3).astype(np.float64) / 255.0
-    lum = rgb @ np.array([0.299, 0.587, 0.114])
-    means = rgb.mean(axis=0)
-    return _pad16(
-        [1.0, w, h, 255, means[0], means[1], means[2],
-         lum.min(), lum.max(), lum.mean(), float(h * w)]
-    )
+    return _pixel_features(px.reshape(h * w, 3), w, h, 255)
 
 
 def _decode_png(payload: bytes) -> list[float]:
     """8-bit PNG decode (multimodal/png.py — stdlib zlib + numpy, no
-    codec library) + the same pixel statistics as the PPM/JPEG paths.
-
-    Feature layout (16 floats): identical to _decode_ppm/_decode_jpeg
-    so downstream feature consumers are container-agnostic; alpha (if
-    present) is dropped for the RGB statistics."""
+    codec library), then the ``_pixel_features`` vector with maxval
+    255; alpha (if present) is dropped for the RGB statistics."""
     import numpy as np
 
     from .png import decode_png
@@ -247,13 +279,7 @@ def _decode_png(payload: bytes) -> list[float]:
     elif px.shape[2] == 4:  # RGBA: drop alpha
         px = px[..., :3]
     h, w = px.shape[:2]
-    rgb = px.reshape(h * w, 3).astype(np.float64) / 255.0
-    lum = rgb @ np.array([0.299, 0.587, 0.114])
-    means = rgb.mean(axis=0)
-    return _pad16(
-        [1.0, w, h, 255, means[0], means[1], means[2],
-         lum.min(), lum.max(), lum.mean(), float(h * w)]
-    )
+    return _pixel_features(px.reshape(h * w, 3), w, h, 255)
 
 
 def _real_decode(payload: bytes) -> list[float]:
@@ -280,35 +306,26 @@ def _real_decode(payload: bytes) -> list[float]:
 def decode_media(df: DataFrame, real_decode: bool = False) -> DataFrame:
     """Decode/feature-extract stage over a binary media column.
 
-    mapInPandas: one Arrow batch in, one out — payload bytes never
-    pass through Python row-by-row. The real decoder would slot into
-    `_decode_one` (PIL/torchaudio/ffmpeg), everything else unchanged.
+    Arrow carries (media_id, kind, payload) in batches, but the
+    codec is a per-row Python call: each payload is hashed and decoded
+    one row at a time inside the batch. Codec libraries
+    (PIL/torchaudio/ffmpeg) slot into ``_real_decode``, everything
+    else unchanged.
     """
+    decode_one = _real_decode if real_decode else _fake_features
 
-    def _decode_one(payload: bytes) -> list[float]:
-        if real_decode:
-            return _real_decode(payload)
-        return _fake_features(payload)
+    def decoded(media_id, kind, payload):
+        yield (
+            media_id,
+            kind,
+            len(payload or b""),
+            hashlib.sha256(payload or b"").hexdigest(),
+            decode_one(payload),
+        )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": payloads.map(lambda b: len(b or b"")),
-                    "sha256": payloads.map(
-                        lambda b: hashlib.sha256(b or b"").hexdigest()
-                    ),
-                    "features": payloads.map(_decode_one),
-                }
-            )
-
-    # the closure references this package by module name — ship it so
-    # workers can import it regardless of driver cwd/sys.path
-    ensure_shipped(df.sparkSession)
-    return df.mapInPandas(batches, DECODED_SCHEMA)
+    return _map_rows(
+        df, ("media_id", "kind", "payload"), DECODED_SCHEMA, decoded
+    )
 
 
 def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
@@ -363,47 +380,40 @@ def audio_window_energy(
     ASR/audio training pipeline runs first (split on silence, drop
     dead air). One media row fans out to duration/window rows.
 
-    mapInPandas fan-out: each Arrow batch of (media_id, payload)
-    yields window rows computed by numpy over the decoded sample
-    array (channels are energy-pooled — interleaved frames reshape to
-    (frames, channels) and the window statistic runs over all
-    channels). A non-WAV or corrupt payload contributes zero rows
-    instead of failing the stage (quarantine-style skip; the summary
-    decoder is where strictness lives)."""
+    Fan-out kernel: each (media_id, payload) row yields its window
+    rows, computed by numpy over the decoded sample array (channels
+    are energy-pooled — interleaved frames reshape to (frames,
+    channels) and the window statistic runs over all channels). A
+    non-WAV or corrupt payload yields zero rows instead of failing the
+    stage (quarantine-style skip; the summary decoder is where
+    strictness lives)."""
+    import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def windows(mid, payload):
+        try:
+            x, channels, rate, _bits = _wav_samples(payload or b"")
+        except ValueError:
+            return
+        if rate == 0 or len(x) == 0:
+            return
+        ch = max(channels, 1)
+        frames = x[: (len(x) // ch) * ch].reshape(-1, ch)
+        win = max(1, int(rate * window_ms / 1000))
+        for w_idx in range(0, (len(frames) + win - 1) // win):
+            seg = frames[w_idx * win : (w_idx + 1) * win].ravel()
+            rms = float(np.sqrt((seg * seg).mean()))
+            yield (
+                mid,
+                w_idx,
+                w_idx * win / rate,
+                len(seg),
+                rms,
+                float(np.abs(seg).max()),
+                rms < silence_rms,
+            )
 
-        for pdf in it:
-            out = {
-                "media_id": [], "window_idx": [], "t_start_s": [],
-                "n_samples": [], "rms": [], "peak": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    x, channels, rate, _bits = _wav_samples(payload or b"")
-                except ValueError:
-                    continue
-                if rate == 0 or len(x) == 0:
-                    continue
-                ch = max(channels, 1)
-                frames = x[: (len(x) // ch) * ch].reshape(-1, ch)
-                win = max(1, int(rate * window_ms / 1000))
-                for w_idx in range(0, (len(frames) + win - 1) // win):
-                    seg = frames[w_idx * win : (w_idx + 1) * win].ravel()
-                    out["media_id"].append(mid)
-                    out["window_idx"].append(w_idx)
-                    out["t_start_s"].append(w_idx * win / rate)
-                    out["n_samples"].append(len(seg))
-                    out["rms"].append(float(np.sqrt((seg * seg).mean())))
-                    out["peak"].append(float(np.abs(seg).max()))
-            pdf_out = pd.DataFrame(out)
-            pdf_out["is_silence"] = pdf_out["rms"] < silence_rms
-            yield pdf_out
-
-    ensure_shipped(df.sparkSession)
-    return df.select("media_id", "payload").mapInPandas(
-        batches, AUDIO_WINDOWS_SCHEMA
+    return _map_rows(
+        df, ("media_id", "payload"), AUDIO_WINDOWS_SCHEMA, windows
     )
 
 SYNTH_RATE = 8000
@@ -458,21 +468,11 @@ def synth_pcm_wav(df: DataFrame, rate: int = SYNTH_RATE) -> DataFrame:
     then round-trips through the real `_wav_samples` decoder, so the
     byte-level writer and parser check each other."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": [
-                        _build_wav(_synth_samples(int(m), int(n)), rate)
-                        for m, n in zip(pdf["media_id"], pdf["n_samples"])
-                    ],
-                }
-            )
+    def built(m, n):
+        yield m, _build_wav(_synth_samples(int(m), int(n)), rate)
 
-    ensure_shipped(df.sparkSession)
-    return df.select("media_id", "n_samples").mapInPandas(
-        batches, "media_id long, payload binary"
+    return _map_rows(
+        df, ("media_id", "n_samples"), "media_id long, payload binary", built
     )
 
 
@@ -494,36 +494,12 @@ def audio_pcm_summary(df: DataFrame) -> DataFrame:
     under any summation order (numpy pairwise here, sequential in the
     oracle); mean/rms then differ from the oracle's by zero ulp."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def summary(mid, payload):
+        x, channels, rate, bits = _wav_samples(payload or b"")
+        yield (mid, channels, rate, bits, *_wav_stats(x, channels, rate))
 
-        for pdf in it:
-            out = {
-                "media_id": [], "channels": [], "sample_rate": [],
-                "bits": [], "n_frames": [], "duration_s": [],
-                "mean_amp": [], "rms": [], "peak": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                x, channels, rate, bits = _wav_samples(payload or b"")
-                n_frames = len(x) // max(channels, 1)
-                out["media_id"].append(mid)
-                out["channels"].append(channels)
-                out["sample_rate"].append(rate)
-                out["bits"].append(bits)
-                out["n_frames"].append(n_frames)
-                out["duration_s"].append(n_frames / rate if rate else 0.0)
-                out["mean_amp"].append(float(x.mean()) if len(x) else 0.0)
-                out["rms"].append(
-                    float(np.sqrt((x * x).mean())) if len(x) else 0.0
-                )
-                out["peak"].append(
-                    float(np.abs(x).max()) if len(x) else 0.0
-                )
-            yield pd.DataFrame(out)
-
-    ensure_shipped(df.sparkSession)
-    return df.select("media_id", "payload").mapInPandas(
-        batches, AUDIO_SUMMARY_SCHEMA
+    return _map_rows(
+        df, ("media_id", "payload"), AUDIO_SUMMARY_SCHEMA, summary
     )
 
 LUM_R, LUM_G, LUM_B = 299, 587, 114  # BT.601 coefficients x1000
@@ -555,23 +531,12 @@ def synth_ppm(df: DataFrame) -> DataFrame:
     P6 PPM bytes per row, Arrow batch at a time; the container
     round-trips through the real `_ppm_pixels` parser."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "payload": [
-                        _build_ppm(int(m), int(w), int(h))
-                        for m, w, h in zip(
-                            pdf["media_id"], pdf["width"], pdf["height"]
-                        )
-                    ],
-                }
-            )
+    def built(m, w, h):
+        yield m, _build_ppm(int(m), int(w), int(h))
 
-    ensure_shipped(df.sparkSession)
-    return df.select("media_id", "width", "height").mapInPandas(
-        batches, "media_id long, payload binary"
+    return _map_rows(
+        df, ("media_id", "width", "height"), "media_id long, payload binary",
+        built,
     )
 
 
@@ -591,36 +556,27 @@ def image_ppm_summary(df: DataFrame) -> DataFrame:
     summation-order caveat at all (stronger than the audio seam,
     which needs the dyadic-rational argument)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "media_id": [], "width": [], "height": [],
-                "n_pixels": [], "mean_r": [], "mean_g": [], "mean_b": [],
-                "min_lum": [], "max_lum": [], "mean_lum": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, maxval, px = _ppm_pixels(payload or b"")
-                n = w * h
-                sums = px.sum(axis=0)  # int64, exact
-                lum = LUM_R * px[:, 0] + LUM_G * px[:, 1] + LUM_B * px[:, 2]
-                lscale = 1000 * maxval
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(n)
-                out["mean_r"].append(float(sums[0]) / float(maxval * n))
-                out["mean_g"].append(float(sums[1]) / float(maxval * n))
-                out["mean_b"].append(float(sums[2]) / float(maxval * n))
-                out["min_lum"].append(float(lum.min()) / float(lscale))
-                out["max_lum"].append(float(lum.max()) / float(lscale))
-                out["mean_lum"].append(
-                    float(lum.sum()) / float(lscale * n)
-                )
-            yield pd.DataFrame(out)
+    def summary(mid, payload):
+        w, h, maxval, px = _ppm_pixels(payload or b"")
+        n = w * h
+        sums = px.sum(axis=0)  # int64, exact
+        lum = LUM_R * px[:, 0] + LUM_G * px[:, 1] + LUM_B * px[:, 2]
+        lscale = 1000 * maxval
+        yield (
+            mid,
+            w,
+            h,
+            n,
+            float(sums[0]) / float(maxval * n),
+            float(sums[1]) / float(maxval * n),
+            float(sums[2]) / float(maxval * n),
+            float(lum.min()) / float(lscale),
+            float(lum.max()) / float(lscale),
+            float(lum.sum()) / float(lscale * n),
+        )
 
-    ensure_shipped(df.sparkSession)
-    return df.select("media_id", "payload").mapInPandas(
-        batches, IMAGE_SUMMARY_SCHEMA
+    return _map_rows(
+        df, ("media_id", "payload"), IMAGE_SUMMARY_SCHEMA, summary
     )
 
 
@@ -639,42 +595,31 @@ def image_downsample_summary(df: DataFrame) -> DataFrame:
     reported double is one division of exact integers. Odd edge rows/
     columns drop (crop-to-even, the standard pooling convention).
 
-    Arrow-batched mapInPandas over (media_id, payload) — scan-bound,
-    no shuffle, the decode seam's plumbing contract (schema, batch
-    shape, partitioning) unchanged.
+    A per-row kernel over (media_id, payload) on the ``_map_rows``
+    seam — scan-bound, no shuffle.
     """
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "media_id": [], "out_w": [], "out_h": [], "n_out_px": [],
-                "mean_r": [], "mean_g": [], "mean_b": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, maxval, px = _ppm_pixels(payload or b"")
-                w2, h2 = w // 2, h // 2
-                img = px.reshape(h, w, 3)[: 2 * h2, : 2 * w2, :].astype(
-                    np.int64
-                )
-                ds = (
-                    img.reshape(h2, 2, w2, 2, 3).sum(axis=(1, 3)) // 4
-                )  # floor of the 4-px box sum — exact int64
-                n = h2 * w2
-                sums = ds.reshape(-1, 3).sum(axis=0)
-                out["media_id"].append(mid)
-                out["out_w"].append(w2)
-                out["out_h"].append(h2)
-                out["n_out_px"].append(n)
-                out["mean_r"].append(float(sums[0]) / float(maxval * n))
-                out["mean_g"].append(float(sums[1]) / float(maxval * n))
-                out["mean_b"].append(float(sums[2]) / float(maxval * n))
-            yield pd.DataFrame(out)
+    def summary(mid, payload):
+        w, h, maxval, px = _ppm_pixels(payload or b"")
+        w2, h2 = w // 2, h // 2
+        img = px.reshape(h, w, 3)[: 2 * h2, : 2 * w2, :].astype(np.int64)
+        ds = (
+            img.reshape(h2, 2, w2, 2, 3).sum(axis=(1, 3)) // 4
+        )  # floor of the 4-px box sum — exact int64
+        n = h2 * w2
+        sums = ds.reshape(-1, 3).sum(axis=0)
+        yield (
+            mid,
+            w2,
+            h2,
+            n,
+            float(sums[0]) / float(maxval * n),
+            float(sums[1]) / float(maxval * n),
+            float(sums[2]) / float(maxval * n),
+        )
 
-    ensure_shipped(df.sparkSession)
-    return df.select("media_id", "payload").mapInPandas(
-        batches, DS_SUMMARY_SCHEMA
-    )
+    return _map_rows(df, ("media_id", "payload"), DS_SUMMARY_SCHEMA, summary)
 
 
 JPEG_ENCODE_QUALITY = 90
@@ -699,29 +644,15 @@ def synth_jpeg(df: DataFrame) -> DataFrame:
     family as the PPM fixture), Arrow batch at a time."""
     from .jpeg import encode_baseline_jpeg
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": pdf["width"],
-                    "height": pdf["height"],
-                    "payload": [
-                        encode_baseline_jpeg(
-                            _synth_pixels(int(m), int(w) * int(h))
-                            .reshape(int(h), int(w), 3),
-                            quality=JPEG_ENCODE_QUALITY,
-                        )
-                        for m, w, h in zip(
-                            pdf["media_id"], pdf["width"], pdf["height"]
-                        )
-                    ],
-                }
-            )
+    def built(m, w, h):
+        px = _synth_pixels(int(m), int(w) * int(h)).reshape(int(h), int(w), 3)
+        yield m, w, h, encode_baseline_jpeg(px, quality=JPEG_ENCODE_QUALITY)
 
-    ensure_shipped(df.sparkSession)
-    return df.mapInPandas(
-        batches, "media_id long, width int, height int, payload binary"
+    return _map_rows(
+        df,
+        ("media_id", "width", "height"),
+        "media_id long, width int, height int, payload binary",
+        built,
     )
 
 
@@ -744,40 +675,24 @@ def jpeg_roundtrip_summary(df: DataFrame) -> DataFrame:
 
     from .jpeg import decode_baseline_jpeg
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "media_id": [], "width": [], "height": [],
-                "magic_ok": [], "dims_match": [], "max_err_le_bound": [],
-            }
-            for mid, w, h, payload in zip(
-                pdf["media_id"], pdf["width"], pdf["height"],
-                pdf["payload"],
-            ):
-                p = bytes(payload or b"")
-                mid, w, h = int(mid), int(w), int(h)
-                magic = p[:3] == b"\xff\xd8\xff"
-                dims = False
-                err_ok = False
-                if magic:
-                    dec = decode_baseline_jpeg(p)
-                    dims = dec.shape[:2] == (h, w)
-                    if dims:
-                        src = _synth_pixels(mid, w * h).reshape(h, w, 3)
-                        err = np.abs(
-                            dec.astype(np.int64) - src.astype(np.int64)
-                        ).max()
-                        err_ok = bool(err <= JPEG_MAX_ABS_ERR)
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["magic_ok"].append(magic)
-                out["dims_match"].append(dims)
-                out["max_err_le_bound"].append(err_ok)
-            yield pd.DataFrame(out)
+    def audit(mid, w, h, payload):
+        p = bytes(payload or b"")
+        mid, w, h = int(mid), int(w), int(h)
+        magic = p[:3] == b"\xff\xd8\xff"
+        dims = False
+        err_ok = False
+        if magic:
+            dec = decode_baseline_jpeg(p)
+            dims = dec.shape[:2] == (h, w)
+            if dims:
+                src = _synth_pixels(mid, w * h).reshape(h, w, 3)
+                err = np.abs(dec.astype(np.int64) - src.astype(np.int64)).max()
+                err_ok = bool(err <= JPEG_MAX_ABS_ERR)
+        yield mid, w, h, magic, dims, err_ok
 
-    ensure_shipped(df.sparkSession)
-    return df.mapInPandas(batches, JPEG_AUDIT_SCHEMA)
+    return _map_rows(
+        df, ("media_id", "width", "height", "payload"), JPEG_AUDIT_SCHEMA, audit
+    )
 
 
 def synth_png(df: DataFrame) -> DataFrame:
@@ -789,28 +704,15 @@ def synth_png(df: DataFrame) -> DataFrame:
     time."""
     from .png import encode_png
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": pdf["width"],
-                    "height": pdf["height"],
-                    "payload": [
-                        encode_png(
-                            _synth_pixels(int(m), int(w) * int(h))
-                            .reshape(int(h), int(w), 3)
-                        )
-                        for m, w, h in zip(
-                            pdf["media_id"], pdf["width"], pdf["height"]
-                        )
-                    ],
-                }
-            )
+    def built(m, w, h):
+        px = _synth_pixels(int(m), int(w) * int(h)).reshape(int(h), int(w), 3)
+        yield m, w, h, encode_png(px)
 
-    ensure_shipped(df.sparkSession)
-    return df.mapInPandas(
-        batches, "media_id long, width int, height int, payload binary"
+    return _map_rows(
+        df,
+        ("media_id", "width", "height"),
+        "media_id long, width int, height int, payload binary",
+        built,
     )
 
 
@@ -834,37 +736,23 @@ def png_roundtrip_summary(df: DataFrame) -> DataFrame:
 
     from .png import PNG_SIGNATURE, decode_png
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "media_id": [], "width": [], "height": [],
-                "magic_ok": [], "dims_match": [], "lossless_ok": [],
-            }
-            for mid, w, h, payload in zip(
-                pdf["media_id"], pdf["width"], pdf["height"],
-                pdf["payload"],
-            ):
-                p = bytes(payload or b"")
-                mid, w, h = int(mid), int(w), int(h)
-                magic = p[: len(PNG_SIGNATURE)] == PNG_SIGNATURE
-                dims = False
-                lossless = False
-                if magic:
-                    dec = decode_png(p)
-                    dims = dec.shape == (h, w, 3)
-                    if dims:
-                        src = _synth_pixels(mid, w * h).reshape(h, w, 3)
-                        lossless = bool(np.array_equal(dec, src))
-                out["media_id"].append(mid)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["magic_ok"].append(magic)
-                out["dims_match"].append(dims)
-                out["lossless_ok"].append(lossless)
-            yield pd.DataFrame(out)
+    def audit(mid, w, h, payload):
+        p = bytes(payload or b"")
+        mid, w, h = int(mid), int(w), int(h)
+        magic = p[: len(PNG_SIGNATURE)] == PNG_SIGNATURE
+        dims = False
+        lossless = False
+        if magic:
+            dec = decode_png(p)
+            dims = dec.shape == (h, w, 3)
+            if dims:
+                src = _synth_pixels(mid, w * h).reshape(h, w, 3)
+                lossless = bool(np.array_equal(dec, src))
+        yield mid, w, h, magic, dims, lossless
 
-    ensure_shipped(df.sparkSession)
-    return df.mapInPandas(batches, PNG_AUDIT_SCHEMA)
+    return _map_rows(
+        df, ("media_id", "width", "height", "payload"), PNG_AUDIT_SCHEMA, audit
+    )
 
 
 RESIZED_SCHEMA = (
@@ -894,31 +782,13 @@ def resize_jpeg(df: DataFrame, width: int, height: int) -> DataFrame:
     if width <= 0 or height <= 0:
         raise ValueError(f"bad target dims {width}x{height}")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "media_id": [], "payload": [], "out_w": [], "out_h": [],
-                "n_bytes_in": [], "n_bytes_out": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                p = bytes(payload or b"")
-                px = decode_baseline_jpeg(p)
-                sh, sw = px.shape[:2]
-                yi = (np.arange(height, dtype=np.int64) * sh) // height
-                xi = (np.arange(width, dtype=np.int64) * sw) // width
-                resized = px[yi][:, xi]
-                enc = encode_baseline_jpeg(
-                    resized, quality=JPEG_ENCODE_QUALITY
-                )
-                out["media_id"].append(int(mid))
-                out["payload"].append(enc)
-                out["out_w"].append(width)
-                out["out_h"].append(height)
-                out["n_bytes_in"].append(len(p))
-                out["n_bytes_out"].append(len(enc))
-            yield pd.DataFrame(out)
+    def resized(mid, payload):
+        p = bytes(payload or b"")
+        px = decode_baseline_jpeg(p)
+        sh, sw = px.shape[:2]
+        yi = (np.arange(height, dtype=np.int64) * sh) // height
+        xi = (np.arange(width, dtype=np.int64) * sw) // width
+        enc = encode_baseline_jpeg(px[yi][:, xi], quality=JPEG_ENCODE_QUALITY)
+        yield int(mid), enc, width, height, len(p), len(enc)
 
-    ensure_shipped(df.sparkSession)
-    return df.select("media_id", "payload").mapInPandas(
-        batches, RESIZED_SCHEMA
-    )
+    return _map_rows(df, ("media_id", "payload"), RESIZED_SCHEMA, resized)

@@ -121,15 +121,13 @@ IMG_DIM_BASE = 8
 IMG_DIM_MOD = 24
 
 
-def synth_image_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real P6 PPM payloads derived deterministically from documents
-    (image rows = doc_id % 3 == 0, matching media_table): width =
-    8 + doc_id % 24, height = 8 + n_chars % 24, pixel bytes from the
-    same int64 hash family as the audio samples."""
-    from .decode import synth_ppm
-
+def _image_dims(spark: SparkSession, sf_dir: str, residue: int) -> DataFrame:
+    """(media_id, width, height) of the documents rows with
+    doc_id % 3 == residue: width = 8 + doc_id % 24, height =
+    8 + n_chars % 24 — the key-derived dims every synth image fixture
+    uses and the oracle recomputes in SQL."""
     d = table(spark, sf_dir, "documents")
-    img = d.where(F.col("doc_id") % 3 == 0).select(
+    return d.where(F.col("doc_id") % 3 == residue).select(
         F.col("doc_id").alias("media_id"),
         (F.lit(IMG_DIM_BASE) + F.col("doc_id") % IMG_DIM_MOD)
         .cast("int")
@@ -138,7 +136,16 @@ def synth_image_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("height"),
     )
-    return synth_ppm(img)
+
+
+def synth_image_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real P6 PPM payloads derived deterministically from documents
+    (image rows = doc_id % 3 == 0, matching media_table; dims from
+    ``_image_dims``), pixel bytes from the same int64 hash family as
+    the audio samples."""
+    from .decode import synth_ppm
+
+    return synth_ppm(_image_dims(spark, sf_dir, 0))
 
 
 def image_ppm_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,19 +183,8 @@ def jpeg_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (including the text payload, never read by the codec) for 3x the
     # rows; now it moves three ints per image. Same row set, same
     # per-media_id output.
-    d = table(spark, sf_dir, "documents")
-    img = (
-        d.where(F.col("doc_id") % 3 == 0)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.lit(IMG_DIM_BASE) + F.col("doc_id") % IMG_DIM_MOD)
-            .cast("int")
-            .alias("width"),
-            (F.lit(IMG_DIM_BASE) + F.col("n_chars") % IMG_DIM_MOD)
-            .cast("int")
-            .alias("height"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
+    img = _image_dims(spark, sf_dir, 0).repartition(
+        spark.sparkContext.defaultParallelism
     )
     return jpeg_roundtrip_summary(synth_jpeg(img))
 
@@ -212,19 +208,8 @@ def png_roundtrip_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r10: same filter/project-before-repartition as the JPEG face
     # (guide §2.3) — the exchange moves three ints, not documents.text
-    d = table(spark, sf_dir, "documents")
-    img = (
-        d.where(F.col("doc_id") % 3 == 1)
-        .select(
-            F.col("doc_id").alias("media_id"),
-            (F.lit(IMG_DIM_BASE) + F.col("doc_id") % IMG_DIM_MOD)
-            .cast("int")
-            .alias("width"),
-            (F.lit(IMG_DIM_BASE) + F.col("n_chars") % IMG_DIM_MOD)
-            .cast("int")
-            .alias("height"),
-        )
-        .repartition(spark.sparkContext.defaultParallelism)
+    img = _image_dims(spark, sf_dir, 1).repartition(
+        spark.sparkContext.defaultParallelism
     )
     return png_roundtrip_summary(synth_png(img))
 

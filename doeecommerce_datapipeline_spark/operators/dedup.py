@@ -1359,7 +1359,10 @@ def jw_blocked_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # kernel ever sees them (JVM-side, zero output change)
     la, lb = F.length("name_a"), F.length("name_b")
     pairs = pairs.where(F.least(la, lb) * 2 >= F.greatest(la, lb))
-    jw = F.round(jw_udf("name_a", "name_b"), 6)
+    # nondeterministic only to the optimizer: it keeps the filters on
+    # jw above the projection that computes it, so the kernel runs once
+    # per pair instead of once for the filter and again for the output
+    jw = F.round(jw_udf.asNondeterministic()("name_a", "name_b"), 6)
     return (
         pairs.withColumn("jw", jw)
         .where(F.col("jw") >= JW_MIN)

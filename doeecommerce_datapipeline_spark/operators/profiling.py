@@ -284,8 +284,9 @@ def value_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = j.groupBy(bin_.alias("bin"), half.alias("half")).agg(
         F.count(F.lit(1)).alias("n")
     )
-    tot = counts.groupBy("half").agg(F.sum("n").alias("n_half"))
-    g = counts.join(F.broadcast(tot), "half")
+    # the half totals ride on the few (bin, half) count rows as a window,
+    # so the binned fact is computed once, not again for a totals join
+    g = counts.withColumn("n_half", F.sum("n").over(Window.partitionBy("half")))
     share = F.greatest(
         F.col("n").cast("double") / F.col("n_half").cast("double"),
         F.lit(1.0e-6),

@@ -2,8 +2,9 @@
 on ``pipelines.fanout.each_table`` (their jobs carry the caller's job
 group), AQE-path barriers go through ``session_cache.materialize``,
 session memos through ``session_cache.memo``, whose entries own their
-persisted frames, and the ANN indexes through one k-means quantizer
-and one LSH bucket expression."""
+persisted frames, the ANN indexes through one k-means quantizer
+and one LSH bucket expression, and the media codec stages through one
+Arrow row-map seam."""
 
 import pathlib
 import re
@@ -78,6 +79,16 @@ def test_one_kmeans_quantizer_and_one_lsh_bucket_loop():
     assert sum(src.count("def _kmeanspp_init(") for src in sources.values()) == 1
     sim = sources["operators/similarity.py"]
     assert len(re.findall(r"\b_hyperplane\(", sim)) - sim.count("def _hyperplane(") == 1
+
+
+def test_one_arrow_row_map_seam_for_media_stages():
+    """Every media codec stage is a per-row kernel on decode._map_rows,
+    the package's one mapInPandas call and one ensure_shipped call
+    under multimodal/; no stage hand-rolls its own batch loop."""
+    src = "".join(_sources(PACKAGE / "multimodal").values())
+    assert src.count("mapInPandas(") == 1
+    assert src.count("ensure_shipped(") == 1
+    assert "def batches" not in src
 
 
 def _cached_plans(spark) -> int:

@@ -717,8 +717,9 @@ GUARDS = {
     "view_purchase_xcorr": ("Scan ExistingRDD==2", "!Scan parquet", "BroadcastHashJoin==1"),
     # the xB weight fan-out is one map-side explode
     "bootstrap_mean_ci": ("Generate==1",),
-    # the build side broadcasts; pairs keep the probe partitioning
-    "jw_blocked_match": ("BroadcastHashJoin==1", "!SortMergeJoin"),
+    # the build side broadcasts; pairs keep the probe partitioning, and
+    # the Jaro-Winkler kernel runs once per pair (filter and output share it)
+    "jw_blocked_match": ("BroadcastHashJoin==1", "!SortMergeJoin", "ArrowEvalPython==1"),
     # fusion is a small full-outer join of top-k components
     "rrf_fusion_search": ("FullOuter", "TakeOrderedAndProject==3"),
     # chain state rides one user-partitioned window family
@@ -746,6 +747,9 @@ GUARDS = {
         "Scan parquet==2", "~/lineitem.parquet]==1", "~/orders.parquet]==1",
         "BroadcastHashJoin==1",
     ),
+    # the bounds pass and the one binning pass; the half totals are a
+    # window over the bin counts, not a second binning joined back
+    "value_psi_drift": ("Scan parquet==2", "Window==1", "!BroadcastHashJoin"),
     # PAVA is one grouped-map over the calibration sample
     "isotonic_calibration": ("FlatMapGroupsInPandas==1",),
     # checkpointed (customer, month) table full-outer self-joined
