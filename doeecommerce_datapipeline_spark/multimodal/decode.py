@@ -609,15 +609,10 @@ def image_downsample_summary(df: DataFrame) -> DataFrame:
         )  # floor of the 4-px box sum — exact int64
         n = h2 * w2
         sums = ds.reshape(-1, 3).sum(axis=0)
-        yield (
-            mid,
-            w2,
-            h2,
-            n,
-            float(sums[0]) / float(maxval * n),
-            float(sums[1]) / float(maxval * n),
-            float(sums[2]) / float(maxval * n),
-        )
+        # an image under 2 px wide or high has no output pixels: NULL
+        # means, as SQL avg over an empty set
+        means = [float(v) / float(maxval * n) if n else None for v in sums]
+        yield (mid, w2, h2, n, *means)
 
     return _map_rows(df, ("media_id", "payload"), DS_SUMMARY_SCHEMA, summary)
 

@@ -263,10 +263,11 @@ def value_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     anomaly-detection shape.
 
     Determinism: mean and variance are derived from EXACT decimal sums
-    (Σv, Σv²) — per-element double squaring is deterministic, the
-    decimal sums are order-independent, and the closing mean/variance/
-    sqrt arithmetic is all-double on bit-identical operands — so z is
-    bit-identical across engines and the threshold can't flip rows.
+    (Σv, Σv², event_moments' aggregate) — per-element double squaring
+    is deterministic, the decimal sums are order-independent, and the
+    closing mean/variance/sqrt arithmetic is all-double on
+    bit-identical operands — so z is bit-identical across engines and
+    the threshold can't flip rows.
 
     Scale: one partial-aggregated shuffle to a tiny per-type stats
     table, broadcast back over the fact — no second fact shuffle.
@@ -289,16 +290,7 @@ def value_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     digit's midpoint.
     """
     e = table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    stats = e.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        money_lattice_sum("value", "decimal(28,2)").alias("s1"),
-        lattice_split_sum(
-            lattice_2dp("value") * lattice_2dp("value"),
-            4,
-            "decimal(38,4)",
-            split_digits=6,
-        ).alias("s2"),
-    )
+    stats = event_moments(e)
     mu = F.col("s1").cast("double") / F.col("n")
     var = (F.col("s2").cast("double") - F.col("n") * mu * mu) / (F.col("n") - 1)
     stats = (
@@ -1549,19 +1541,8 @@ def welch_value_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     0/0.
     """
     e = table(spark, sf_dir, "events")
-    st = (
+    st = event_moments(
         e.where(F.col("event_type").isin([WELCH_TYPE_A, WELCH_TYPE_B]))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            money_lattice_sum("value", "decimal(28,2)").alias("s1"),
-            lattice_split_sum(
-                lattice_2dp("value") * lattice_2dp("value"),
-                4,
-                "decimal(38,4)",
-                split_digits=6,
-            ).alias("s2"),
-        )
     )
     # fold the 2-row stats table to one row (ab_conversion_ztest's
     # conditional aggregates: max keeps each column's type and value);
@@ -2796,20 +2777,7 @@ def pairwise_welch_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one partial-aggregated shuffle to 5 rows, a 5×5 self-join,
     two 10-row windows.
     """
-    e = table(spark, sf_dir, "events")
-    st = e.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        money_lattice_sum("value", "decimal(28,2)").alias("s1"),
-        # Σv² rides the exact 1e-4 lattice: m = c² with c = cents(v)
-        # (pure int64; split-1e6 partials stay inside 2^63 while
-        # |v| ≤ ~$38k — far above the event-value domain)
-        lattice_split_sum(
-            lattice_2dp("value") * lattice_2dp("value"),
-            4,
-            "decimal(38,4)",
-            split_digits=6,
-        ).alias("s2"),
-    )
+    st = event_moments(table(spark, sf_dir, "events"))
     a = st.select(
         F.col("event_type").alias("type_a"),
         F.col("n").alias("n_a"),

@@ -1,29 +1,112 @@
-"""Custom stateful streaming operator via applyInPandasWithState —
+"""Custom stateful streaming operators via applyInPandasWithState —
 the escape hatch for semantics watermarked windows can't express
 (SURVEY.md §2.9 mapping).
 
-Implemented operator: per-user running session tracker. For each user
-the state carries (current session start, last event time, event
-count); an event more than GAP seconds after the previous one closes
-the open session and emits it, then starts a new one. Timed-out state
-flushes the final open session — so every session is emitted exactly
-once, append-mode.
+Every operator here is a per-key step kernel on one seam,
+``_fold_by_key``: it projects the key and the kernel's columns, ships
+the package once, and runs the one applyInPandasWithState call. Per key
+and micro-batch the kernel sees the batch's rows in sorted order and
+the stored state tuple (``None`` for a new key), and returns the new
+state and the rows to emit. Time columns arrive as exact integer
+``unix_seconds``/``unix_micros``; emitted timestamps are UTC instants,
+so no operator depends on the session time zone.
 
-This is the online variant of operators/events.py:sessionize (the
-batch lag+cumsum formulation) — same session boundaries, incremental
-state instead of a window over history.
+Operators: the running session tracker (the online variant of
+operators/events.py:sessionize — same session boundaries, incremental
+state instead of a window over history), the velocity alert, the
+online EWMA, the windowFunnel depth, the space-saving top-k, the
+Markov transition counter and the alert suppressor.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..pyfiles import ensure_shipped
+
+# idle time after which a timed-out key's ``on_timeout`` fires
+_TIMEOUT_MS = 60 * 1000
+
+
+def _key_fold(
+    out_schema: str,
+    step: Callable,
+    on_timeout: Callable[[object, tuple], list] | None = None,
+):
+    """The per-key state function ``_fold_by_key`` hands to Spark.
+
+    With ``on_timeout`` set, a key whose state timed out emits
+    ``on_timeout(key, state)`` and its state is removed; every other
+    call re-arms the timeout."""
+    names = T.StructType.fromDDL(out_schema).names
+
+    def fold(
+        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+    ) -> Iterable[pd.DataFrame]:
+        (k,) = key
+        if on_timeout is not None and state.hasTimedOut:
+            out = on_timeout(k, state.get) if state.exists else []
+            state.remove()
+        else:
+            rows = sorted(  # column 0 is the key
+                row
+                for chunk in pdfs
+                for row in chunk.iloc[:, 1:].itertuples(index=False, name=None)
+            )
+            new, out = step(k, rows, state.get if state.exists else None)
+            if new is not None:
+                state.update(new)
+            if on_timeout is not None:
+                state.setTimeoutDuration(_TIMEOUT_MS)
+        if out:
+            yield pd.DataFrame(out, columns=names)
+
+    return fold
+
+
+def _fold_by_key(
+    df: DataFrame,
+    key: str,
+    cols: Sequence,
+    out_schema: str,
+    state_schema: str,
+    step: Callable,
+    mode: str = "append",
+    on_timeout: Callable[[object, tuple], list] | None = None,
+) -> DataFrame:
+    """Fold ``df`` per ``key`` through the step kernel ``step``.
+
+    Each micro-batch calls ``step(k, rows, state)`` once per key: ``rows``
+    are the batch's ``cols`` tuples in sorted order, ``state`` the stored
+    tuple in ``state_schema`` (``None`` for a new key). It returns
+    ``(new_state, out_rows)``; a ``None`` state leaves the store
+    untouched, and ``out_rows`` are tuples in ``out_schema``'s column
+    order. ``on_timeout`` switches on a processing-time timeout (see
+    ``_key_fold``)."""
+    timeout = (
+        GroupStateTimeout.NoTimeout
+        if on_timeout is None
+        else GroupStateTimeout.ProcessingTimeTimeout
+    )
+    ensure_shipped(df.sparkSession)  # the kernels must import on workers
+    return df.select(key, *cols).groupBy(key).applyInPandasWithState(
+        _key_fold(out_schema, step, on_timeout),
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=mode,
+        timeoutConf=timeout,
+    )
+
+
+def _utc(t: int, unit: str) -> pd.Timestamp:
+    return pd.Timestamp(t, unit=unit, tz="UTC")
+
 
 SESSION_GAP_SEC = 30 * 60
 
@@ -33,56 +116,31 @@ OUTPUT_SCHEMA = (
 STATE_SCHEMA = "start long, last long, n long"
 
 
-def _make_tracker(use_timeout: bool):
-    def _track_sessions(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        """Fold this micro-batch's events of one user into session
-        state, emitting every session that closed."""
-        (user_id,) = key
-        if use_timeout and state.hasTimedOut:
-            if state.exists:
-                start, last, n = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id],
-                        "session_start": [pd.Timestamp(start, unit="s")],
-                        "session_end": [pd.Timestamp(last, unit="s")],
-                        "n_events": [n],
-                    }
-                )
-            return
+def _session_row(user_id, start: int, last: int, n: int) -> tuple:
+    return user_id, _utc(start, "s"), _utc(last, "s"), n
 
-        ts: list[int] = []
-        for pdf in pdfs:
-            ts.extend(int(v.timestamp()) for v in pdf["ts"])
-        ts.sort()
 
-        start, last, n = state.get if state.exists else (None, None, 0)
-        closed: list[tuple[int, int, int]] = []
-        for t in ts:
-            if start is None:
-                start, last, n = t, t, 1
-            elif t - last > SESSION_GAP_SEC:
-                closed.append((start, last, n))
-                start, last, n = t, t, 1
-            else:
-                last, n = t, n + 1
-        state.update((start, last, n))
-        if use_timeout:
-            state.setTimeoutDuration(60 * 1000)
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(closed),
-                    "session_start": [pd.Timestamp(s, unit="s") for s, _, _ in closed],
-                    "session_end": [pd.Timestamp(e, unit="s") for _, e, _ in closed],
-                    "n_events": [n_ for _, _, n_ in closed],
-                }
-            )
+def _session_step(user_id, rows: list, state: tuple | None):
+    """Fold this micro-batch's event seconds of one user into session
+    state (start, last event, count): an event more than
+    SESSION_GAP_SEC after the previous one closes the open session and
+    emits it, then starts a new one."""
+    start, last, n = state or (None, None, 0)
+    closed = []
+    for (t,) in rows:
+        if start is None:
+            start, last, n = t, t, 1
+        elif t - last > SESSION_GAP_SEC:
+            closed.append(_session_row(user_id, start, last, n))
+            start, last, n = t, t, 1
+        else:
+            last, n = t, n + 1
+    return (start, last, n), closed
 
-    return _track_sessions
+
+def _flush_session(user_id, state: tuple) -> list:
+    """An idle user's timeout emits the open session once."""
+    return [_session_row(user_id, *state)]
 
 
 def sessionize_stream(events: DataFrame, flush_open_sessions: bool = False) -> DataFrame:
@@ -95,18 +153,14 @@ def sessionize_stream(events: DataFrame, flush_open_sessions: bool = False) -> D
     bounded runs keep the default False (open sessions simply stay
     open, exactly like the batch formulation's last session per user).
     """
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if flush_open_sessions
-        else GroupStateTimeout.NoTimeout
-    )
-    ensure_shipped(events.sparkSession)  # state fn must import on workers
-    return events.groupBy("user_id").applyInPandasWithState(
-        _make_tracker(flush_open_sessions),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=timeout,
+    return _fold_by_key(
+        events,
+        "user_id",
+        [F.unix_seconds("ts").alias("t")],
+        OUTPUT_SCHEMA,
+        STATE_SCHEMA,
+        _session_step,
+        on_timeout=_flush_session if flush_open_sessions else None,
     )
 
 
@@ -118,56 +172,37 @@ ALERT_SCHEMA = (
 )
 
 
-def _track_velocity(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
+def _velocity_step(user_id, rows: list, state: tuple | None):
     """Sliding-count state: keep each user's event times from the last
     VELOCITY_WINDOW_SEC; whenever the count reaches VELOCITY_N, emit
     ONE alert and reset (re-arm) — the rate-limit/fraud-velocity rule.
     State is bounded by the window (≤ N-1 timestamps survive a purge)."""
-    (user_id,) = key
-    ts: list[int] = []
-    for pdf in pdfs:
-        ts.extend(int(v.timestamp()) for v in pdf["ts"])
-    ts.sort()
-
-    recent: list[int] = list(state.get[0]) if state.exists else []
-    alerts: list[int] = []
-    for t in ts:
+    recent = list(state[0]) if state else []
+    alerts = []
+    for (t,) in rows:
         recent = [x for x in recent if t - x < VELOCITY_WINDOW_SEC]
         recent.append(t)
         if len(recent) >= VELOCITY_N:
-            alerts.append(t)
+            alerts.append(
+                (user_id, _utc(t, "s"), VELOCITY_N, VELOCITY_WINDOW_SEC)
+            )
             recent = []  # re-arm: one alert per burst
-    state.update((recent,))
-    if alerts:
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id] * len(alerts),
-                "alert_ts": [pd.Timestamp(t, unit="s") for t in alerts],
-                "n_in_window": [VELOCITY_N] * len(alerts),
-                "window_sec": [VELOCITY_WINDOW_SEC] * len(alerts),
-            }
-        )
+    return (recent,), alerts
 
 
 def velocity_alert_stream(events: DataFrame) -> DataFrame:
     """events stream → alert stream: one row each time a user fires
     VELOCITY_N events inside VELOCITY_WINDOW_SEC (then re-arms). The
-    second applyInPandasWithState operator — unlike the sessionizer's
-    gap rule, this one needs a sliding SET of timestamps as state,
-    which no watermarked built-in window expresses."""
-    ensure_shipped(events.sparkSession)
-    return (
-        events.select("user_id", "ts")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _track_velocity,
-            outputStructType=ALERT_SCHEMA,
-            stateStructType="recent array<long>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    second stateful operator — unlike the sessionizer's gap rule, this
+    one needs a sliding SET of timestamps as state, which no
+    watermarked built-in window expresses."""
+    return _fold_by_key(
+        events,
+        "user_id",
+        [F.unix_seconds("ts").alias("t")],
+        ALERT_SCHEMA,
+        "recent array<long>",
+        _velocity_step,
     )
 
 
@@ -175,9 +210,7 @@ EWMA_OUT_SCHEMA = "key string, seq long, x double, ewma double"
 EWMA_STATE_SCHEMA = "last_seq long, e double"
 
 
-def _track_ewma(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
+def _ewma_step(k, rows: list, state: tuple | None):
     """Fold this micro-batch's (seq, x) points of one key into the
     running EWMA. Points sort by seq inside the batch; a point at or
     before the already-consumed frontier (cross-batch late/duplicate
@@ -188,19 +221,10 @@ def _track_ewma(
 
     from ..operators.windows import EWMA_ALPHA
 
-    (k,) = key
-    pts: list[tuple[int, float]] = []
-    for pdf in pdfs:
-        pts.extend(zip((int(s) for s in pdf["seq"]), map(float, pdf["x"])))
-    pts.sort()
-
-    if state.exists:
-        last_seq, e = state.get
-        have = True
-    else:
-        last_seq, e, have = -1, 0.0, False
-    out: dict = {"key": [], "seq": [], "x": [], "ewma": []}
-    for s, x in pts:
+    have = state is not None
+    last_seq, e = state or (-1, 0.0)
+    out = []
+    for s, x in rows:
         if have and s <= last_seq:
             continue  # stale redelivery: frontier already passed it
         if not have:
@@ -214,14 +238,8 @@ def _track_ewma(
                 / 1e4
             )
         last_seq = s
-        out["key"].append(k)
-        out["seq"].append(s)
-        out["x"].append(x)
-        out["ewma"].append(e)
-    if have:
-        state.update((last_seq, e))
-    if out["seq"]:
-        yield pd.DataFrame(out)
+        out.append((k, s, x, e))
+    return ((last_seq, e) if have else None), out
 
 
 def ewma_stream(points: DataFrame) -> DataFrame:
@@ -231,15 +249,10 @@ def ewma_stream(points: DataFrame) -> DataFrame:
     BIT-IDENTICAL to the batch recursion over the same series (the
     e2e in tests/test_stateful_streaming.py pins this). State per key
     is two scalars (frontier seq + current ewma) — constant memory at
-    any stream length; the third applyInPandasWithState operator,
-    needing ORDERED per-key state no watermarked window expresses."""
-    ensure_shipped(points.sparkSession)
-    return points.groupBy("key").applyInPandasWithState(
-        _track_ewma,
-        outputStructType=EWMA_OUT_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    any stream length; the third stateful operator, needing ORDERED
+    per-key state no watermarked window expresses."""
+    return _fold_by_key(
+        points, "key", ["seq", "x"], EWMA_OUT_SCHEMA, EWMA_STATE_SCHEMA, _ewma_step
     )
 
 
@@ -251,9 +264,7 @@ FUNNEL_STATE_SCHEMA = (
 _FUNNEL_WINDOW_US = 24 * 3600 * 1_000_000
 
 
-def _track_funnel(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
+def _funnel_step(uid, rows: list, state: tuple | None):
     """Fold this micro-batch's events of one user into the
     view→click→purchase chain state (last view ts, last QUALIFYING
     click ts, depth). Events sort by (ts, event_id) inside the batch;
@@ -262,28 +273,8 @@ def _track_funnel(
     state transition mirrors operators/events.window_funnel_depth's
     running conditional maxima step for step, so a drained stream's
     depth histogram is identical to the batch answer (e2e-pinned)."""
-    (uid,) = key
-    evs: list[tuple[int, int, str]] = []
-    for pdf in pdfs:
-        evs.extend(
-            zip(
-                (int(t) for t in pdf["tus"]),
-                (int(e) for e in pdf["event_id"]),
-                pdf["event_type"],
-            )
-        )
-    evs.sort()
-    if state.exists:
-        last_ts, last_eid, last_view, last_click, depth = state.get
-    else:
-        last_ts, last_eid, last_view, last_click, depth = (
-            -1,
-            -1,
-            -1,
-            -1,
-            0,
-        )
-    for t, eid, et in evs:
+    last_ts, last_eid, last_view, last_click, depth = state or (-1, -1, -1, -1, 0)
+    for t, eid, et in rows:
         if (t, eid) <= (last_ts, last_eid):
             continue  # stale redelivery behind the frontier
         if et == "view":
@@ -306,27 +297,21 @@ def _track_funnel(
                 if depth < 3:
                     depth = 3
         last_ts, last_eid = t, eid
-    state.update((last_ts, last_eid, last_view, last_click, depth))
-    yield pd.DataFrame({"user_id": [uid], "depth": [depth]})
+    return (last_ts, last_eid, last_view, last_click, depth), [(uid, depth)]
 
 
 def funnel_depth_stream(events: DataFrame) -> DataFrame:
     """Online windowFunnel: per micro-batch, each user's current chain
     depth — constant state per user (four timestamps + a depth), the
     streaming face of window_funnel_depth."""
-    ensure_shipped(events.sparkSession)
-    pts = events.select(
+    return _fold_by_key(
+        events,
         "user_id",
-        "event_id",
-        F.unix_micros("ts").alias("tus"),
-        "event_type",
-    )
-    return pts.groupBy("user_id").applyInPandasWithState(
-        _track_funnel,
-        outputStructType=FUNNEL_OUT_SCHEMA,
-        stateStructType=FUNNEL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        [F.unix_micros("ts").alias("tus"), "event_id", "event_type"],
+        FUNNEL_OUT_SCHEMA,
+        FUNNEL_STATE_SCHEMA,
+        _funnel_step,
+        mode="update",
     )
 
 
@@ -338,36 +323,43 @@ SS_OUT_SCHEMA = (
 SS_STATE_SCHEMA = "counters string, n long"
 
 
-def _make_space_saving(k: int):
-    def _fold(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        """Fold one group's micro-batch items into its ≤k space-saving
-        counters (Metwally et al.): a hit increments, a miss with room
-        opens a fresh counter, a miss at capacity overwrites the
-        MINIMUM counter (err = its old count). Invariants — every item
-        with true count > n/k is present, and for each counter
-        true ≤ count_est and count_est − err_bound ≤ true — hold for
-        ANY arrival order, so cross-batch ordering needs no frontier
-        state (unlike the EWMA recursion). Emits the full snapshot
-        stamped with version = items folded so far; readers keep each
-        group's max version."""
+def space_saving_stream(
+    rows: DataFrame, k: int = SPACE_SAVING_K
+) -> DataFrame:
+    """(grp, item, seq) stream → versioned top-k snapshots per group:
+    the ONLINE heavy-hitter summary with HARD per-item error bounds —
+    the deterministic-guarantee complement of the CMS sketch sink
+    (foreach_batch_cms_merge gives fixed-size probabilistic counts;
+    space-saving gives ≤k counters whose error is CERTIFIED per item
+    by err_bound). State per group is the k-counter table + one total,
+    constant at any stream length; the fourth stateful operator.
+    Readers take each group's max-version snapshot; the guarantee
+    (every item with true count > n/k survives; true count
+    ∈ [count_est − err_bound, count_est]) holds under any arrival
+    order and any micro-batch partitioning."""
+
+    def step(g, batch: list, state: tuple | None):
+        """Fold one group's micro-batch items (in seq order) into its
+        ≤k space-saving counters (Metwally et al.): a hit increments, a
+        miss with room opens a fresh counter, a miss at capacity
+        overwrites the MINIMUM counter (err = its old count).
+        Invariants — every item with true count > n/k is present, and
+        for each counter true ≤ count_est and count_est − err_bound ≤
+        true — hold for ANY arrival order, so cross-batch ordering
+        needs no frontier state (unlike the EWMA recursion). Emits the
+        full snapshot stamped with version = items folded so far."""
         import json
 
-        (g,) = key
-        items: list[str] = []
-        for pdf in pdfs:
-            p = pdf.sort_values("seq")
-            items.extend(str(v) for v in p["item"])
-        if state.exists:
-            enc, n = state.get
+        if state:
+            enc, n = state
             counters = {
                 it: (int(c), int(e))
                 for it, c, e in json.loads(enc)
             }
         else:
             counters, n = {}, 0
-        for it in items:
+        for _, item in batch:
+            it = str(item)
             n += 1
             if it in counters:
                 c, e = counters[it]
@@ -381,53 +373,14 @@ def _make_space_saving(k: int):
                 )
                 vc, _ = counters.pop(victim)
                 counters[it] = (vc + 1, vc)
-        state.update(
-            (
-                json.dumps(
-                    [[it, c, e] for it, (c, e) in sorted(counters.items())]
-                ),
-                n,
-            )
+        enc = json.dumps(
+            [[it, c, e] for it, (c, e) in sorted(counters.items())]
         )
-        if items:
-            snap = sorted(
-                counters.items(), key=lambda x: (-x[1][0], x[0])
-            )
-            yield pd.DataFrame(
-                {
-                    "grp": [g] * len(snap),
-                    "item": [it for it, _ in snap],
-                    "count_est": [c for _, (c, _) in snap],
-                    "err_bound": [e for _, (_, e) in snap],
-                    "n_seen": [n] * len(snap),
-                    "version": [n] * len(snap),
-                }
-            )
+        snap = sorted(counters.items(), key=lambda x: (-x[1][0], x[0]))
+        return (enc, n), [(g, it, c, e, n, n) for it, (c, e) in snap]
 
-    return _fold
-
-
-def space_saving_stream(
-    rows: DataFrame, k: int = SPACE_SAVING_K
-) -> DataFrame:
-    """(grp, item, seq) stream → versioned top-k snapshots per group:
-    the ONLINE heavy-hitter summary with HARD per-item error bounds —
-    the deterministic-guarantee complement of the CMS sketch sink
-    (foreach_batch_cms_merge gives fixed-size probabilistic counts;
-    space-saving gives ≤k counters whose error is CERTIFIED per item
-    by err_bound). State per group is the k-counter table + one total,
-    constant at any stream length; the fourth applyInPandasWithState
-    operator. Readers take each group's max-version snapshot; the
-    guarantee (every item with true count > n/k survives; true count
-    ∈ [count_est − err_bound, count_est]) holds under any arrival
-    order and any micro-batch partitioning."""
-    ensure_shipped(rows.sparkSession)
-    return rows.groupBy("grp").applyInPandasWithState(
-        _make_space_saving(k),
-        outputStructType=SS_OUT_SCHEMA,
-        stateStructType=SS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_by_key(
+        rows, "grp", ["seq", "item"], SS_OUT_SCHEMA, SS_STATE_SCHEMA, step
     )
 
 
@@ -438,9 +391,7 @@ MARKOV_STATE_SCHEMA = (
 )
 
 
-def _track_markov(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
+def _markov_step(uid, rows: list, state: tuple | None):
     """Fold one user's micro-batch into the running first-order
     transition counts. Events sort by (ts, event_id) inside the batch;
     anything at or before the consumed frontier drops (stale
@@ -451,23 +402,12 @@ def _track_markov(
     serialize as sorted-key JSON (the space-saving state pattern)."""
     import json
 
-    (uid,) = key
-    evs: list[tuple[int, int, str]] = []
-    for pdf in pdfs:
-        evs.extend(
-            zip(
-                (int(t) for t in pdf["tus"]),
-                (int(e) for e in pdf["event_id"]),
-                pdf["event_type"],
-            )
-        )
-    evs.sort()
-    if state.exists:
-        last_ts, last_eid, last_type, blob, version = state.get
+    if state:
+        last_ts, last_eid, last_type, blob, version = state
         counts = json.loads(blob)
     else:
         last_ts, last_eid, last_type, counts, version = -1, -1, None, {}, 0
-    for t, eid, et in evs:
+    for t, eid, et in rows:
         if (t, eid) <= (last_ts, last_eid):
             continue  # behind the frontier
         if last_type is not None:
@@ -477,10 +417,7 @@ def _track_markov(
         last_ts, last_eid = t, eid
     version += 1
     blob = json.dumps(counts, sort_keys=True)
-    state.update((last_ts, last_eid, last_type, blob, version))
-    yield pd.DataFrame(
-        {"user_id": [uid], "counts": [blob], "version": [version]}
-    )
+    return (last_ts, last_eid, last_type, blob, version), [(uid, blob, version)]
 
 
 def markov_stream(events: DataFrame) -> DataFrame:
@@ -491,19 +428,14 @@ def markov_stream(events: DataFrame) -> DataFrame:
     markov_transitions / markov_entropy_rate: drain, take each user's
     max-version row, and the summed counts are the batch transition
     matrix."""
-    ensure_shipped(events.sparkSession)
-    pts = events.select(
+    return _fold_by_key(
+        events,
         "user_id",
-        "event_id",
-        F.unix_micros("ts").alias("tus"),
-        "event_type",
-    )
-    return pts.groupBy("user_id").applyInPandasWithState(
-        _track_markov,
-        outputStructType=MARKOV_OUT_SCHEMA,
-        stateStructType=MARKOV_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        [F.unix_micros("ts").alias("tus"), "event_id", "event_type"],
+        MARKOV_OUT_SCHEMA,
+        MARKOV_STATE_SCHEMA,
+        _markov_step,
+        mode="update",
     )
 
 
@@ -514,42 +446,20 @@ SUPPRESS_OUT_SCHEMA = (
 SUPPRESS_STATE_SCHEMA = "last_emit_us long, n_suppressed long"
 
 
-def _track_suppression(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
+def _suppression_step(akey, rows: list, state: tuple | None):
     """Fold one alert key's micro-batch: emit the first alert, swallow
     repeats inside the cooldown (counting them), re-arm after it.
     Alerts sort by timestamp inside the batch so the decision sequence
     is order-defined."""
-    import pandas as pd
-
-    (akey,) = key
-    alerts = []
-    for pdf in pdfs:
-        alerts.extend(int(t) for t in pdf["tus"])
-    alerts.sort()
-    if state.exists:
-        last_emit, n_sup = state.get
-    else:
-        last_emit, n_sup = -(10 ** 18), 0
-    out_ts, out_sup, out_emit = [], [], []
-    for t in alerts:
+    last_emit, n_sup = state or (-(10 ** 18), 0)
+    out = []
+    for (t,) in rows:
         if t - last_emit >= SUPPRESS_COOLDOWN_SEC * 1_000_000:
-            out_ts.append(t)
-            out_sup.append(n_sup)
-            out_emit.append(True)
+            out.append((akey, _utc(t, "us"), n_sup, True))
             last_emit, n_sup = t, 0
         else:
             n_sup += 1
-    state.update((last_emit, n_sup))
-    yield pd.DataFrame(
-        {
-            "alert_key": [akey] * len(out_ts),
-            "ts": pd.to_datetime(out_ts, unit="us"),
-            "n_suppressed": out_sup,
-            "emitted": [True] * len(out_ts),
-        }
-    )
+    return (last_emit, n_sup), out
 
 
 def alert_suppression_stream(alerts: DataFrame) -> DataFrame:
@@ -560,14 +470,11 @@ def alert_suppression_stream(alerts: DataFrame) -> DataFrame:
     stream, the PSI monitor) and the pager. Constant state per key
     (one timestamp + one counter); emitted stream is append-mode.
     Input: any stream with (alert_key string, ts timestamp)."""
-    ensure_shipped(alerts.sparkSession)
-    pts = alerts.select(
-        "alert_key", F.unix_micros("ts").alias("tus")
-    )
-    return pts.groupBy("alert_key").applyInPandasWithState(
-        _track_suppression,
-        outputStructType=SUPPRESS_OUT_SCHEMA,
-        stateStructType=SUPPRESS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _fold_by_key(
+        alerts,
+        "alert_key",
+        [F.unix_micros("ts").alias("tus")],
+        SUPPRESS_OUT_SCHEMA,
+        SUPPRESS_STATE_SCHEMA,
+        _suppression_step,
     )

@@ -4,7 +4,12 @@ semantics (SURVEY.md §2.9 mapping):
 - late/re-delivered data (the reference's latest-wins W1 + keyed
   upsert S8) → watermark + dropDuplicatesWithinWatermark
 - daily KPI recompute (S9) → windowed aggregate + foreachBatch MERGE
-  (here: the parquet upsert sink)
+  (the parquet and manifest upsert sinks)
+- additive sketch/statistics state (count-min cells, HLL registers,
+  PSI bin counts, ANOVA moments) → one epoch-guarded foreachBatch
+  merge, ``_additive_merge_sink``: union the stored state with the
+  batch's, re-aggregate per key, upsert with the replay guard in the
+  commit meta
 
 The reference is daily-batch; these make the same pipeline incremental
 without changing any downstream contract — the gold marts produced by
@@ -12,6 +17,8 @@ foreachBatch are byte-compatible with the batch publisher's.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -293,6 +300,61 @@ def foreach_batch_near_dedup(
     return _write
 
 
+def _additive_merge_sink(
+    path: str,
+    keys: list[str],
+    tag: str,
+    lineage_id: str,
+    batch_state: Callable[[DataFrame], DataFrame],
+    merge: list,
+):
+    """foreachBatch sink folding each micro-batch's ``batch_state`` into
+    the manifest table at ``path``: the stored state is unioned with
+    the batch's, re-aggregated by ``keys`` with the ``merge``
+    aggregates, and upserted (the first batch is written as is).
+
+    EXACTLY-ONCE under epoch replay: the last applied epoch and its
+    lineage ride in the commit meta as ``{tag}_epoch``/``{tag}_run``,
+    atomically with the state, so a re-delivered epoch of the same
+    lineage is a no-op instead of double-counting (the failure mode
+    additive state is otherwise famous for). ``lineage_id`` scopes the
+    guard to one checkpoint lineage (pass the checkpoint dir): epoch
+    ids restart at 0 when a NEW query (fresh checkpoint) feeds an
+    existing table, and comparing epochs alone would silently skip
+    every batch of the new query. The guard therefore skips only when
+    BOTH the recorded lineage matches ours AND the recorded epoch is
+    >= ours; a different lineage always applies and re-points the
+    meta. Consequence: one table must be fed by one query at a time —
+    concurrent writers of different lineages would ping-pong the
+    pointer (document-level contract, as for any foreachBatch sink
+    keyed on epoch)."""
+    from ..sinks.manifest_store import ManifestTable
+
+    def _write(batch_df: DataFrame, epoch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        tbl = ManifestTable(batch_df.sparkSession, path)
+        v = tbl.current_version()
+        merged = batch_state(batch_df)
+        if v > 0:
+            meta = tbl._read_manifest(v)
+            if (
+                meta.get(f"{tag}_run", "default") == lineage_id
+                and meta.get(f"{tag}_epoch", -1) >= epoch_id
+            ):
+                return  # replayed epoch of THIS lineage: already folded in
+            merged = (
+                tbl.read().unionByName(merged).groupBy(*keys).agg(*merge)
+            )
+        tbl.upsert(
+            merged,
+            keys=keys,
+            extra_meta={f"{tag}_epoch": epoch_id, f"{tag}_run": lineage_id},
+        )
+
+    return _write
+
+
 def foreach_batch_cms_merge(
     cells_path: str,
     key_col: str = "user_id",
@@ -308,58 +370,23 @@ def foreach_batch_cms_merge(
     This is the streaming face of operators/sketches.py: per-batch
     cost is one aggregate over the batch plus an upsert of ≤ 4×1024
     cell rows into the ACID table (snapshot-isolated for concurrent
-    estimate readers). EXACTLY-ONCE under epoch replay: the last
-    applied epoch id rides in the commit meta atomically with the
-    cells (the incremental-view source-pointer pattern), so a
-    restarted stream re-delivering an epoch is a no-op instead of
-    double-counting it — the failure mode additive state is
-    otherwise famous for. At 100 TB the same plan holds: the merge
-    state is 4096 rows no matter the key cardinality — THE reason to
-    sketch instead of keeping exact per-key counts in a stateful
-    operator.
-
-    ``lineage_id`` scopes the replay guard to one checkpoint lineage
-    (pass the checkpoint dir). Epoch ids restart at 0 when a NEW query
-    (fresh checkpoint) feeds an existing cells table; comparing epochs
-    alone would silently skip every batch of the new query. The guard
-    therefore skips only when BOTH the recorded lineage matches ours
-    AND the recorded epoch is >= ours; a different lineage always
-    applies and re-points the meta. Consequence: one cells table must
-    be fed by one query at a time — concurrent writers of different
-    lineages would ping-pong the pointer (document-level contract, as
-    for any foreachBatch sink keyed on epoch).
+    estimate readers). EXACTLY-ONCE under epoch replay through
+    ``_additive_merge_sink``'s lineage-scoped epoch guard (meta keys
+    ``cms_epoch``/``cms_run``; pass the checkpoint dir as
+    ``lineage_id``). At 100 TB the same plan holds: the merge state is
+    4096 rows no matter the key cardinality — THE reason to sketch
+    instead of keeping exact per-key counts in a stateful operator.
     """
     from ..operators.sketches import cms_build
-    from ..sinks.manifest_store import ManifestTable
 
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        tbl = ManifestTable(spark, cells_path)
-        v = tbl.current_version()
-        if v > 0:
-            meta = tbl._read_manifest(v)
-            if (
-                meta.get("cms_run", "default") == lineage_id
-                and meta.get("cms_epoch", -1) >= epoch_id
-            ):
-                return  # replayed epoch of THIS lineage: already folded in
-            merged = (
-                tbl.read()
-                .unionByName(cms_build(batch_df, key_col))
-                .groupBy("row_i", "bucket")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            merged = cms_build(batch_df, key_col)
-        tbl.upsert(
-            merged,
-            keys=["row_i", "bucket"],
-            extra_meta={"cms_epoch": epoch_id, "cms_run": lineage_id},
-        )
-
-    return _write
+    return _additive_merge_sink(
+        cells_path,
+        ["row_i", "bucket"],
+        "cms",
+        lineage_id,
+        lambda df: cms_build(df, key_col),
+        [F.sum("cnt").alias("cnt")],
+    )
 
 
 def foreach_batch_hll_merge(
@@ -374,45 +401,22 @@ def foreach_batch_hll_merge(
     IDENTICAL to the batch-built sketch over the same rows, which the
     e2e unit pins register by register. The cardinality counterpart of
     foreach_batch_cms_merge, with the same exactly-once epoch guard
-    (lineage-scoped pointer in the commit meta — see the CMS sink's
-    docstring for the restart semantics) — and a stronger idempotence
-    story: MAX-merge tolerates replays by algebra (a re-applied batch
-    cannot raise any register), so the guard is only saving the no-op
-    write. Per-batch state is ≤ |groups|·64 rows at any key
-    cardinality.
+    (``_additive_merge_sink``, meta keys ``hll_*``) — and a stronger
+    idempotence story: MAX-merge tolerates replays by algebra (a
+    re-applied batch cannot raise any register), so the guard is only
+    saving the no-op write. Per-batch state is ≤ |groups|·64 rows at
+    any key cardinality.
     """
     from ..operators.sketches import hll_registers
-    from ..sinks.manifest_store import ManifestTable
 
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        tbl = ManifestTable(spark, regs_path)
-        v = tbl.current_version()
-        batch_regs = hll_registers(batch_df, key_col)
-        if v > 0:
-            meta = tbl._read_manifest(v)
-            if (
-                meta.get("hll_run", "default") == lineage_id
-                and meta.get("hll_epoch", -1) >= epoch_id
-            ):
-                return  # replayed epoch of THIS lineage
-            merged = (
-                tbl.read()
-                .unionByName(batch_regs)
-                .groupBy("event_type", "bucket")
-                .agg(F.max("m_j").alias("m_j"))
-            )
-        else:
-            merged = batch_regs
-        tbl.upsert(
-            merged,
-            keys=["event_type", "bucket"],
-            extra_meta={"hll_epoch": epoch_id, "hll_run": lineage_id},
-        )
-
-    return _write
+    return _additive_merge_sink(
+        regs_path,
+        ["event_type", "bucket"],
+        "hll",
+        lineage_id,
+        lambda df: hll_registers(df, key_col),
+        [F.max("m_j").alias("m_j")],
+    )
 
 
 def foreach_batch_session_sweep(sessions_path: str, peaks_path: str):
@@ -508,10 +512,10 @@ def foreach_batch_psi_bins(
     reference-period contract every production PSI monitor has: drift
     is measured against a frozen reference binning, never against
     bounds that move with the stream. State is 2·n_bins rows forever;
-    per-batch cost is one aggregate plus an ACID upsert with the same
-    lineage-scoped epoch replay guard as the CMS sink.
+    per-batch cost is one aggregate plus an ACID upsert with
+    ``_additive_merge_sink``'s lineage-scoped epoch replay guard (meta
+    keys ``psi_*``).
     """
-    from ..sinks.manifest_store import ManifestTable
 
     def _bin_counts(df: DataFrame) -> DataFrame:
         width = (v_hi - v_lo) / float(n_bins)
@@ -526,34 +530,14 @@ def foreach_batch_psi_bins(
             bin_.alias("bin"), half.alias("half")
         ).agg(F.count(F.lit(1)).alias("n"))
 
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        tbl = ManifestTable(spark, bins_path)
-        v = tbl.current_version()
-        if v > 0:
-            meta = tbl._read_manifest(v)
-            if (
-                meta.get("psi_run", "default") == lineage_id
-                and meta.get("psi_epoch", -1) >= epoch_id
-            ):
-                return
-            merged = (
-                tbl.read()
-                .unionByName(_bin_counts(batch_df))
-                .groupBy("bin", "half")
-                .agg(F.sum("n").alias("n"))
-            )
-        else:
-            merged = _bin_counts(batch_df)
-        tbl.upsert(
-            merged,
-            keys=["bin", "half"],
-            extra_meta={"psi_epoch": epoch_id, "psi_run": lineage_id},
-        )
-
-    return _write
+    return _additive_merge_sink(
+        bins_path,
+        ["bin", "half"],
+        "psi",
+        lineage_id,
+        _bin_counts,
+        [F.sum("n").alias("n")],
+    )
 
 
 def foreach_batch_weighted_reservoir(reservoir_path: str, topn: int = 50):
@@ -617,46 +601,25 @@ def foreach_batch_moments_merge(
     the state is |event types| rows of three numbers — the entire
     k-group testing apparatus maintained online for pennies.
 
-    EXACTLY-ONCE under epoch replay via the lineage-scoped epoch
-    guard (the cms_merge pattern — additive state double-counts
-    without it); one stats table per query lineage at a time.
+    EXACTLY-ONCE under epoch replay via ``_additive_merge_sink``'s
+    lineage-scoped epoch guard (meta keys ``mom_*`` — additive state
+    double-counts without it); one stats table per query lineage at a
+    time.
     """
     from ..operators.events import event_moments
-    from ..sinks.manifest_store import ManifestTable
 
-    def _write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        tbl = ManifestTable(spark, stats_path)
-        v = tbl.current_version()
-        batch_m = event_moments(batch_df)
-        if v > 0:
-            meta = tbl._read_manifest(v)
-            if (
-                meta.get("mom_run", "default") == lineage_id
-                and meta.get("mom_epoch", -1) >= epoch_id
-            ):
-                return
-            merged = (
-                tbl.read()
-                .unionByName(batch_m)
-                .groupBy("event_type")
-                .agg(
-                    F.sum("n").cast("long").alias("n"),
-                    F.sum("s1").cast("decimal(28,2)").alias("s1"),
-                    F.sum("s2").cast("decimal(28,4)").alias("s2"),
-                )
-            )
-        else:
-            merged = batch_m
-        tbl.upsert(
-            merged,
-            keys=["event_type"],
-            extra_meta={"mom_epoch": epoch_id, "mom_run": lineage_id},
-        )
-
-    return _write
+    return _additive_merge_sink(
+        stats_path,
+        ["event_type"],
+        "mom",
+        lineage_id,
+        event_moments,
+        [
+            F.sum("n").cast("long").alias("n"),
+            F.sum("s1").cast("decimal(28,2)").alias("s1"),
+            F.sum("s2").cast("decimal(28,4)").alias("s2"),
+        ],
+    )
 
 
 def stream_media_decode(media: DataFrame, real_decode: bool = False) -> DataFrame:

@@ -321,3 +321,29 @@ def test_image_ppm_metrics_matches_bruteforce(spark):
         assert r.max_lum == float(lum.max()) / 255000.0
         assert r.mean_lum == float(lum.sum()) / float(255000 * n)
         assert 0.0 <= r.min_lum <= r.mean_lum <= r.max_lum <= 1.0
+
+
+def test_downsample_under_two_pixels_gives_null_means(spark):
+    """A 1-pixel-wide or 1-pixel-high image has no 2x2 box, so the
+    downsample has no output pixels and its means are NULL (SQL avg
+    over an empty set); a normal image in the same batch is unaffected."""
+    from doeecommerce_datapipeline_spark.multimodal.decode import (
+        image_downsample_summary,
+    )
+
+    def p6(w, h, v):
+        return bytearray(b"P6\n%d %d\n255\n" % (w, h) + bytes([v] * (3 * w * h)))
+
+    df = spark.createDataFrame(
+        [(1, p6(1, 1, 7)), (2, p6(1, 5, 9)), (3, p6(2, 2, 51))],
+        "media_id long, payload binary",
+    ).coalesce(1)  # one Arrow batch holds NULL and non-NULL means
+    got = {
+        r.media_id: (r.out_w, r.out_h, r.n_out_px, r.mean_r, r.mean_g, r.mean_b)
+        for r in image_downsample_summary(df).collect()
+    }
+    assert got == {
+        1: (0, 0, 0, None, None, None),
+        2: (0, 2, 0, None, None, None),
+        3: (1, 1, 1, 0.2, 0.2, 0.2),
+    }

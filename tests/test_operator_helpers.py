@@ -3,11 +3,14 @@ on ``pipelines.fanout.each_table`` (their jobs carry the caller's job
 group), AQE-path barriers go through ``session_cache.materialize``,
 session memos through ``session_cache.memo``, whose entries own their
 persisted frames, the ANN indexes through one k-means quantizer
-and one LSH bucket expression, and the media codec stages through one
-Arrow row-map seam."""
+and one LSH bucket expression, the media codec stages through one
+Arrow row-map seam, and the streaming operators through one per-key
+fold seam and one epoch-guarded additive merge."""
 
 import pathlib
 import re
+
+import pandas as pd
 
 from doeecommerce_datapipeline_spark.io import table
 from doeecommerce_datapipeline_spark.operators import session_cache
@@ -15,6 +18,7 @@ from doeecommerce_datapipeline_spark.operators.graph import lpa_labels
 from doeecommerce_datapipeline_spark.operators.quality_model import _cached_model
 from doeecommerce_datapipeline_spark.operators.retail import cf_holdout_hitrate
 from doeecommerce_datapipeline_spark.operators.similarity import _ann_index_state
+from doeecommerce_datapipeline_spark.streaming import stateful
 
 PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "doeecommerce_datapipeline_spark"
 OPERATORS = PACKAGE / "operators"
@@ -89,6 +93,60 @@ def test_one_arrow_row_map_seam_for_media_stages():
     assert src.count("mapInPandas(") == 1
     assert src.count("ensure_shipped(") == 1
     assert "def batches" not in src
+
+
+def test_one_fold_seam_and_one_replay_guard_for_streaming():
+    """Every stateful operator is a step kernel on stateful._fold_by_key
+    (the one applyInPandasWithState and ensure_shipped call there), no
+    operator gathers its own pandas chunks, and the additive sinks share
+    stream_ops._additive_merge_sink's one epoch guard."""
+    src = _sources(PACKAGE / "streaming")
+    assert src["streaming/stateful.py"].count("applyInPandasWithState(") == 1
+    assert src["streaming/stateful.py"].count("ensure_shipped(") == 1
+    assert not any("for pdf in pdfs" in s for s in src.values())
+    assert src["streaming/stream_ops.py"].count("_read_manifest(") == 1
+
+
+class _StubState:
+    """A GroupState stand-in that records what the fold does to it."""
+
+    def __init__(self, value, timed_out):
+        self.get, self.exists, self.hasTimedOut = value, value is not None, timed_out
+        self.removed, self.timeout_ms = False, None
+
+    def remove(self):
+        self.get, self.exists, self.removed = None, False, True
+
+    def update(self, value):
+        self.get, self.exists = value, True
+
+    def setTimeoutDuration(self, ms):
+        self.timeout_ms = ms
+
+
+def test_timed_out_session_is_emitted_once_then_dropped(spark):
+    # ``spark``: the fold's output schema parses on the JVM
+    fold = stateful._key_fold(
+        stateful.OUTPUT_SCHEMA, stateful._session_step, stateful._flush_session
+    )
+    state = _StubState((100, 160, 4), timed_out=True)
+    [frame] = fold((7,), iter([]), state)
+    assert frame.to_dict("records") == [
+        {
+            "user_id": 7,
+            "session_start": pd.Timestamp(100, unit="s", tz="UTC"),
+            "session_end": pd.Timestamp(160, unit="s", tz="UTC"),
+            "n_events": 4,
+        }
+    ]
+    assert state.removed and not state.exists
+    # the state is gone, so a second timeout emits nothing
+    assert list(fold((7,), iter([]), state)) == []
+    # a call with events folds them and re-arms the 60 s timeout
+    live = _StubState(None, timed_out=False)
+    events = pd.DataFrame({"user_id": [7], "t": [50]})
+    assert list(fold((7,), iter([events]), live)) == []
+    assert (live.get, live.timeout_ms) == ((50, 50, 1), 60_000)
 
 
 def _cached_plans(spark) -> int:

@@ -1,6 +1,10 @@
 """Units for the count-min sketch, skew profiler, MAD fence, EWMA and
 BFS operators (oracle parity at sf0.001 lives in test_parity.py)."""
 
+import operator
+from datetime import datetime, timedelta, timezone
+
+import pytest
 from pyspark.sql import functions as F
 
 from doeecommerce_datapipeline_spark.operators import (
@@ -184,76 +188,6 @@ def test_streaming_cms_merge_equals_batch_sketch(spark, tmp_path):
     assert got == want
 
 
-def test_cms_merge_epoch_replay_is_noop(spark, tmp_path):
-    """Re-delivering an epoch (the restart-recovery path) must not
-    double-count: the epoch pointer in the commit meta gates it."""
-    from doeecommerce_datapipeline_spark.sinks.manifest_store import (
-        ManifestTable,
-    )
-    from doeecommerce_datapipeline_spark.streaming.stream_ops import (
-        foreach_batch_cms_merge,
-    )
-
-    cells = str(tmp_path / "cells")
-    batch = spark.createDataFrame([(i % 7,) for i in range(50)], "user_id long")
-    sink = foreach_batch_cms_merge(cells)
-    sink(batch, 0)
-    after_first = {
-        (r.row_i, r.bucket): r.cnt
-        for r in ManifestTable(spark, cells).read().collect()
-    }
-    sink(batch, 0)  # replay of epoch 0
-    after_replay = {
-        (r.row_i, r.bucket): r.cnt
-        for r in ManifestTable(spark, cells).read().collect()
-    }
-    assert after_replay == after_first
-    sink(batch, 1)  # genuinely new epoch doubles every touched cell
-    after_new = {
-        (r.row_i, r.bucket): r.cnt
-        for r in ManifestTable(spark, cells).read().collect()
-    }
-    assert after_new == {k: 2 * v for k, v in after_first.items()}
-
-
-def test_cms_merge_new_lineage_is_not_skipped(spark, tmp_path):
-    """A FRESH streaming query (new checkpoint => epochs restart at 0)
-    feeding an existing cells table must still apply its batches; only
-    a replay within the SAME lineage is a no-op. Regression for the
-    epoch-only guard that silently dropped every batch of a new query."""
-    from doeecommerce_datapipeline_spark.sinks.manifest_store import (
-        ManifestTable,
-    )
-    from doeecommerce_datapipeline_spark.streaming.stream_ops import (
-        foreach_batch_cms_merge,
-    )
-
-    cells = str(tmp_path / "cells")
-    batch = spark.createDataFrame([(i % 7,) for i in range(50)], "user_id long")
-    first = foreach_batch_cms_merge(cells, lineage_id="ckpt-A")
-    first(batch, 0)
-    first(batch, 1)
-    after_a = {
-        (r.row_i, r.bucket): r.cnt
-        for r in ManifestTable(spark, cells).read().collect()
-    }
-    # new query lineage: its epoch 0 < stored epoch 1 but must apply
-    second = foreach_batch_cms_merge(cells, lineage_id="ckpt-B")
-    second(batch, 0)
-    after_b = {
-        (r.row_i, r.bucket): r.cnt
-        for r in ManifestTable(spark, cells).read().collect()
-    }
-    assert after_b == {k: v + v // 2 for k, v in after_a.items()}
-    # and a replay within lineage B is still a no-op
-    second(batch, 0)
-    after_replay = {
-        (r.row_i, r.bucket): r.cnt
-        for r in ManifestTable(spark, cells).read().collect()
-    }
-    assert after_replay == after_b
-
-
 def test_streaming_hll_merge_equals_batch_registers(spark, tmp_path):
     """Drain a 3-file stream through foreach_batch_hll_merge: the ACID
     register table must equal the batch-built registers over the union
@@ -299,31 +233,110 @@ def test_streaming_hll_merge_equals_batch_registers(spark, tmp_path):
     assert got == want and got
 
 
-def test_hll_merge_epoch_replay_is_noop(spark, tmp_path):
+def _add(a, b):
+    return tuple(map(operator.add, a, b))
+
+
+def _max(a, b):
+    return tuple(map(max, a, b))
+
+
+_T0 = datetime(2024, 1, 1)
+
+
+def _additive_sink(kind, path, **lineage):
+    """The sink under test, its state key columns and how two states
+    of one key combine."""
+    from doeecommerce_datapipeline_spark.streaming import stream_ops as S
+
+    if kind == "cms":
+        sink = S.foreach_batch_cms_merge(path, **lineage)
+        return sink, ("row_i", "bucket"), _add
+    if kind == "hll":
+        sink = S.foreach_batch_hll_merge(path, **lineage)
+        return sink, ("event_type", "bucket"), _max
+    if kind == "psi":
+        mid_us = int(datetime(2024, 1, 2, 6, tzinfo=timezone.utc).timestamp()) * 10**6
+        sink = S.foreach_batch_psi_bins(
+            path, v_lo=0.0, v_hi=15.0, t_bound_2x_us=2 * mid_us, **lineage
+        )
+        return sink, ("bin", "half"), _add
+    sink = S.foreach_batch_moments_merge(path, **lineage)
+    return sink, ("event_type",), _add
+
+
+def _sink_batch(spark):
+    types = ("view", "click", "purchase")
+    return spark.createDataFrame(
+        [
+            (i % 7, types[i % 3], (i % 11) * 1.25, _T0 + timedelta(hours=i))
+            for i in range(60)
+        ],
+        "user_id long, event_type string, value double, ts timestamp",
+    )
+
+
+def _sink_state(spark, path, keys):
     from doeecommerce_datapipeline_spark.sinks.manifest_store import (
         ManifestTable,
     )
-    from doeecommerce_datapipeline_spark.streaming.stream_ops import (
-        foreach_batch_hll_merge,
-    )
 
-    regs = str(tmp_path / "regs")
-    batch = spark.createDataFrame(
-        [(i % 9, "view") for i in range(60)], "user_id long, event_type string"
-    )
-    sink = foreach_batch_hll_merge(regs)
+    tbl = ManifestTable(spark, path)
+    rows = tbl.read().collect()
+    state = {
+        tuple(r[k] for k in keys): tuple(
+            v for k, v in r.asDict().items() if k not in keys
+        )
+        for r in rows
+    }
+    return tbl.current_version(), state
+
+
+SINKS = ["cms", "hll", "psi", "moments"]
+
+
+@pytest.mark.parametrize("kind", SINKS)
+def test_additive_merge_epoch_replay_is_noop(spark, tmp_path, kind):
+    """Re-delivering an epoch (the restart-recovery path) must not
+    double-count: the epoch pointer in the commit meta gates it, and
+    no new version is committed. A genuinely new epoch folds in."""
+    path = str(tmp_path / kind)
+    batch = _sink_batch(spark)
+    sink, keys, combine = _additive_sink(kind, path)
     sink(batch, 0)
-    v1 = ManifestTable(spark, regs).current_version()
-    sink(batch, 0)  # replay: guarded no-op
-    tbl = ManifestTable(spark, regs)
-    assert tbl.current_version() == v1
-    # and even if replayed WITHOUT the guard, MAX-merge is idempotent
-    sink(batch, 1)
-    after = {
-        (r.event_type, r.bucket): r.m_j for r in tbl.read().collect()
-    }
-    sink(batch, 2)
-    again = {
-        (r.event_type, r.bucket): r.m_j for r in tbl.read().collect()
-    }
-    assert after == again
+    v1, first = _sink_state(spark, path, keys)
+    assert first
+    sink(batch, 0)  # replay of epoch 0
+    assert _sink_state(spark, path, keys) == (v1, first)
+    sink(batch, 1)  # genuinely new epoch
+    v2, after_new = _sink_state(spark, path, keys)
+    assert v2 == v1 + 1
+    assert after_new == {k: combine(v, v) for k, v in first.items()}
+    if kind == "hll":
+        # and even if replayed WITHOUT the guard, MAX-merge is idempotent
+        sink(batch, 2)
+        assert _sink_state(spark, path, keys)[1] == after_new
+
+
+@pytest.mark.parametrize("kind", SINKS)
+def test_additive_merge_new_lineage_is_not_skipped(spark, tmp_path, kind):
+    """A FRESH streaming query (new checkpoint => epochs restart at 0)
+    feeding an existing state table must still apply its batches; only
+    a replay within the SAME lineage is a no-op. Regression for the
+    epoch-only guard that silently dropped every batch of a new query."""
+    path = str(tmp_path / kind)
+    batch = _sink_batch(spark)
+    first, keys, combine = _additive_sink(kind, path, lineage_id="ckpt-A")
+    first(batch, 0)
+    _, once = _sink_state(spark, path, keys)
+    first(batch, 1)
+    va, after_a = _sink_state(spark, path, keys)
+    # new query lineage: its epoch 0 < stored epoch 1 but must apply
+    second, _, _ = _additive_sink(kind, path, lineage_id="ckpt-B")
+    second(batch, 0)
+    vb, after_b = _sink_state(spark, path, keys)
+    assert vb == va + 1
+    assert after_b == {k: combine(v, once[k]) for k, v in after_a.items()}
+    # and a replay within lineage B is still a no-op
+    second(batch, 0)
+    assert _sink_state(spark, path, keys) == (vb, after_b)
