@@ -23,6 +23,7 @@ from ..functions.scalars import (
     money_lattice_dsum,
 )
 from ..io import table
+from .windows import daily_order_revenue
 
 
 def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -550,10 +551,7 @@ def revenue_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     is double(exact sum)/n, and S_t = double(cum) − t·x̄ is two IEEE
     ops on bit-identical operands — the |S| ranking can't diverge.
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
-    )
+    daily = daily_order_revenue(table(spark, sf_dir, "orders"))
     tot = daily.agg(
         F.count(F.lit(1)).alias("n_days"),
         F.sum("rev").alias("tot"),
@@ -741,19 +739,6 @@ def benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
 ACF_MAX_LAG = 7
 
 
-def _daily_revenue_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily-revenue rollup (day, rev) with an eager localCheckpoint
-    barrier — the shared day-grain spine of the ACF/Ljung-Box pair.
-    Calendar-bounded at any fact scale; the barrier keeps the one
-    fact-sized aggregate from re-running once per consumer branch."""
-    o = table(spark, sf_dir, "orders")
-    return (
-        o.groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev"))
-        .localCheckpoint()
-    )
-
-
 def daily_revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation of the daily-revenue series at lags 1..7 —
     (lag, n_pairs, acf) — the seasonality detector that tells a
@@ -763,9 +748,9 @@ def daily_revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one fact shuffle to the daily rollup; the lag spine
     (7 rows) broadcasts onto it, and the shifted copy equi-joins back
     on the date key — dates-sized work end-to-end after the rollup.
-    The rollup localCheckpoints once for its two join sides (r9: the
-    un-checkpointed subtree re-ran the fact aggregate per side — the
-    kendall_tau_daily barrier).
+    The rollup localCheckpoints once for its two join sides: a lazy
+    day series under a self-join re-runs the fact aggregate once per
+    side.
     Determinism: daily revenue is an exact DECIMAL sum; per-lag
     sufficient statistics (n, Σx, Σy, Σx², Σy², Σxy) follow the
     numeric_corr_matrix seam — cross products multiply in DOUBLE
@@ -773,7 +758,8 @@ def daily_revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL before the order-free sum; the closing Pearson arithmetic
     is a fixed dag of double ops on bit-identical operands.
     """
-    return _acf_over(spark, _daily_revenue_ckpt(spark, sf_dir))
+    daily = daily_order_revenue(table(spark, sf_dir, "orders"))
+    return _acf_over(spark, daily.localCheckpoint())
 
 
 def _acf_over(spark: SparkSession, daily: DataFrame) -> DataFrame:
@@ -884,10 +870,7 @@ def weekday_seasonality_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     double(exact decimal sum)/count; the index is one further IEEE
     division — a fixed dag on identical operands, engine-exact.
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
-    )
+    daily = daily_order_revenue(table(spark, sf_dir, "orders"))
     per_dow = daily.groupBy(
         F.weekday("day").cast("int").alias("dow")
     ).agg(
@@ -1124,10 +1107,7 @@ def stl_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     centering sum (order-free); every subtraction after that is a
     fixed IEEE dag on identical operands.
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
-    )
+    daily = daily_order_revenue(table(spark, sf_dir, "orders"))
     w_ma = Window.orderBy("day").rowsBetween(-3, 3)
     # three consumers (weekday agg, centering, final join) — freeze
     # the day-grain series once so the orders rollup isn't re-scanned
@@ -2024,13 +2004,10 @@ def haar_energy_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference analog: none — extension surface (time-series family).
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y")
-    )
+    daily = daily_order_revenue(table(spark, sf_dir, "orders"))
     w = Window.orderBy("day")
     series = daily.select(
-        (F.row_number().over(w) - 1).alias("i"), "y"
+        (F.row_number().over(w) - 1).alias("i"), F.col("rev").alias("y")
     ).localCheckpoint()
     energies = []
     for level in range(1, HAAR_LEVELS + 1):
@@ -2337,10 +2314,7 @@ def runs_test_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded (one sort for the order statistics, one lag
     window for the run boundaries — both over the ≤ #days spine).
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
-    )
+    daily = daily_order_revenue(table(spark, sf_dir, "orders"))
     rn = F.row_number().over(Window.orderBy("rev", "day"))
     ranked = daily.select("day", "rev").withColumn("rn", rn)
     nrow = ranked.groupBy().agg(F.count(F.lit(1)).alias("nd"))
@@ -2412,15 +2386,16 @@ def ljung_box_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer operands.
 
     Shape: the parent's one fact shuffle; the LB extension is a
-    7-row window — free. r9: n_days counts the SAME checkpointed
-    (day, rev) spine the ACF body reads (one row per distinct day by
-    construction, so the count is identical to the former
-    distinct-days scan) instead of re-scanning the fact — the
-    composition pays exactly one fact pass.
+    7-row window — free. n_days counts the SAME checkpointed
+    (day, rev) series the ACF body reads (one row per distinct day by
+    construction) rather than re-scanning the fact — the composition
+    pays exactly one fact pass.
     """
     from pyspark.sql import Window as W
 
-    daily = _daily_revenue_ckpt(spark, sf_dir)
+    daily = daily_order_revenue(
+        table(spark, sf_dir, "orders")
+    ).localCheckpoint()
     acf = _acf_over(spark, daily)
     nd = daily.groupBy().agg(F.count(F.lit(1)).alias("n_days"))
     term = F.round(
@@ -2465,13 +2440,11 @@ def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     century of days); sign tests compare exact INT/DECIMAL values
     directly, never float products.
     """
-    o = table(spark, sf_dir, "orders")
-    d = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("x"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y"),
+    d = daily_order_revenue(
+        table(spark, sf_dir, "orders"), F.count(F.lit(1)).alias("x")
     ).localCheckpoint()
-    a = d.select(F.col("day").alias("da"), F.col("x").alias("xa"), F.col("y").alias("ya"))
-    b = d.select(F.col("day").alias("db"), F.col("x").alias("xb"), F.col("y").alias("yb"))
+    a = d.select(F.col("day").alias("da"), F.col("x").alias("xa"), F.col("rev").alias("ya"))
+    b = d.select(F.col("day").alias("db"), F.col("x").alias("xb"), F.col("rev").alias("yb"))
     conc = (
         ((F.col("xa") < F.col("xb")) & (F.col("ya") < F.col("yb")))
         | ((F.col("xa") > F.col("xb")) & (F.col("ya") > F.col("yb")))
@@ -2539,13 +2512,10 @@ def hurst_rs_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned (never global); everything after the rollup is
     calendar-bounded.
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("x")
-    )
-    # r9: barrier after the index window — idx feeds BOTH the block
-    # spine and the nrow scalar, so the un-checkpointed fact rollup ran
-    # once per consumer (day-grain state, calendar-bounded)
+    daily = daily_order_revenue(table(spark, sf_dir, "orders"))
+    # barrier after the index window: idx feeds BOTH the block spine
+    # and the nrow scalar, and without it the fact rollup runs once per
+    # consumer (day-grain state, calendar-bounded)
     idx = daily.withColumn(
         "rn", F.row_number().over(Window.orderBy("day"))
     ).localCheckpoint()
@@ -2564,7 +2534,7 @@ def hurst_rs_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             "m",
             F.floor((F.col("rn") - 1) / F.col("m")).alias("blk"),
             (((F.col("rn") - 1) % F.col("m")) + 1).alias("t"),
-            "x",
+            F.col("rev").alias("x"),
         )
     )
     wcum = (
@@ -2670,19 +2640,16 @@ def adf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one fact shuffle to the daily rollup, one calendar-bounded
     window for the index, one single-row reduce.
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("y")
-    )
-    # r9: barrier before the lag self-join — the un-checkpointed
-    # (rollup + index window) subtree re-ran the fact aggregate once
-    # per join side (the kendall_tau_daily pattern); day-grain state
+    daily = daily_order_revenue(table(spark, sf_dir, "orders"))
+    # barrier before the lag self-join: without it the rollup and the
+    # index window re-run the fact aggregate once per join side
+    # (day-grain state, calendar-bounded)
     idx = daily.withColumn(
         "rn", F.row_number().over(Window.orderBy("day"))
     ).localCheckpoint()
-    cur = idx.select(F.col("rn").alias("rn"), F.col("y").alias("y_t"))
+    cur = idx.select(F.col("rn").alias("rn"), F.col("rev").alias("y_t"))
     prev = idx.select(
-        (F.col("rn") + 1).alias("rn"), F.col("y").alias("y_lag")
+        (F.col("rn") + 1).alias("rn"), F.col("rev").alias("y_lag")
     )
     pairs = cur.join(prev, "rn").select(
         F.col("y_lag").alias("x"),
@@ -2757,12 +2724,11 @@ def granger_count_to_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one fact shuffle to the daily rollup; everything after is
     days-sized, ending in a single-row reduce.
     """
-    o = table(spark, sf_dir, "orders")
-    # r9: barrier before the lag self-join (the adf/kendall pattern) —
-    # without it the fact rollup + index window re-ran per join side
-    joint = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev"),
-        F.count(F.lit(1)).alias("cnt"),
+    # barrier before the lag self-join: both join sides read the
+    # indexed day series, and without it the fact rollup and the index
+    # window re-run once per side
+    joint = daily_order_revenue(
+        table(spark, sf_dir, "orders"), F.count(F.lit(1)).alias("cnt")
     ).withColumn(
         "rn", F.row_number().over(Window.orderBy("day"))
     ).localCheckpoint()
@@ -2988,10 +2954,7 @@ def durbin_watson_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one fact shuffle to the daily rollup, one calendar-bounded
     index window, one lag join on the index, a single-row reduce.
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
-    )
+    daily = daily_order_revenue(table(spark, sf_dir, "orders"))
     idx = daily.select(
         (F.col("rev") * 100).cast("long").alias("cents"),
         F.row_number().over(Window.orderBy("day")).alias("t"),
@@ -3281,11 +3244,10 @@ def distance_correlation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract); row means broadcast back onto it; three quantized
     sums close everything.
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("x"),
-        (F.sum(F.col("o_totalprice").cast("decimal(18,2)")) * 100)
-        .cast("long").alias("cents"),
+    daily = daily_order_revenue(
+        table(spark, sf_dir, "orders"), F.count(F.lit(1)).alias("x")
+    ).select(
+        "day", "x", (F.col("rev") * 100).cast("long").alias("cents")
     ).localCheckpoint(eager=True)
     inv = F.lit(1.0 / 1073741824.0)  # exact 2^-30
     # spread the probe side before the cross join: the checkpointed

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import operator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.scalars import basket_pairs, lattice_split_sum
@@ -134,6 +134,44 @@ def pagerank(
     return ranks
 
 
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The symmetrized customer↔supplier trade graph (src, dst): an
+    edge iff the customer ordered a line item from the supplier.
+
+    Node ids are LONG — 2·custkey for customers, 2·suppkey+1 for
+    suppliers, parity is the namespace — since hashing and shuffling
+    longs beats 8-char strings on every exchange of the iterations.
+    The (cust, supp) pair build is materialized ONCE, before the
+    symmetrizing union: un-checkpointed, the join+distinct subtree is
+    evaluated once per union branch and again per consumer of the
+    union (pagerank's outdeg aggregate, each BFS round; ~1.2 s per
+    evaluation at sf0.1), while the union over the materialized pairs
+    is two projections of in-memory blocks.
+    """
+    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    pairs = (
+        o.join(l, o.o_orderkey == l.l_orderkey)
+        .select(
+            (F.col("o_custkey") * 2).alias("c"),
+            (F.col("l_suppkey") * 2 + 1).alias("s"),
+        )
+        .distinct()
+        .localCheckpoint()
+    )
+    return pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
+        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
+    )
+
+
+def _trade_node_label() -> Column:
+    """The display id of a trade-graph ``node``: 'c<custkey>' or
+    's<suppkey>' (the raw key spaces overlap numerically)."""
+    return F.when(
+        F.col("node") % 2 == 0, F.concat(F.lit("c"), (F.col("node") / 2).cast("long"))
+    ).otherwise(F.concat(F.lit("s"), ((F.col("node") - 1) / 2).cast("long")))
+
+
 def supplier_influence_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the symmetrized customer↔supplier trade graph
     (edge iff the customer ordered a line item from the supplier;
@@ -144,38 +182,12 @@ def supplier_influence_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     natural-key join, DISTINCT on the (cust, supp) pair — edge count
     is bounded by distinct trading relationships, not fact rows.
     """
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    # the whole iteration runs on LONG node ids (2·custkey for
-    # customers, 2·suppkey+1 for suppliers — parity is the namespace):
-    # hashing/shuffling longs beats 8-char strings on every exchange;
-    # the display string materializes only on the final 20 rows.
-    # r9: the pair build is materialized ONCE — un-checkpointed, the
-    # join+distinct subtree was evaluated FOUR times (twice through the
-    # symmetrizing union, twice more through pagerank's outdeg
-    # aggregate over that union; measured ~1.2 s per evaluation at
-    # sf0.1); every consumer now scans the materialized pair table
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = pairs.select(F.col("c").alias("src"), F.col("s").alias("dst")).unionByName(
-        pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
-    )
-    node_str = F.when(
-        F.col("node") % 2 == 0, F.concat(F.lit("c"), (F.col("node") / 2).cast("long"))
-    ).otherwise(F.concat(F.lit("s"), ((F.col("node") - 1) / 2).cast("long")))
     # the display string materializes BEFORE the top-k cut so rank
     # ties break on the same string order as the oracle (the
     # TakeOrderedAndProject runs over #nodes rows — negligible)
     return (
-        pagerank(edges)
-        .select(node_str.alias("node"), F.col("rank").alias("pr"))
+        pagerank(_trade_edges(spark, sf_dir))
+        .select(_trade_node_label().alias("node"), F.col("rank").alias("pr"))
         .orderBy(F.desc("pr"), F.asc("node"))
         .limit(20)
     )
@@ -274,34 +286,10 @@ def trade_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unroll can't blow up on cycles the way a naive recursive
     path-enumeration CTE would.
     """
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    # r9: materialize the pair build, not the symmetrized edge list —
-    # the old edges.localCheckpoint() evaluated the join+distinct twice
-    # (once per union branch); checkpointing pairs runs it once, and
-    # the union downstream is two projections over the materialized
-    # table (BFS consumers re-scan in-memory blocks, not the lineage)
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    edges = pairs.select(
-        F.col("c").alias("src"), F.col("s").alias("dst")
-    ).unionByName(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
+    edges = _trade_edges(spark, sf_dir)
     source = edges.agg(F.min("src").alias("node"))
     out = bfs_levels(edges, source, max_depth=3)
-    node_str = F.when(
-        F.col("node") % 2 == 0,
-        F.concat(F.lit("c"), (F.col("node") / 2).cast("long")),
-    ).otherwise(
-        F.concat(F.lit("s"), ((F.col("node") - 1) / 2).cast("long"))
-    )
-    return out.select(node_str.alias("node"), "dist")
+    return out.select(_trade_node_label().alias("node"), "dist")
 
 
 def hits_part_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:

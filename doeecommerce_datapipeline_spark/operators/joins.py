@@ -22,6 +22,7 @@ from ..functions.scalars import (
     money_lattice_dsum,
 )
 from ..io import table
+from .windows import daily_order_revenue
 
 
 def user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,19 +146,17 @@ def daily_orders_vs_events_full_outer(
     touches #days rows, never the facts. Counts coalesce to 0;
     revenue stays NULL on event-only days (0 would be a lie).
     """
-    o = table(spark, sf_dir, "orders")
-    e = table(spark, sf_dir, "events")
-    o_daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        money_lattice_dsum("o_totalprice").alias("order_revenue"),
+    o_daily = daily_order_revenue(
+        table(spark, sf_dir, "orders"), F.count(F.lit(1)).alias("n_orders")
     )
+    e = table(spark, sf_dir, "events")
     e_daily = e.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).alias("n_events")
     )
     return o_daily.join(e_daily, ["day"], "full").select(
         "day",
         F.coalesce("n_orders", F.lit(0)).alias("n_orders"),
-        "order_revenue",
+        F.col("rev").cast("double").alias("order_revenue"),
         F.coalesce("n_events", F.lit(0)).alias("n_events"),
     )
 

@@ -11,18 +11,22 @@ Determinism: pandas keep='last' depends on input order under timestamp
 ties (SURVEY §7.4 risk 3); here every window carries an explicit total
 order (unique id tiebreaker), so results are stable under any
 partitioning.
+
+The time-series faces here and in analytics.py read one day series,
+``daily_order_revenue`` (SURVEY A1's vw_daily_revenue grain); the
+recursive smoothers run over it through one grouped-map seam,
+``_recurse_daily``.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
+import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.scalars import (
-    disc_rev_sum,
-    money_lattice_dsum,
-    money_lattice_sum,
-)
+from ..functions.scalars import disc_rev_sum, money_lattice_sum
 from ..io import table
 
 
@@ -186,6 +190,24 @@ def customer_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def daily_order_revenue(orders: DataFrame, *aggs: Column) -> DataFrame:
+    """The order-revenue day series: (day, rev, *aggs), one row per
+    ``to_date(o_orderdate)`` of ``orders``.
+
+    ``rev`` is the exact DECIMAL(28,2) sum of o_totalprice — the value
+    and type of ``F.sum(cast(o_totalprice as decimal(18,2)))`` — summed
+    on the long cent lattice. Callers filter ``orders`` first when
+    they need a sub-series, add per-day measures through ``aggs``, and
+    cast or rename ``rev`` themselves. The rollup is the one fact
+    shuffle of every face built on it; everything after runs over the
+    calendar-bounded day grain. Barriers are the caller's: the series
+    is returned lazy.
+    """
+    return orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
+        money_lattice_sum("o_totalprice").alias("rev"), *aggs
+    )
+
+
 def daily_revenue_gapfilled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar-spine gap filling with forward fill: every day between
     the first and last urgent-order date gets a row; days with no
@@ -202,8 +224,8 @@ def daily_revenue_gapfilled(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").where(
         F.col("o_orderpriority") == "1-URGENT"
     )
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        money_lattice_dsum("o_totalprice").alias("revenue")
+    daily = daily_order_revenue(o).select(
+        "day", F.col("rev").cast("double").alias("revenue")
     )
     spine = (
         daily.agg(F.min("day").alias("mn"), F.max("day").alias("mx"))
@@ -270,8 +292,8 @@ def daily_revenue_interpolated(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").where(
         F.col("o_orderpriority") == "1-URGENT"
     )
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        money_lattice_dsum("o_totalprice").alias("revenue")
+    daily = daily_order_revenue(o).select(
+        "day", F.col("rev").cast("double").alias("revenue")
     )
     spine = (
         daily.agg(F.min("day").alias("mn"), F.max("day").alias("mx"))
@@ -331,10 +353,7 @@ def ewma_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (series edges and interior gaps keep a proper weighted mean
     instead of decaying toward zero).
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        money_lattice_sum("o_totalprice").alias("rev")
-    )
+    daily = daily_order_revenue(table(spark, sf_dir, "orders"))
     wts = F.array(*[F.lit(1 << (13 - i)) for i in range(14)])
     contribs = daily.select(
         "day", "rev", F.posexplode(wts).alias("k", "wt")
@@ -370,10 +389,7 @@ def revenue_day_over_day(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal sums BEFORE the double cast (order-free); pct_change is
     one double division.
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        money_lattice_sum("o_totalprice").alias("rev")
-    )
+    daily = daily_order_revenue(table(spark, sf_dir, "orders"))
     w = Window.orderBy("day")
     d = daily.select(
         "day", "rev", F.lag("rev", 1).over(w).alias("prev")
@@ -411,10 +427,7 @@ def bollinger_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE double ops on those exact operands. Days without a full
     20-day history emit NULL bands and never flag.
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        money_lattice_sum("o_totalprice").alias("rev")
-    )
+    daily = daily_order_revenue(table(spark, sf_dir, "orders"))
     w = Window.orderBy("day").rowsBetween(-(BOLLINGER_WINDOW - 1), 0)
     revd = F.col("rev").cast("double")
     # squares quantize at SCALE 0 (r6): a 20-day window of ~2.6e14
@@ -465,6 +478,51 @@ def bollinger_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 EWMA_ALPHA = 0.3
 
 
+def _recurse_daily(
+    spark: SparkSession, sf_dir: str, kernel: Callable[..., dict], schema: str
+) -> DataFrame:
+    """The recursive oracle class's one grouped-map boundary: the whole
+    order-revenue day series runs as ONE group, sorted by day, through
+    ``kernel(day, x)`` — the day Series and the DOUBLE revenue array —
+    which returns the columns that follow (day, revenue), typed by
+    ``schema``. One group is sound because the series is
+    calendar-bounded (thousands of rows at any fact scale, the
+    bounded-group contract shared with value_drift_ks); the fact is
+    touched once, by the day rollup. The kernels are module functions,
+    so the package ships to the workers first."""
+    from ..pyfiles import ensure_shipped
+
+    ensure_shipped(spark)
+    daily = daily_order_revenue(table(spark, sf_dir, "orders")).select(
+        "day", F.col("rev").cast("double").alias("revenue")
+    )
+
+    def fit(pdf):
+        pdf = pdf.sort_values("day").reset_index(drop=True)
+        out = kernel(pdf["day"], pdf["revenue"].to_numpy(float))
+        return pdf[["day", "revenue"]].assign(**out)
+
+    return daily.groupBy(F.lit(1).alias("_g")).applyInPandas(
+        fit, "day date, revenue double, " + schema
+    )
+
+
+def _q4(v):
+    """The recursions' rounding lattice floor(v·1e4 + 0.5)/1e4: explicit
+    IEEE ops, the same bits as the DuckDB twins' expression."""
+    return np.floor(v * 1e4 + 0.5) / 1e4
+
+
+def _ewma_series(day, x):
+    e = np.empty_like(x)
+    prev = _q4(x[0])
+    e[0] = prev
+    for i in range(1, len(x)):
+        prev = _q4(EWMA_ALPHA * x[i] + (1.0 - EWMA_ALPHA) * prev)
+        e[i] = prev
+    return {"ewma": e}
+
+
 def ewma_recursive_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average of daily revenue
     (alpha = 0.3) — the smoothing recursion behind every ops
@@ -483,43 +541,29 @@ def ewma_recursive_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     The fact shuffle is the one day rollup; the recursion input is
     the aggregated series, never the fact.
     """
-    from ..pyfiles import ensure_shipped
-
-    ensure_shipped(spark)
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("revenue")
-    )
-
-    def fit(pdf):
-        import numpy as np
-
-        pdf = pdf.sort_values("day").reset_index(drop=True)
-        x = pdf["revenue"].to_numpy(float)
-        e = np.empty_like(x)
-        prev = np.floor(x[0] * 1e4 + 0.5) / 1e4
-        e[0] = prev
-        for i in range(1, len(x)):
-            v = EWMA_ALPHA * x[i] + (1.0 - EWMA_ALPHA) * prev
-            prev = np.floor(v * 1e4 + 0.5) / 1e4
-            e[i] = prev
-        pdf["ewma"] = e
-        return pdf[["day", "revenue", "ewma"]]
-
-    return daily.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        fit, "day date, revenue double, ewma double"
-    )
+    return _recurse_daily(spark, sf_dir, _ewma_series, "ewma double")
 
 
-HOLT_ALPHA = 0.3
-HOLT_BETA = 0.1
+def _holt_series(day, x):
+    n = len(x)
+    level, trend, fc = (np.full(n, np.nan) for _ in range(3))
+    if n >= 2:
+        lv, bv = _q4(x[0]), _q4(x[1] - x[0])
+        level[0], trend[0] = lv, bv
+        for i in range(1, n):
+            fc[i] = lv + bv
+            # literal 0.7/0.9 (not 1-alpha expressions) so the
+            # constants are the same double bits as the SQL twin's
+            new_l = _q4(0.3 * x[i] + 0.7 * (lv + bv))
+            bv = _q4(0.1 * (new_l - lv) + 0.9 * bv)
+            lv = new_l
+            level[i], trend[i] = lv, bv
+    return {"level": level, "trend": trend, "forecast": fc}
 
 
 def holt_linear_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Holt double-exponential smoothing of daily revenue: coupled
-    level/trend recursions l_t = a*x_t + (1-a)*(l+b),
+    """Holt double-exponential smoothing of daily revenue (a = 0.3,
+    g = 0.1): coupled level/trend recursions l_t = a*x_t + (1-a)*(l+b),
     b_t = g*(l_t - l_prev) + (1-g)*b — the next step up from
     ewma_recursive_daily (which has no trend state), emitting the
     one-step-ahead forecast each day. Same recursive oracle class:
@@ -528,47 +572,9 @@ def holt_linear_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     lattice so a 2400-step double recursion stays bit-identical.
     Seed: l_0 = x_0, b_0 = x_1 - x_0 (both lattice-rounded).
     """
-    from ..pyfiles import ensure_shipped
-
-    ensure_shipped(spark)
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("revenue")
-    )
-
-    def fit(pdf):
-        import numpy as np
-
-        q = lambda v: np.floor(v * 1e4 + 0.5) / 1e4  # noqa: E731
-        pdf = pdf.sort_values("day").reset_index(drop=True)
-        x = pdf["revenue"].to_numpy(float)
-        n = len(x)
-        level = np.full(n, np.nan)
-        trend = np.full(n, np.nan)
-        fc = np.full(n, np.nan)
-        if n >= 2:
-            lv = q(x[0])
-            bv = q(x[1] - x[0])
-            level[0], trend[0] = lv, bv
-            for i in range(1, n):
-                fc[i] = lv + bv
-                # literal 0.7/0.9 (not 1-alpha expressions) so the
-                # constants are the same double bits as the SQL twin's
-                new_l = q(0.3 * x[i] + 0.7 * (lv + bv))
-                bv = q(0.1 * (new_l - lv) + 0.9 * bv)
-                lv = new_l
-                level[i], trend[i] = lv, bv
-        pdf["level"] = level
-        pdf["trend"] = trend
-        pdf["forecast"] = fc
-        return pdf[["day", "revenue", "level", "trend", "forecast"]]
-
-    return daily.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        fit,
-        "day date, revenue double, level double, trend double,"
-        " forecast double",
+    return _recurse_daily(
+        spark, sf_dir, _holt_series,
+        "level double, trend double, forecast double",
     )
 
 
@@ -586,9 +592,8 @@ def rolling_median_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     of order volume; at a finer output grain the same frame
     partitions by key. Sorting ≤7 doubles per row is O(1).
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        money_lattice_dsum("o_totalprice").alias("revenue")
+    daily = daily_order_revenue(table(spark, sf_dir, "orders")).select(
+        F.col("day").alias("d"), F.col("rev").cast("double").alias("revenue")
     )
     w = Window.orderBy("d").rowsBetween(-6, 0)
     arr = F.array_sort(F.collect_list("revenue").over(w))
@@ -629,9 +634,8 @@ def forecast_backtest_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is a fixed IEEE dag. The fact collapses to the day
     grain before any window runs.
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        money_lattice_dsum("o_totalprice").alias("revenue")
+    daily = daily_order_revenue(table(spark, sf_dir, "orders")).select(
+        F.col("day").alias("d"), F.col("rev").cast("double").alias("revenue")
     )
     w = Window.orderBy("d")
     wd = Window.orderBy(F.col("d").desc())
@@ -678,24 +682,21 @@ def revenue_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame row count; calendar features are pure integer expressions.
     Rows missing a lag keep NULL (the model's mask), not a fake 0.
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias(
-            "rev_q"
-        )
-    )
+    daily = daily_order_revenue(
+        table(spark, sf_dir, "orders")
+    ).withColumnRenamed("day", "d")
     w = Window.orderBy("d")
     wf = Window.orderBy("d").rowsBetween(-6, 0)
-    rev = F.col("rev_q").cast("double")
+    rev = F.col("rev").cast("double")
     return daily.select(
         "d",
         rev.alias("revenue"),
-        F.lag("rev_q", 1).over(w).cast("double").alias("lag_1"),
-        F.lag("rev_q", 7).over(w).cast("double").alias("lag_7"),
-        F.lag("rev_q", 14).over(w).cast("double").alias("lag_14"),
+        F.lag("rev", 1).over(w).cast("double").alias("lag_1"),
+        F.lag("rev", 7).over(w).cast("double").alias("lag_7"),
+        F.lag("rev", 14).over(w).cast("double").alias("lag_14"),
         (
-            F.sum("rev_q").over(wf).cast("double")
-            / F.count("rev_q").over(wf).cast("double")
+            F.sum("rev").over(wf).cast("double")
+            / F.count("rev").over(wf).cast("double")
         ).alias("ma_7"),
         F.weekday("d").cast("int").alias("dow"),
         (F.col("d") == F.last_day("d")).alias("is_month_end"),
@@ -723,9 +724,8 @@ def conformal_forecast_band(
     interpolation), and the forecast for T+1..T+7 is the last
     observed week read off a lag window. Day-grain throughout.
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
-        money_lattice_dsum("o_totalprice").alias("revenue")
+    daily = daily_order_revenue(table(spark, sf_dir, "orders")).select(
+        F.col("day").alias("d"), F.col("rev").cast("double").alias("revenue")
     ).localCheckpoint(eager=True)  # day-grain; 3 consumers below
     w = Window.orderBy("d")
     resid = daily.select(
@@ -833,6 +833,34 @@ def top_movers_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _holt_winters_series(day, x):
+    dow = day.map(lambda d: (d.weekday() + 1) % 7).to_numpy()
+    n = len(x)
+    level, trend, fc, seas = (np.full(n, np.nan) for _ in range(4))
+    if n >= 2:
+        s = [0.0] * 7
+        lv, bv = _q4(x[0]), _q4(x[1] - x[0])
+        level[0], trend[0], seas[0] = lv, bv, 0.0
+        for i in range(1, n):
+            d = int(dow[i])
+            sd = s[d]
+            fc[i] = lv + bv + sd
+            # literal complements (0.7/0.9/0.8) — the same double
+            # bits the SQL twin parses
+            new_l = _q4(0.3 * (x[i] - sd) + 0.7 * (lv + bv))
+            bv = _q4(0.1 * (new_l - lv) + 0.9 * bv)
+            s[d] = _q4(0.2 * (x[i] - new_l) + 0.8 * sd)
+            lv = new_l
+            level[i], trend[i], seas[i] = lv, bv, s[d]
+    return {
+        "dow": dow.astype("int32"),
+        "forecast": fc,
+        "level": level,
+        "trend": trend,
+        "seasonal": seas,
+    }
+
+
 def holt_winters_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt-Winters ADDITIVE triple smoothing of daily revenue with a
     weekly season — the third member of the recursive oracle class
@@ -855,56 +883,8 @@ def holt_winters_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     any corpus size) in one grouped-map; the fact is touched once by
     the daily rollup.
     """
-    from ..pyfiles import ensure_shipped
-
-    ensure_shipped(spark)
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("revenue")
-    )
-
-    def fit(pdf):
-        import numpy as np
-
-        q = lambda v: np.floor(v * 1e4 + 0.5) / 1e4  # noqa: E731
-        pdf = pdf.sort_values("day").reset_index(drop=True)
-        x = pdf["revenue"].to_numpy(float)
-        dow = pdf["day"].map(lambda d: (d.weekday() + 1) % 7).to_numpy()
-        n = len(x)
-        level = np.full(n, np.nan)
-        trend = np.full(n, np.nan)
-        fc = np.full(n, np.nan)
-        seas = np.full(n, np.nan)
-        if n >= 2:
-            s = [0.0] * 7
-            lv = q(x[0])
-            bv = q(x[1] - x[0])
-            level[0], trend[0], seas[0] = lv, bv, 0.0
-            for i in range(1, n):
-                d = int(dow[i])
-                sd = s[d]
-                fc[i] = lv + bv + sd
-                # literal complements (0.7/0.9/0.8) — the same double
-                # bits the SQL twin parses
-                new_l = q(0.3 * (x[i] - sd) + 0.7 * (lv + bv))
-                bv = q(0.1 * (new_l - lv) + 0.9 * bv)
-                s[d] = q(0.2 * (x[i] - new_l) + 0.8 * sd)
-                lv = new_l
-                level[i], trend[i], seas[i] = lv, bv, s[d]
-        pdf["dow"] = dow.astype("int32")
-        pdf["forecast"] = fc
-        pdf["level"] = level
-        pdf["trend"] = trend
-        pdf["seasonal"] = seas
-        return pdf[
-            ["day", "revenue", "dow", "forecast", "level", "trend",
-             "seasonal"]
-        ]
-
-    return daily.groupBy(F.lit(1).alias("_g")).applyInPandas(
-        fit,
-        "day date, revenue double, dow int, forecast double,"
-        " level double, trend double, seasonal double",
+    return _recurse_daily(
+        spark, sf_dir, _holt_winters_series,
+        "dow int, forecast double, level double, trend double,"
+        " seasonal double",
     )

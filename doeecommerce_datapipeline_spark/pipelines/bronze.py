@@ -1,7 +1,7 @@
-"""Bronze-layer load (database/layers/bronze/load_bronze.py): rename
-map (P1), lineage stamping (P3), validation quarantine (P9), append
-sink (S6). Multi-source tables union-by-name (U1) — fakestore +
-dummyjson both land in products_raw/users_raw.
+"""Bronze-layer load (database/layers/bronze/load_bronze.py): lineage
+stamping (P3), validation quarantine (P9), append sink (S6).
+Multi-source tables union-by-name (U1) — fakestore + dummyjson both
+land in products_raw/users_raw.
 """
 
 from __future__ import annotations
@@ -19,7 +19,6 @@ from ..sources.rest import with_lineage
 @dataclass
 class BronzeLoad:
     table: str
-    rename_map: dict[str, str] = field(default_factory=dict)
     rules: list[Rule] = field(default_factory=list)
 
 
@@ -31,17 +30,13 @@ def load_to_bronze(
     endpoint: str | None = None,
     quarantine_path: str | None = None,
 ) -> tuple[int, int]:
-    """Project/rename → lineage → quarantine split → append.
+    """Lineage → quarantine split → append.
 
     Returns (rows_loaded, rows_quarantined). The reference fails the
     whole batch on any invalid row; quarantining keeps the good rows
     flowing and preserves the bad ones for inspection — strictly more
     information, same guarantee for downstream layers.
     """
-    if cfg.rename_map:
-        df = df.select(
-            [F.col(src).alias(dst) for src, dst in cfg.rename_map.items()]
-        )
     df = with_lineage(df, source_name, endpoint, cfg.table)
     clean, bad = quarantine_split(df, cfg.rules)
     # audit counts ride the write actions via Observation (SURVEY C2's

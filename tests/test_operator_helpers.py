@@ -4,13 +4,17 @@ group), AQE-path barriers go through ``session_cache.materialize``,
 session memos through ``session_cache.memo``, whose entries own their
 persisted frames, the ANN indexes through one k-means quantizer
 and one LSH bucket expression, the media codec stages through one
-Arrow row-map seam, and the streaming operators through one per-key
-fold seam and one epoch-guarded additive merge."""
+Arrow row-map seam, the streaming operators through one per-key
+fold seam and one epoch-guarded additive merge, and the time-series
+faces through one order-revenue day series and one recursion seam."""
 
+import datetime
+import math
 import pathlib
 import re
 
 import pandas as pd
+from pyspark.sql import functions as F
 
 from doeecommerce_datapipeline_spark.io import table
 from doeecommerce_datapipeline_spark.operators import session_cache
@@ -18,6 +22,12 @@ from doeecommerce_datapipeline_spark.operators.graph import lpa_labels
 from doeecommerce_datapipeline_spark.operators.quality_model import _cached_model
 from doeecommerce_datapipeline_spark.operators.retail import cf_holdout_hitrate
 from doeecommerce_datapipeline_spark.operators.similarity import _ann_index_state
+from doeecommerce_datapipeline_spark.operators.windows import (
+    daily_order_revenue,
+    ewma_recursive_daily,
+    holt_linear_daily,
+    holt_winters_weekly,
+)
 from doeecommerce_datapipeline_spark.streaming import stateful
 
 PACKAGE = pathlib.Path(__file__).resolve().parents[1] / "doeecommerce_datapipeline_spark"
@@ -105,6 +115,50 @@ def test_one_fold_seam_and_one_replay_guard_for_streaming():
     assert src["streaming/stateful.py"].count("ensure_shipped(") == 1
     assert not any("for pdf in pdfs" in s for s in src.values())
     assert src["streaming/stream_ops.py"].count("_read_manifest(") == 1
+
+
+def test_daily_order_revenue_is_the_exact_decimal_day_sum(spark, sf_dir):
+    """The helper's rev is the value and type of the decimal-cast sum
+    it replaced, on the whole table and on a filtered input; extra
+    aggregates follow it; an empty input gives no days."""
+    o = table(spark, sf_dir, "orders")
+    for src in (o, o.where(F.col("o_orderpriority") == "1-URGENT")):
+        got = daily_order_revenue(src)
+        want = src.groupBy(F.to_date("o_orderdate").alias("day")).agg(
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
+        )
+        assert got.dtypes == want.dtypes == [("day", "date"), ("rev", "decimal(28,2)")]
+        assert sorted(got.collect()) == sorted(want.collect())
+    n = F.count(F.lit(1)).alias("n")
+    assert daily_order_revenue(o, n).columns == ["day", "rev", "n"]
+    assert daily_order_revenue(o.where(F.lit(False))).count() == 0
+
+
+def test_recursions_on_a_one_day_series(spark, tmp_path):
+    """A single observed day: EWMA emits the lattice-rounded value, Holt
+    and Holt-Winters have no second day to seed a trend from, so their
+    state stays NaN, which the Arrow boundary hands back as NULL (the
+    weekday slot is still reported)."""
+    d = str(tmp_path / "sf_one_day")
+    pdf = pd.DataFrame(
+        {
+            "o_orderkey": [1, 2],
+            "o_custkey": 1,
+            "o_orderdate": pd.to_datetime(["1995-03-07", "1995-03-07"]),
+            "o_totalprice": [1234.56, 7.89],
+        }
+    )
+    spark.createDataFrame(pdf).write.parquet(d + "/orders.parquet")
+    day, x = datetime.date(1995, 3, 7), 1242.45
+    [e] = ewma_recursive_daily(spark, d).collect()
+    assert (e.day, e.revenue) == (day, x)
+    assert e.ewma == math.floor(x * 1e4 + 0.5) / 1e4
+    [h] = holt_linear_daily(spark, d).collect()
+    assert (h.day, h.revenue) == (day, x)
+    assert (h.level, h.trend, h.forecast) == (None,) * 3
+    [w] = holt_winters_weekly(spark, d).collect()
+    assert (w.day, w.revenue, w.dow) == (day, x, 2)  # Tuesday
+    assert (w.forecast, w.level, w.trend, w.seasonal) == (None,) * 4
 
 
 class _StubState:

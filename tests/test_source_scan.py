@@ -6,7 +6,11 @@ and timing core, and plan claims live in tests/test_plans.py only.
 - ``SparkSession.builder`` appears only in session.py (``get_spark``);
 - no tool times with ``.foreach(``, which ships every output row through
   Python workers (``bench.time_cold`` writes to the noop sink);
-- no .py file refers to the retired plan-audit archive or its tool.
+- no .py file refers to the retired plan-audit archive or its tool;
+- the order-revenue day series is built only by
+  ``windows.daily_order_revenue`` (and by ``aggregates.daily_revenue``,
+  A1's different coalesced rollup), and windows.py's recursive
+  smoothers share its one ``applyInPandas`` seam.
 """
 
 import os
@@ -60,3 +64,16 @@ def test_tools_time_without_foreach():
 def test_no_plan_audit_references():
     paths = [p for p in _py_files(REPO) if p != THIS]
     assert not _hits(paths, r"PLANS_AUDIT|plan_audit")
+
+
+def test_one_order_revenue_day_series():
+    ops = os.path.join(PKG, "operators")
+    rx = re.compile(r'groupBy\(\s*F\.to_date\("o_orderdate"\)')
+    found = {}
+    for p in _py_files(ops):
+        with open(p, encoding="utf-8") as f:
+            n = len(rx.findall(f.read()))
+        if n:
+            found[os.path.basename(p)] = n
+    assert found == {"aggregates.py": 1, "windows.py": 1}
+    assert len(_hits([os.path.join(ops, "windows.py")], r"applyInPandas\(")) == 1
