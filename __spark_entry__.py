@@ -414,6 +414,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # record no longer describes them, so they re-check first.
 CHANGED_SINCE_RECORD = frozenset({
     "pricing_summary",  # sum_disc_price / sum_charge DECIMAL -> DOUBLE
+    "dow_baseline_anomalies",  # day TIMESTAMP -> DATE
 })
 
 
@@ -2232,9 +2233,9 @@ def _oracle_sql_literals() -> dict[str, str]:
         """,
         "dow_baseline_anomalies": """
             WITH daily AS (
-                SELECT o_orderdate AS day,
+                SELECT CAST(o_orderdate AS DATE) AS day,
                        SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev_dec
-                FROM orders GROUP BY o_orderdate
+                FROM orders GROUP BY CAST(o_orderdate AS DATE)
             ),
             win AS (
                 SELECT day, rev_dec,
@@ -9484,28 +9485,24 @@ def _oracle_sql_literals() -> dict[str, str]:
                 FROM st
             ), b AS (
                 SELECT n_obs, n, sx, sd, cxx, cxd, cdd,
-                       cxd / cxx AS beta
+                       CASE WHEN n_obs > 1 AND cxx > 0
+                            THEN cxd / cxx END AS beta
                 FROM c
+            ), se AS (
+                SELECT n_obs, n, sx, sd, beta,
+                       CASE WHEN n > 2
+                            THEN sqrt((GREATEST(cdd - beta * cxd, 0.0)
+                                       / (n - 2.0)) / cxx) END AS se
+                FROM b
             )
             SELECT n_obs,
                    ROUND(beta, 9) AS beta,
                    ROUND((sd - beta * sx) / n * 1048576.0, 6) AS alpha,
-                   CASE WHEN sqrt((GREATEST(cdd - beta * cxd, 0.0)
-                                   / (n - 2.0)) / cxx) > 0
-                        THEN ROUND(beta
-                                   / sqrt((GREATEST(cdd - beta * cxd, 0.0)
-                                           / (n - 2.0)) / cxx), 9)
-                   END AS t_stat,
+                   CASE WHEN se > 0 THEN ROUND(beta / se, 9) END AS t_stat,
                    COALESCE(
-                       CASE WHEN sqrt((GREATEST(cdd - beta * cxd, 0.0)
-                                       / (n - 2.0)) / cxx) > 0
-                            THEN ROUND(beta
-                                       / sqrt((GREATEST(cdd - beta * cxd,
-                                                        0.0)
-                                               / (n - 2.0)) / cxx), 9)
-                                 < -2.86
-                       END, FALSE) AS rejects_unit_root
-            FROM b
+                       CASE WHEN se > 0 THEN ROUND(beta / se, 9) < -2.86 END,
+                       FALSE) AS rejects_unit_root
+            FROM se
         """,
         "cf_holdout_hitrate": """
             WITH ranked AS (
@@ -10245,7 +10242,9 @@ def _oracle_sql_literals() -> dict[str, str]:
                 FROM daily
             ), closed AS (
                 SELECT np,
-                       GREATEST(sab, 0.0) / sqrt(saa * sbb) AS dcor2,
+                       CASE WHEN saa * sbb > 0
+                            THEN GREATEST(sab, 0.0) / sqrt(saa * sbb)
+                            ELSE 0.0 END AS dcor2,
                        (CAST(np AS DOUBLE) * sxy - sx * sy)
                        / (sqrt(GREATEST(CAST(np AS DOUBLE) * sxx
                                         - sx * sx, 0.0))
@@ -10851,7 +10850,8 @@ def _oracle_sql_literals() -> dict[str, str]:
                             THEN 'positive_autocorrelation'
                         WHEN ROUND(sd2 / se2, 9) > 2.5
                             THEN 'negative_autocorrelation'
-                        ELSE 'independent' END AS verdict
+                        WHEN ROUND(sd2 / se2, 9) IS NOT NULL
+                            THEN 'independent' END AS verdict
             FROM den CROSS JOIN num
         """,
         "yule_k_by_source": """

@@ -271,6 +271,36 @@ def exact_avg(col: Column | str, scale: str = MONEY) -> Column:
     return dec_sum(c, scale).cast("double") / F.count(c)
 
 
+def pearson_r(
+    n: Column, sx: Column, sy: Column, sxx: Column, syy: Column, sxy: Column
+) -> Column:
+    """Pearson r closed from raw moment sums (n, Σx, Σy, Σx², Σy², Σxy),
+    each a DOUBLE the caller rebuilt from its own exact sum:
+    (n·Σxy − Σx·Σy) / (√(n·Σx² − (Σx)²)·√(n·Σy² − (Σy)²)), one fixed
+    IEEE dag. The variance terms clamp at 0 against cancellation; a
+    zero denominator (a constant series, fewer than two points) gives
+    NULL."""
+    num = n * sxy - sx * sy
+    den = F.sqrt(F.greatest(n * sxx - sx * sx, F.lit(0.0))) * F.sqrt(
+        F.greatest(n * syy - sy * sy, F.lit(0.0))
+    )
+    return F.when(den > 0, num / den)
+
+
+def ols_fit(
+    n: Column, sx: Column, sy: Column, sxx: Column, sxy: Column
+) -> tuple[Column, Column]:
+    """Least-squares (slope, intercept) of y on x closed from raw moment
+    sums, each a DOUBLE the caller rebuilt from its own exact sum:
+    slope = (n·Σxy − Σx·Σy) / (n·Σx² − (Σx)²) and
+    intercept = (Σy − slope·Σx) / n, one fixed IEEE dag. A zero
+    denominator (constant x, fewer than two points) gives NULL for
+    both."""
+    den = n * sxx - sx * sx
+    slope = F.when(den > 0, (n * sxy - sx * sy) / den)
+    return slope, (sy - slope * sx) / n
+
+
 def norm_email(col: Column | str) -> Column:
     """F1: lower + trim (dummyjson_ingestor.py:570-577)."""
     c = F.col(col) if isinstance(col, str) else col

@@ -11,7 +11,7 @@ exact COUNT(DISTINCT)/median — mergeable, single-pass, bounded memory.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalars import (
@@ -21,6 +21,8 @@ from ..functions.scalars import (
     lattice_split_sum,
     lattice_sum_6dp,
     money_lattice_dsum,
+    ols_fit,
+    pearson_r,
 )
 from ..io import table
 from .windows import daily_order_revenue
@@ -412,60 +414,56 @@ def numeric_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE aggregate pass (col_x, col_y, n, corr) — the feature-screening
     primitive that fronts model-input selection.
 
-    All C(4,2) pairs come from a single scan on the INT64 LATTICE:
-    the measures are exact 2-decimal values, so q = round(x*100) is an
-    exact int64 and every Σq / Σ(q_a·q_b) is an exact integer sum —
-    order-free across engines AND long-backed in Spark's hash
-    aggregate (the previous decimal(28,8) formulation forced the
-    object-path BigDecimal accumulator: 3.5 s vs 0.6 s at sf0.1 for
-    the same 10 product sums). Product sums split hi/lo on 10^9 so
-    int64 never overflows: hi = p div 1e9 ≤ 1.2e5 sums to 7e14 even
-    at 6e9 rows (100 TB lineitem), lo < 1e9 sums to 6e18 < 2^63. The
-    closing corr arithmetic reconstructs doubles from bit-identical
-    integer operands; the per-pair rows unpivot map-side from the
-    single stats row — no per-pair scans, one partial-aggregated agg.
+    All C(4,2) pairs come from a single scan on the INT64 LATTICE
+    (``_pairwise_pearson``): the measures are exact 2-decimal values,
+    so q = round(x*100) is an exact int64 and every moment is an exact
+    integer sum, long-backed in Spark's hash aggregate (the previous
+    decimal(28,8) formulation forced the object-path BigDecimal
+    accumulator: 3.5 s vs 0.6 s at sf0.1 for the same 10 product
+    sums). No per-pair scans, one partial-aggregated agg.
     """
-    l = table(spark, sf_dir, "lineitem")
-    M = 1_000_000_000
-    scaled = l.select(
-        *[
-            F.round(F.col(c) * 100).cast("long").alias(f"q_{c}")
-            for c in CORR_COLS
-        ]
+    scaled = table(spark, sf_dir, "lineitem").select(
+        *[F.round(F.col(c) * 100).cast("long").alias(c) for c in CORR_COLS]
     )
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for c in CORR_COLS:
-        aggs.append(F.sum(f"q_{c}").alias(f"s_{c}"))
-    pairs2 = [(a, b) for i, a in enumerate(CORR_COLS) for b in CORR_COLS[i:]]
-    for a, b in pairs2:
-        p = f"(q_{a} * q_{b})"
-        aggs.append(F.expr(f"sum({p} div {M})").alias(f"hi_{a}_{b}"))
-        aggs.append(F.expr(f"sum({p} % {M})").alias(f"lo_{a}_{b}"))
-    row = scaled.agg(*aggs)
-    pairs = [
-        (a, b) for i, a in enumerate(CORR_COLS) for b in CORR_COLS[i + 1 :]
-    ]
+    return _pairwise_pearson(scaled, CORR_COLS, 100.0, "corr")
 
-    def sum_xy(a: str, b: str):
-        # Σ(x·y) = (Σhi·1e9 + Σlo) / 1e4 — exact ints in, fixed IEEE
+
+def _pairwise_pearson(
+    df: DataFrame, cols: list[str], unit: float, name: str
+) -> DataFrame:
+    """Pearson r of every pair of ``cols`` from ONE aggregate pass:
+    (col_x, col_y, n, <name>) per pair in upper-triangle order. Each
+    column holds an exact LONG lattice point x·unit, so every Σq and
+    Σ(q_a·q_b) is an exact integer sum — order-free across engines
+    and long-backed in Spark's hash aggregate. Product sums split
+    hi/lo on 10^9 so int64 never overflows: hi = p div 1e9 sums to
+    7e14 even at 6e9 rows (100 TB lineitem) for products up to 1.2e14,
+    lo < 1e9 sums to 6e18 < 2^63. The moments rebuild as doubles from
+    bit-identical integer operands (÷unit, ÷unit²) and close through
+    ``pearson_r``; the per-pair rows unpivot map-side from the single
+    stats row."""
+    M = 1_000_000_000
+    aggs = [F.count(F.lit(1)).alias("n")]
+    aggs += [F.sum(c).alias(f"s_{c}") for c in cols]
+    for i, a in enumerate(cols):
+        for b in cols[i:]:
+            p = f"({a} * {b})"
+            aggs.append(F.expr(f"sum({p} div {M})").alias(f"hi_{a}_{b}"))
+            aggs.append(F.expr(f"sum({p} % {M})").alias(f"lo_{a}_{b}"))
+    row = df.agg(*aggs)
+
+    def s(a: str) -> Column:
+        return F.col(f"s_{a}").cast("double") / F.lit(unit)
+
+    def sum_xy(a: str, b: str) -> Column:
+        # Σ(x·y) = (Σhi·1e9 + Σlo) / unit² — exact ints in, fixed IEEE
         # dag out (identical on any engine)
         return (
             F.col(f"hi_{a}_{b}").cast("double") * F.lit(float(M))
             + F.col(f"lo_{a}_{b}").cast("double")
-        ) / F.lit(1.0e4)
+        ) / F.lit(unit * unit)
 
-    def corr_expr(a: str, b: str):
-        n = F.col("n").cast("double")
-        sx = F.col(f"s_{a}").cast("double") / F.lit(100.0)
-        sy = F.col(f"s_{b}").cast("double") / F.lit(100.0)
-        sxx, syy = sum_xy(a, a), sum_xy(b, b)
-        sxy = sum_xy(a, b)
-        num = n * sxy - sx * sy
-        den = F.sqrt(F.greatest(n * sxx - sx * sx, F.lit(0.0))) * F.sqrt(
-            F.greatest(n * syy - sy * sy, F.lit(0.0))
-        )
-        return F.when(den > 0, num / den)
-
+    n = F.col("n").cast("double")
     out = F.explode(
         F.array(
             *[
@@ -473,13 +471,16 @@ def numeric_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit(a).alias("col_x"),
                     F.lit(b).alias("col_y"),
                     F.col("n").alias("n"),
-                    corr_expr(a, b).alias("corr"),
+                    pearson_r(
+                        n, s(a), s(b), sum_xy(a, a), sum_xy(b, b), sum_xy(a, b)
+                    ).alias(name),
                 )
-                for a, b in pairs
+                for i, a in enumerate(cols)
+                for b in cols[i + 1 :]
             ]
         )
     ).alias("p")
-    return row.select(out).select("p.col_x", "p.col_y", "p.n", "p.corr")
+    return row.select(out).select("p.col_x", "p.col_y", "p.n", f"p.{name}")
 
 
 def winsorized_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -604,10 +605,7 @@ def dow_baseline_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     deviation rounds at 6dp on both engines. Days without the full
     4-week history emit NULL baseline and never flag.
     """
-    o = table(spark, sf_dir, "orders")
-    daily = o.groupBy(F.col("o_orderdate").alias("day")).agg(
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev_dec")
-    )
+    daily = daily_order_revenue(table(spark, sf_dir, "orders"))
     w = (
         Window.partitionBy(F.dayofweek("day"))
         .orderBy("day")
@@ -616,7 +614,7 @@ def dow_baseline_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_prior = F.count(F.lit(1)).over(w)
     base = F.when(
         n_prior == DOW_BASELINE_WEEKS,
-        F.sum("rev_dec").over(w).cast("double") / n_prior.cast("double"),
+        F.sum("rev").over(w).cast("double") / n_prior.cast("double"),
     )
     dev = F.round(
         (F.col("revenue") - F.col("baseline")) / F.col("baseline"), 6
@@ -624,7 +622,7 @@ def dow_baseline_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         daily.select(
             "day",
-            F.col("rev_dec").cast("double").alias("revenue"),
+            F.col("rev").cast("double").alias("revenue"),
             base.alias("baseline"),
         )
         .select(
@@ -787,13 +785,8 @@ def _acf_over(spark: SparkSession, daily: DataFrame) -> DataFrame:
         F.sum(prod("y", "y")).alias("syy"),
         F.sum(prod("x", "y")).alias("sxy"),
     )
-    n = dd("n_pairs")
-    sx, sy = dd("sx"), dd("sy")
-    sxx, syy, sxy = dd("sxx"), dd("syy"), dd("sxy")
-    num = n * sxy - sx * sy
-    den = F.sqrt(F.greatest(n * sxx - sx * sx, F.lit(0.0))) * F.sqrt(
-        F.greatest(n * syy - sy * sy, F.lit(0.0))
-    )
+    moments = ("n_pairs", "sx", "sy", "sxx", "syy", "sxy")
+    r = pearson_r(*[dd(c) for c in moments])
     # 9dp rounding seam: the wide DECIMAL(38,6) sums exceed 2^53, and
     # the two engines' decimal→double conversions can differ in the
     # last ulp (DuckDB divides two doubles; Spark rounds once) — the
@@ -801,7 +794,7 @@ def _acf_over(spark: SparkSession, daily: DataFrame) -> DataFrame:
     return stats.select(
         "lag",
         "n_pairs",
-        F.round(F.when(den > 0, num / den), 9).alias("acf"),
+        F.round(r, 9).alias("acf"),
     )
 
 
@@ -987,11 +980,7 @@ def promo_lift_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     sq = F.col("sq").cast("double")
     sdd = F.col("sdd").cast("double") / F.lit(10000.0)
     sdq = F.col("sdq").cast("double") / F.lit(100.0)
-    den = nd * sdd - sd * sd
-    slope = F.when(den > 0, (nd * sdq - sd * sq) / den)
-    intercept = F.when(
-        den > 0, (sq - ((nd * sdq - sd * sq) / den) * sd) / nd
-    )
+    slope, intercept = ols_fit(nd, sd, sq, sdd, sdq)
     return agg.select(
         "p_brand",
         "n",
@@ -1202,15 +1191,15 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     gives cnt_less, and the DOUBLED average rank
     r2 = 2*cnt_less + cnt + 1 is an exact integer (ties' .5 cleared
     by doubling — the value_drift_mwu lattice trick). Three
-    broadcast joins attach r2 per row; one hash-agg computes every
-    pairwise Σr2a·r2b split hi/lo on 1e9 (exact to ~1e9 rows; past
+    broadcast joins attach r2 per row; one hash-agg
+    (``_pairwise_pearson``) computes every pairwise Σr2a·r2b split
+    hi/lo on 1e9 (exact to ~1e9 rows; past
     that the hi sums graduate to decimal(38) — noted degrade path).
     The 2× scaling cancels in the correlation, so rho is the exact
     Spearman, reconstructed through a fixed IEEE dag — bit-identical
     across engines.
     """
     li = table(spark, sf_dir, "lineitem")
-    M = 1_000_000_000
     base = li.select(
         *[F.col(c).alias(f"v_{c}") for c in SPEARMAN_COLS]
     )
@@ -1233,54 +1222,8 @@ def spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked = ranked.join(
             F.broadcast(rmap), ranked[f"v_{c}"] == rmap["v"]
         ).drop("v")
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for c in SPEARMAN_COLS:
-        aggs.append(F.sum(f"r_{c}").alias(f"s_{c}"))
-    pairs2 = [
-        (a, b)
-        for i, a in enumerate(SPEARMAN_COLS)
-        for b in SPEARMAN_COLS[i:]
-    ]
-    for a, b in pairs2:
-        p = f"(r_{a} * r_{b})"
-        aggs.append(F.expr(f"sum({p} div {M})").alias(f"hi_{a}_{b}"))
-        aggs.append(F.expr(f"sum({p} % {M})").alias(f"lo_{a}_{b}"))
-    row = ranked.agg(*aggs)
-
-    def sum_xy(a: str, b: str):
-        return F.col(f"hi_{a}_{b}").cast("double") * F.lit(
-            float(M)
-        ) + F.col(f"lo_{a}_{b}").cast("double")
-
-    def rho_expr(a: str, b: str):
-        n = F.col("n").cast("double")
-        sx = F.col(f"s_{a}").cast("double")
-        sy = F.col(f"s_{b}").cast("double")
-        num = n * sum_xy(a, b) - sx * sy
-        den = F.sqrt(
-            F.greatest(n * sum_xy(a, a) - sx * sx, F.lit(0.0))
-        ) * F.sqrt(F.greatest(n * sum_xy(b, b) - sy * sy, F.lit(0.0)))
-        return F.when(den > 0, num / den)
-
-    pairs = [
-        (a, b)
-        for i, a in enumerate(SPEARMAN_COLS)
-        for b in SPEARMAN_COLS[i + 1 :]
-    ]
-    out = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(a).alias("col_x"),
-                    F.lit(b).alias("col_y"),
-                    F.col("n").alias("n"),
-                    rho_expr(a, b).alias("rho"),
-                )
-                for a, b in pairs
-            ]
-        )
-    ).alias("p")
-    return row.select(out).select("p.col_x", "p.col_y", "p.n", "p.rho")
+    ranks = ranked.select(*[F.col(f"r_{c}").alias(c) for c in SPEARMAN_COLS])
+    return _pairwise_pearson(ranks, SPEARMAN_COLS, 1.0, "rho")
 
 
 def order_backlog_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1423,19 +1366,12 @@ def view_purchase_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x") * F.col("x")).alias("sxx"),
         F.sum(F.col("y2") * F.col("y2")).alias("syy"),
     )
-    n = F.col("n_days").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    num = n * F.col("sxy").cast("double") - sx * sy
-    den = F.sqrt(
-        F.greatest(n * F.col("sxx").cast("double") - sx * sx, F.lit(0.0))
-    ) * F.sqrt(
-        F.greatest(n * F.col("syy").cast("double") - sy * sy, F.lit(0.0))
-    )
+    moments = ("n_days", "sx", "sy", "sxx", "syy", "sxy")
+    r = pearson_r(*[F.col(c).cast("double") for c in moments])
     return agg.select(
         F.col("lag").cast("long").alias("lag"),
         "n_days",
-        F.when(den > 0, num / den).alias("xcorr"),
+        r.alias("xcorr"),
     ).orderBy("lag")
 
 
@@ -1874,19 +1810,14 @@ def huber_trend_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(xd * F.col("yd").cast("decimal(28,10)")).alias("sxy"),
     )
 
-    def _fit(n, sx, sxx, sy, sxy):
-        den = n * sxx - sx * sx
-        b1 = F.when(den > 0, (n * sxy - sx * sy) / den).otherwise(F.lit(0.0))
-        b0 = (sy - b1 * sx) / n
-        return b1, b0
+    def _fit(*moments):
+        # a degenerate fit starts IRLS from a zero slope; the intercept
+        # follows from that slope
+        n, sx, sy, sxx, sxy = [F.col(m).cast("double") for m in moments]
+        b1 = F.coalesce(ols_fit(n, sx, sy, sxx, sxy)[0], F.lit(0.0))
+        return b1, (sy - b1 * sx) / n
 
-    b1_0, b0_0 = _fit(
-        F.col("n").cast("double"),
-        F.col("sx").cast("double"),
-        F.col("sxx").cast("double"),
-        F.col("sy").cast("double"),
-        F.col("sxy").cast("double"),
-    )
+    b1_0, b0_0 = _fit("n", "sx", "sy", "sxx", "sxy")
     fit0 = stats0.select(
         "event_type",
         F.col("n").alias("n_days"),
@@ -1940,13 +1871,7 @@ def huber_trend_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("wy").alias("swy"),
             F.sum(F.col("wy") * xd).alias("swxy"),
         )
-        b1n, b0n = _fit(
-            F.col("sw").cast("double"),
-            F.col("swx").cast("double"),
-            F.col("swxx").cast("double"),
-            F.col("swy").cast("double"),
-            F.col("swxy").cast("double"),
-        )
+        b1n, b0n = _fit("sw", "swx", "swy", "swxx", "swxy")
         return ws.select(
             "event_type",
             "n_days",
@@ -2676,12 +2601,15 @@ def adf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     cxx = sxx - sx * sx / n
     cxd = sxd - sx * sd / n
     cdd = sdd - sd * sd / n
-    beta = cxd / cxx  # scale-invariant under the common 2^-20
+    # scale-invariant under the common 2^-20; NULL without a second
+    # pair or without x variance
+    beta = F.when((n > 1) & (cxx > 0), cxd / cxx)
     alpha = (sd - beta * sx) / n * PRE  # restores revenue units
     # a perfect fit (SSE == 0 up to fp cancellation) makes se = 0:
-    # clamp and null the statistic instead of emitting inf/nan
+    # clamp and null the statistic instead of emitting inf/nan; two
+    # pairs leave no residual degree of freedom
     sse = F.greatest(cdd - beta * cxd, F.lit(0.0))
-    se = F.sqrt((sse / (n - F.lit(2.0))) / cxx)
+    se = F.when(n > 2, F.sqrt((sse / (n - F.lit(2.0))) / cxx))
     t = F.when(se > 0, F.round(beta / se, 9))
     return st.select(
         "n_obs",
@@ -2843,12 +2771,9 @@ def simpson_slope_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("sxy").alias("psxy"),
     )
 
-    def slope(n, sx, sy, sxx, sxy):
-        nd = F.col(n).cast("double")
-        a, b = F.col(sx).cast("double"), F.col(sy).cast("double")
-        c, d = F.col(sxx).cast("double"), F.col(sxy).cast("double")
-        den = nd * c - a * a
-        return F.when(den != 0, F.round((nd * d - a * b) / den, 9))
+    def slope(*moments):
+        fit = ols_fit(*[F.col(m).cast("double") for m in moments])
+        return F.round(fit[0], 9)
 
     within = slope("n", "sx", "sy", "sxx", "sxy")
     pool = slope("pn", "psx", "psy", "psxx", "psxy")
@@ -2966,11 +2891,8 @@ def durbin_watson_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("t") * F.col("t")).alias("stt"),
         F.sum(F.col("t") * F.col("cents")).alias("sty"),
     )
-    n = F.col("n_days").cast("double")
-    st, sy = F.col("st").cast("double"), F.col("sy").cast("double")
-    stt, sty = F.col("stt").cast("double"), F.col("sty").cast("double")
-    beta = (n * sty - st * sy) / (n * stt - st * st)
-    alpha = (sy - beta * st) / n
+    moments = ("n_days", "st", "sy", "stt", "sty")
+    beta, alpha = ols_fit(*[F.col(c).cast("double") for c in moments])
     fit = m.select(
         "n_days", beta.alias("beta"), alpha.alias("alpha")
     )
@@ -3009,10 +2931,11 @@ def durbin_watson_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     dw = F.round(
         F.col("sd2").cast("double") / F.col("se2").cast("double"), 9
     )
+    # no statistic (fewer than two days, a perfect fit) asserts nothing
     verdict = (
         F.when(dw < 1.5, "positive_autocorrelation")
         .when(dw > 2.5, "negative_autocorrelation")
-        .otherwise("independent")
+        .when(dw.isNotNull(), "independent")
     )
     return den.crossJoin(F.broadcast(num)).select(
         "n_days", "slope", dw.alias("dw"), verdict.alias("verdict")
@@ -3337,7 +3260,11 @@ def distance_correlation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     sab = F.col("sab").cast("double") / F.lit(1e6)
     saa = F.col("saa").cast("double") / F.lit(1e6)
     sbb = F.col("sbb").cast("double") / F.lit(1e6)
-    dcor2 = F.greatest(sab, F.lit(0.0)) / F.sqrt(saa * sbb)
+    # a constant series has zero distance variance: dCor is 0 there
+    # (Székely–Rizzo–Bakirov 2007, Definition 3)
+    dcor2 = F.when(
+        saa * sbb > 0, F.greatest(sab, F.lit(0.0)) / F.sqrt(saa * sbb)
+    ).otherwise(F.lit(0.0))
     # Pearson on the same daily series, same exact-moment seam
     p_m = daily.select(
         F.col("x").cast("double").alias("px"),
@@ -3350,14 +3277,8 @@ def distance_correlation_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         q6(F.col("py") * F.col("py")).alias("syy"),
         q6(F.col("px") * F.col("py")).alias("sxy"),
     )
-    npd = F.col("np").cast("double")
-    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
-    sxx, syy = F.col("sxx").cast("double"), F.col("syy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    r = (npd * sxy - sx * sy) / (
-        F.sqrt(F.greatest(npd * sxx - sx * sx, F.lit(0.0)))
-        * F.sqrt(F.greatest(npd * syy - sy * sy, F.lit(0.0)))
-    )
+    moments = ("np", "sx", "sy", "sxx", "syy", "sxy")
+    r = pearson_r(*[F.col(c).cast("double") for c in moments])
     dcor = F.round(F.sqrt(dcor2), 9)
     return sums.crossJoin(F.broadcast(p_m)).select(
         F.col("np").cast("long").alias("n_days"),

@@ -24,7 +24,7 @@ import operator
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.scalars import basket_pairs, lattice_split_sum
+from ..functions.scalars import basket_pairs, lattice_split_sum, pearson_r
 from ..io import table
 from ..pipelines.fanout import each_table
 from . import session_cache
@@ -986,16 +986,10 @@ def copurchase_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("x") * F.col("y")).alias("sxy"),
     )
     nn = deg.groupBy().agg(F.count(F.lit(1)).alias("n_nodes"))
-    md = F.col("m").cast("double")
-    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
-    sxx, syy = F.col("sxx").cast("double"), F.col("syy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    num = md * sxy - sx * sy
-    den = F.sqrt(F.greatest(md * sxx - sx * sx, F.lit(0.0))) * F.sqrt(
-        F.greatest(md * syy - sy * sy, F.lit(0.0))
-    )
+    moments = ("m", "sx", "sy", "sxx", "syy", "sxy")
+    r = pearson_r(*[F.col(c).cast("double") for c in moments])
     return m.crossJoin(F.broadcast(nn)).select(
         "n_nodes",
         F.col("m").alias("n_directed_edges"),
-        F.when(den > 0, F.round(num / den, 9)).alias("assortativity"),
+        F.round(r, 9).alias("assortativity"),
     )

@@ -30,6 +30,7 @@ from ..functions.scalars import (
     lattice_sum_9dp_rounded,
     money_lattice_dsum,
     money_lattice_sum,
+    ols_fit,
 )
 from ..io import table
 from ..pipelines.fanout import each_table
@@ -277,18 +278,13 @@ def revenue_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    nd = F.col("n_days").cast("double")
-    sx = F.col("sx").cast("double")
-    sxx = F.col("sxx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxy = F.col("sxy").cast("double")
-    den = nd * sxx - sx * sx
-    slope = F.when(den > 0, (nd * sxy - sx * sy) / den)
+    moments = ("n_days", "sx", "sy", "sxx", "sxy")
+    slope, intercept = ols_fit(*[F.col(c).cast("double") for c in moments])
     return stats.select(
         "o_orderpriority",
         "n_days",
         slope.alias("slope"),
-        ((sy - slope * sx) / nd).alias("intercept"),
+        intercept.alias("intercept"),
     )
 
 

@@ -22,7 +22,7 @@ from ..functions.text import (
     token_count,
     tokens,
 )
-from ..functions.scalars import lattice_sum_9dp_rounded
+from ..functions.scalars import lattice_sum_9dp_rounded, ols_fit
 from ..io import table
 
 
@@ -846,14 +846,8 @@ def zipf_fit_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(dec(F.round(x * x, 9))).alias("sxx"),
         F.sum(dec(F.round(x * y, 9))).alias("sxy"),
     )
-    nd = F.col("n_terms").cast("double")
-    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
-    sxx, sxy = F.col("sxx").cast("double"), F.col("sxy").cast("double")
-    den = nd * sxx - sx * sx
-    slope = F.when(den > 0, (nd * sxy - sx * sy) / den)
-    intercept = F.when(
-        den > 0, (sy - ((nd * sxy - sx * sy) / den) * sx) / nd
-    )
+    moments = ("n_terms", "sx", "sy", "sxx", "sxy")
+    slope, intercept = ols_fit(*[F.col(c).cast("double") for c in moments])
     return agg.select(
         "source", "n_terms", slope.alias("slope"),
         intercept.alias("intercept"),
@@ -1700,19 +1694,14 @@ def heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sxy"
         ),
     )
-    nd = F.col("n").cast("double")
-    sx = F.col("sx").cast("double")
-    sy = F.col("sy").cast("double")
-    sxx = F.col("sxx").cast("double")
-    sxy = F.col("sxy").cast("double")
-    den = nd * sxx - sx * sx
-    beta = (nd * sxy - sx * sy) / den
+    moments = ("n", "sx", "sy", "sxx", "sxy")
+    beta, intercept = ols_fit(*[F.col(c).cast("double") for c in moments])
     # + 0.0 canonicalizes IEEE negative zero (a saturated vocabulary
     # makes the slope EXACTLY zero and the two engines disagree on its
     # sign bit; -0.0 + 0.0 = +0.0, every other finite value unchanged)
     fit = stats.select(
         (F.round(beta, 6) + F.lit(0.0)).alias("heaps_beta"),
-        F.round(F.exp((sy - beta * sx) / nd), 6).alias("heaps_k"),
+        F.round(F.exp(intercept), 6).alias("heaps_k"),
     )
     return (
         pts.crossJoin(F.broadcast(fit))

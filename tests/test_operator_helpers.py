@@ -5,8 +5,10 @@ session memos through ``session_cache.memo``, whose entries own their
 persisted frames, the ANN indexes through one k-means quantizer
 and one LSH bucket expression, the media codec stages through one
 Arrow row-map seam, the streaming operators through one per-key
-fold seam and one epoch-guarded additive merge, and the time-series
-faces through one order-revenue day series and one recursion seam."""
+fold seam and one epoch-guarded additive merge, the time-series
+faces through one order-revenue day series and one recursion seam,
+and the bivariate statistics through one Pearson and one least-squares
+closed form."""
 
 import datetime
 import math
@@ -14,10 +16,17 @@ import pathlib
 import re
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from doeecommerce_datapipeline_spark.functions.scalars import ols_fit, pearson_r
 from doeecommerce_datapipeline_spark.io import table
 from doeecommerce_datapipeline_spark.operators import session_cache
+from doeecommerce_datapipeline_spark.operators.analytics import (
+    adf_daily_revenue,
+    distance_correlation_daily,
+    durbin_watson_trend,
+)
 from doeecommerce_datapipeline_spark.operators.graph import lpa_labels
 from doeecommerce_datapipeline_spark.operators.quality_model import _cached_model
 from doeecommerce_datapipeline_spark.operators.retail import cf_holdout_hitrate
@@ -134,21 +143,37 @@ def test_daily_order_revenue_is_the_exact_decimal_day_sum(spark, sf_dir):
     assert daily_order_revenue(o.where(F.lit(False))).count() == 0
 
 
+def _orders_sf(spark, tmp_path, days: dict[str, list[float]]) -> str:
+    """An sf directory whose orders table holds one order per price on
+    each day of ``days`` (ISO date -> o_totalprice list)."""
+    d = str(tmp_path / f"sf_{len(days)}_days")
+    dates = [day for day, prices in days.items() for _ in prices]
+    pdf = pd.DataFrame(
+        {
+            "o_orderkey": range(1, len(dates) + 1),
+            "o_custkey": 1,
+            "o_orderdate": pd.to_datetime(dates),
+            "o_totalprice": [p for prices in days.values() for p in prices],
+        }
+    )
+    spark.createDataFrame(pdf).write.parquet(d + "/orders.parquet")
+    return d
+
+
+ONE_DAY = {"1995-03-07": [1234.56, 7.89]}
+THREE_DAYS = {
+    "1995-03-07": [1234.56, 7.89],
+    "1995-03-08": [2000.00, 500.25],
+    "1995-03-09": [1500.10, 99.99],
+}
+
+
 def test_recursions_on_a_one_day_series(spark, tmp_path):
     """A single observed day: EWMA emits the lattice-rounded value, Holt
     and Holt-Winters have no second day to seed a trend from, so their
     state stays NaN, which the Arrow boundary hands back as NULL (the
     weekday slot is still reported)."""
-    d = str(tmp_path / "sf_one_day")
-    pdf = pd.DataFrame(
-        {
-            "o_orderkey": [1, 2],
-            "o_custkey": 1,
-            "o_orderdate": pd.to_datetime(["1995-03-07", "1995-03-07"]),
-            "o_totalprice": [1234.56, 7.89],
-        }
-    )
-    spark.createDataFrame(pdf).write.parquet(d + "/orders.parquet")
+    d = _orders_sf(spark, tmp_path, ONE_DAY)
     day, x = datetime.date(1995, 3, 7), 1242.45
     [e] = ewma_recursive_daily(spark, d).collect()
     assert (e.day, e.revenue) == (day, x)
@@ -159,6 +184,56 @@ def test_recursions_on_a_one_day_series(spark, tmp_path):
     [w] = holt_winters_weekly(spark, d).collect()
     assert (w.day, w.revenue, w.dow) == (day, x, 2)  # Tuesday
     assert (w.forecast, w.level, w.trend, w.seasonal) == (None,) * 4
+
+
+def _moments(spark, xs, ys):
+    """(n, Σx, Σy, Σx², Σy², Σxy) of literal points as DOUBLE columns."""
+    df = spark.createDataFrame(list(zip(xs, ys)), "x double, y double")
+    x, y = F.col("x"), F.col("y")
+    row = df.agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        F.sum(x).alias("sx"),
+        F.sum(y).alias("sy"),
+        F.sum(x * x).alias("sxx"),
+        F.sum(y * y).alias("syy"),
+        F.sum(x * y).alias("sxy"),
+    )
+    return row, [F.col(c) for c in row.columns]
+
+
+def test_pearson_r_is_exact_on_lines_and_null_on_a_constant(spark):
+    xs = [1.0, 1.0, 3.0, 3.0]
+    for ys, want in (([3.0, 3.0, 7.0, 7.0], 1.0), ([5.0, 5.0, 1.0, 1.0], -1.0),
+                     ([4.0] * 4, None)):
+        row, m = _moments(spark, xs, ys)
+        assert row.select(pearson_r(*m)).first()[0] == want
+
+
+def test_ols_fit_recovers_a_line_and_nulls_a_single_point(spark):
+    for xs, ys, want in (([1.0, 2.0, 3.0, 4.0], [3.0, 5.0, 7.0, 9.0], (2.0, 1.0)),
+                         ([2.0], [5.0], (None, None))):
+        row, (n, sx, sy, sxx, _, sxy) = _moments(spark, xs, ys)
+        slope, intercept = ols_fit(n, sx, sy, sxx, sxy)
+        assert tuple(row.select(slope, intercept).first()) == want
+
+
+@pytest.mark.parametrize(
+    "face, days, want",
+    [
+        # one day: no trend to fit, so no residuals and no verdict
+        (durbin_watson_trend, ONE_DAY, (None, None, None, None)),
+        # two orders every day: a constant count has zero distance
+        # variance, so dCor is 0 and Pearson is undefined
+        (distance_correlation_daily, THREE_DAYS, (3, 0.0, None, None)),
+        # two lag pairs fit exactly and leave no residual degree of
+        # freedom: no t statistic, so no claim of stationarity
+        (adf_daily_revenue, THREE_DAYS, (2, -2.55149619, 4953.625017, None, False)),
+    ],
+    ids=["durbin_watson_one_day", "dcor_constant_count", "adf_three_days"],
+)
+def test_degenerate_series_emit_nulls_instead_of_raising(spark, tmp_path, face, days, want):
+    [row] = face(spark, _orders_sf(spark, tmp_path, days)).collect()
+    assert tuple(row) == want
 
 
 class _StubState:

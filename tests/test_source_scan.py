@@ -9,8 +9,13 @@ and timing core, and plan claims live in tests/test_plans.py only.
 - no .py file refers to the retired plan-audit archive or its tool;
 - the order-revenue day series is built only by
   ``windows.daily_order_revenue`` (and by ``aggregates.daily_revenue``,
-  A1's different coalesced rollup), and windows.py's recursive
-  smoothers share its one ``applyInPandas`` seam.
+  A1's different coalesced rollup), no operator keys a day on the raw
+  ``o_orderdate`` timestamp, and windows.py's recursive smoothers share
+  its one ``applyInPandas`` seam;
+- the raw-moment Pearson and least-squares closing formulas live only
+  in ``functions/scalars.py`` (``pearson_r``, ``ols_fit``), and
+  analytics.py builds its pairwise hi/lo product sums in one place
+  (``_pairwise_pearson``).
 """
 
 import os
@@ -76,4 +81,23 @@ def test_one_order_revenue_day_series():
         if n:
             found[os.path.basename(p)] = n
     assert found == {"aggregates.py": 1, "windows.py": 1}
+    assert not _hits(_py_files(ops), r'groupBy\(\s*F\.col\("o_orderdate"\)')
     assert len(_hits([os.path.join(ops, "windows.py")], r"applyInPandas\(")) == 1
+
+
+# n·Σx² − (Σx)² under a square root, and n·Σxy − Σx·Σy (moment sums are
+# named s<x><y>), matched on whitespace-collapsed source
+PEARSON_DEN = r"F\.sqrt\( ?F\.greatest\( ?\w+ \* [\w(), ]+? - (\w+) \* \1\b"
+OLS_NUM = r"\b\w+ \* [\w(), ]+? - s\w+ \* s\w+\b"
+
+
+def test_one_pearson_and_least_squares_closed_form():
+    found = []
+    for p in _py_files(PKG):
+        with open(p, encoding="utf-8") as f:
+            src = re.sub(r"\s+", " ", f.read())
+        if re.search(PEARSON_DEN, src) or re.search(OLS_NUM, src):
+            found.append(os.path.relpath(p, PKG))
+    assert found == [os.path.join("functions", "scalars.py")]
+    with open(os.path.join(PKG, "operators", "analytics.py"), encoding="utf-8") as f:
+        assert f.read().count(" div {M}") == 1
